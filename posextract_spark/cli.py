@@ -72,6 +72,8 @@ def build_parser() -> argparse.ArgumentParser:
 def _load_input(spark, args, delimiter):
     from pyspark.sql import functions as F
 
+    from posextract_spark.sources.local import local_frame
+
     if args.input_file:
         if args.data_column is None:
             sys.exit("Invalid arguments: Must specify column name for data using --data-column")
@@ -88,7 +90,7 @@ def _load_input(spark, args, delimiter):
             df = df.withColumn("sentence_id", F.monotonically_increasing_id())
         return df.withColumnRenamed(args.data_column, "_text")
     elif args.input is not None:
-        return spark.createDataFrame([(0, args.input)], "sentence_id long, _text string")
+        return local_frame(spark, [(0, args.input)], "sentence_id long, _text string")
     sys.exit("Please provide either an input string or an input file")
 
 

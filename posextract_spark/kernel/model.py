@@ -64,8 +64,9 @@ class Token:
         """Children in token-index order (spaCy yields them in order)."""
         s = self._sent
         c = s._children[self.i]
-        # None only on a LazySentence slot not yet built (eager sentences
-        # store _EMPTY for childless tokens, never None).
+        # None only on a LazySentence slot not yet built; eager
+        # construction never stores None (a childless slot holds [] from
+        # __init__ or _EMPTY from from_arrays).
         return c if c is not None else s._build_children(self.i)
 
     @property

@@ -73,43 +73,6 @@ def link_triples(triples: DataFrame, alias_df: DataFrame) -> DataFrame:
     return out
 
 
-def materialize_graph(
-    triples: DataFrame,
-    alias_df: DataFrame,
-    out_dir: str | None = None,
-    n_buckets: int = 16,
-    source_col: str = "url",
-    persist: bool = True,
-):
-    """Full materialize: link -> edges + nodes (optionally written as
-    bucket-partitioned parquet). Returns (nodes_df, edges_df).
-
-    ``persist`` caches the input triples: edges and the (subject UNION
-    object) mention fan-out would otherwise recompute the upstream lineage
-    up to 4x (see pipeline.kg_from_pages). Pass persist=False when the
-    caller already persisted/materialized the triples (re-persisting at a
-    different StorageLevel raises). When out_dir is set the cache is
-    released after both writes."""
-    from posextract_spark.operators.linking import link_entities, mentions_from_triples
-
-    if persist:
-        triples = triples.persist()
-    linked = link_triples(triples, alias_df)
-    edges = build_edges(linked, source_col=source_col).withColumn(
-        "bucket", F.pmod(F.col("src"), F.lit(n_buckets))
-    )
-    mentions = mentions_from_triples(triples, id_cols=(source_col, "sent_id"))
-    nodes = build_nodes(link_entities(mentions, alias_df)).withColumn(
-        "bucket", F.pmod(F.col("entity_id"), F.lit(n_buckets))
-    )
-    if out_dir:
-        edges.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/edges")
-        nodes.write.mode("overwrite").partitionBy("bucket").parquet(f"{out_dir}/nodes")
-        if persist:
-            triples.unpersist()
-    return nodes, edges
-
-
 def merge_edge_deltas(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental graph maintenance: fold a new crawl snapshot's edge
     aggregate into an existing edges table (daily-snapshot upsert — the

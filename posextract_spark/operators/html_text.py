@@ -133,6 +133,16 @@ def extract_text_pure(html: str, asbox_filter: bool = False) -> Tuple[str, str]:
     return "".join(parser.title_parts), " ".join(p_list)
 
 
+def html_to_text(html, asbox_filter: bool = False) -> str:
+    """The text of one html cell (bytes, str or None -> ''), as the
+    extract_text column carries it."""
+    if html is None:
+        return ""
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8", errors="replace")
+    return extract_text_pure(html, asbox_filter=asbox_filter)[1]
+
+
 def extract_text(
     df: DataFrame, html_col: str = "html", out_col: str = "text", asbox_filter: bool = False
 ) -> DataFrame:
@@ -141,14 +151,6 @@ def extract_text(
 
     @F.pandas_udf(StringType())
     def udf(htmls: pd.Series) -> pd.Series:
-        out = []
-        for h in htmls:
-            if h is None:
-                out.append("")
-                continue
-            if isinstance(h, (bytes, bytearray)):
-                h = h.decode("utf-8", errors="replace")
-            out.append(extract_text_pure(h, asbox_filter=asbox_filter)[1])
-        return pd.Series(out)
+        return pd.Series([html_to_text(h, asbox_filter) for h in htmls])
 
     return df.withColumn(out_col, udf(F.col(html_col)))

@@ -34,6 +34,7 @@ from posextract_spark.functions.hashing import (
     portable_hash64_sql,
     word_array,
 )
+from posextract_spark.sources.local import local_frame
 
 
 def hash_split(
@@ -996,9 +997,7 @@ def bpe_train(
         )
         if (t + 1) % checkpoint_every == 0 and t + 1 < n_merges:
             cur = cur.localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, schema="rank int, a string, b string, n long"
-    )
+    return local_frame(spark, merges, "rank int, a string, b string, n long")
 
 
 def _bpe_train_ctes(
@@ -1991,7 +1990,8 @@ def mixture_plan(
     cardinality = #sources), the ppm table broadcast, a 1-row capacity
     aggregate crossJoined back. Integer arithmetic; n_s * 1e6 wants
     DECIMAL(38,0) past ~9e12 tokens per source."""
-    w = docs.sparkSession.createDataFrame(
+    w = local_frame(
+        docs.sparkSession,
         [(s, int(p)) for s, p in sorted(target_ppm.items())],
         f"{source_col} string, target_ppm long",
     )

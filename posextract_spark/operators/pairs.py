@@ -64,10 +64,12 @@ def extract_adj_noun_pairs(
 
         p = get_provider(provider, **pk)
         # Threshold GC costs ~50% of this batch's CPU at the parse's
-        # allocation rate (measured 2.1s -> 1.1s per 20k docs); the array
-        # path's garbage is ACYCLIC (lists/dicts, no backrefs), so plain
-        # refcounting frees everything and no explicit collect is needed —
-        # just suspend threshold collections for the batch.
+        # allocation rate (measured 2.1s -> 1.1s per 20k docs); the parse
+        # and kernel allocations of the array path are acyclic (lists and
+        # dicts, no backrefs), so refcounting frees them and no explicit
+        # collect is needed — just suspend threshold collections for the
+        # batch. pandas may leave some cyclic garbage when it builds the
+        # output Series; threshold GC frees it once re-enabled.
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:

@@ -15,9 +15,16 @@ Python):
 - postprocess: strip, optionally remove '\"' (the reference always removes;
   keep quotes when downstream split_quotes segmentation should see them),
   append '.'.
+
+``sentences_of`` is the same segmentation for one text in Python, for
+stages that already hold the text inside a Python worker (the fused
+pages -> triples batch function); tests/test_sentence_parity.py pins it to
+the Column form row for row.
 """
 
 from __future__ import annotations
+
+from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,3 +70,28 @@ def split_sentences(
     post = F.transform(post, lambda s: F.concat(s, F.lit(".")))
     other = [c for c in df.columns if c != text_col]
     return df.select(*other, F.posexplode(post).alias(pos_col, out_col))
+
+
+def sentences_of(
+    text: Optional[str], remove_quotes: bool = True, max_sentence_chars: int = 8192
+) -> List[str]:
+    """split_sentences for one text: its kept sentences in order (list
+    index == sent_pos). Mirrors the Column form exactly: split on '.' or
+    '\\n', word count over ' '-separated non-empty fields, the char cap on
+    the raw segment, and Spark ``trim`` strips only ' '."""
+    if not text:
+        return []
+    out = []
+    for s in text.replace("\n", ".").split("."):
+        if not s or s[-1] in ":," or s[0] == ",":
+            continue
+        if max_sentence_chars and len(s) > max_sentence_chars:
+            continue
+        words = s.split(" ")
+        if len(words) - words.count("") < 5:
+            continue
+        s = s.strip(" ")
+        if remove_quotes:
+            s = s.replace('"', "")
+        out.append(s + ".")
+    return out

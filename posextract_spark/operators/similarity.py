@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from posextract_spark.functions.partitioning import spread_small_input
+from posextract_spark.sources.local import local_frame
 
 
 def _cosine(a, b):
@@ -497,9 +498,7 @@ def ivf_topk(
             cents,
             key=lambda cv: (-_fixed_sim_e6(qv, cv[1]), cv[0]),
         )[:nprobe]
-        qc = df.sparkSession.createDataFrame(
-            [(cid,) for cid, _ in ranked], "centroid_id int"
-        )
+        qc = local_frame(df.sparkSession, [(cid,) for cid, _ in ranked], "centroid_id int")
     probe = assign.join(F.broadcast(qc), "centroid_id").select(id_col)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -1404,7 +1403,7 @@ def ann_recall_ivf(
         .groupBy("nprobe")
         .agg(F.count(F.lit(1)).alias("hits"))
     )
-    np_df = df.sparkSession.createDataFrame([(int(p),) for p in nprobes], "nprobe int")
+    np_df = local_frame(df.sparkSession, [(int(p),) for p in nprobes], "nprobe int")
     denom = n_queries * k
     return (
         np_df.join(hits, "nprobe", "left")

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from posextract_spark.functions.hashing import portable_hash64, portable_hash64_sql
+from posextract_spark.sources.local import local_frame
 
 #: hash domain: portable_hash64 yields 15 hex chars = 60 bits
 HASH_M = 1 << 60
@@ -325,9 +326,7 @@ def hdr_quantiles(
     total = hist.agg(F.sum("n").cast("long").alias("__hdr_total"))
     w = Window.orderBy("slot").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = hist.select("slot", F.sum("n").over(w).cast("long").alias("cum"))
-    qs = df.sparkSession.createDataFrame(
-        [(int(q),) for q in quantiles_e6], "q_e6 long"
-    )
+    qs = local_frame(df.sparkSession, [(int(q),) for q in quantiles_e6], "q_e6 long")
     rank = F.expr(
         "greatest((q_e6 * __hdr_total + CAST(999999 AS BIGINT))"
         " div CAST(1000000 AS BIGINT), CAST(1 AS BIGINT))"

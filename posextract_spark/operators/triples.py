@@ -1,7 +1,7 @@
 """Distributed triple extraction (the flagship operator).
 
-Spark lifecycle (SURVEY.md §3.1): scan -> [pandas UDF: segment+parse+extract,
-one Arrow crossing] -> posexplode [JVM] -> Catalyst filters -> downstream.
+Spark lifecycle (SURVEY.md §3.1): scan -> [mapInPandas: segment+parse+extract
++flatten, one Arrow crossing] -> Catalyst filters -> downstream.
 Extraction is embarrassingly parallel per document: no shuffle is introduced
 anywhere in this operator; partition count is inherited from the scan (use
 ``repartition_by_hash`` before calling it only when upstream partitions are
@@ -15,12 +15,13 @@ fused with extraction so token trees never cross a process boundary.
 
 from __future__ import annotations
 
-from typing import List, Optional
+import operator as _operator
+from functools import partial
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
 
 from posextract_spark.kernel.extract import extract_triples_one
 from posextract_spark.kernel.quotes import split_quotes_list
@@ -35,20 +36,10 @@ OUTPUT_STRING_FIELDS = tuple(FLAT_FIELDS) + (
 
 # C-level tuple extraction of the 17 output fields per triple (replaces a
 # per-triple genexpr of dict lookups in the UDF hot loop)
-import operator as _operator
-
 _FIELDS_GETTER = _operator.itemgetter(*OUTPUT_STRING_FIELDS)
 
-TOKEN_STRUCT = StructType(
-    [
-        StructField("i", IntegerType(), False),
-        StructField("text", StringType(), False),
-        StructField("lemma", StringType(), False),
-        StructField("pos", StringType(), False),
-        StructField("dep", StringType(), False),
-        StructField("head", IntegerType(), False),
-    ]
-)
+# set once this process has frozen its start-up heap (triples_batches)
+_HEAP_FROZEN = False
 
 
 def repartition_by_hash(
@@ -61,6 +52,118 @@ def repartition_by_hash(
     bounds the per-ROW work an oversized page can demand."""
     n = n_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, F.xxhash64(F.col(col)))
+
+
+def _triple_rows(prov, ids: List[tuple], texts: List[Optional[str]], options) -> List[tuple]:
+    """(ids..., sent_id, fields...) rows of every triple in ``texts``;
+    ``sent_id`` numbers the split_quotes segments of each text."""
+    segments_per_doc = [split_quotes_list(t) if t else [] for t in texts]
+    # lazy parse: Token objects materialize only where the traversal
+    # touches them (LazySentence; parity pinned by
+    # tests/test_lazy_sentence_parity.py)
+    parsed = prov.parse_lazy_batch([seg for segs in segments_per_doc for seg in segs])
+    rows = []
+    pos = 0
+    get_fields = _FIELDS_GETTER
+    for doc_ids, segs in zip(ids, segments_per_doc):
+        for sent_id in range(len(segs)):
+            for flat in extract_triples_one(parsed[pos + sent_id], options=options):
+                rows.append(doc_ids + (sent_id,) + get_fields(flat))
+        pos += len(segs)
+    return rows
+
+
+def triples_batches(
+    batches: Iterator[pd.DataFrame],
+    docs: Callable[[pd.DataFrame], Tuple[List[tuple], List[Optional[str]]]],
+    columns: List[str],
+    provider: str,
+    provider_kwargs: dict,
+    options: TripleExtractorOptions,
+) -> Iterator[pd.DataFrame]:
+    """The Python batch function of the triples path: for each input
+    batch, ``docs(batch)`` gives parallel lists of id tuples and texts,
+    and one output frame with ``columns`` holds their triples.
+
+    GC policy. Token._sent <-> Sentence.tokens is a reference cycle, so
+    every batch leaves ~50 cyclic objects per document that only the
+    cyclic collector can free. Under the default thresholds that
+    allocation rate triggers thousands of threshold collections per batch,
+    measured at ~50% of this function's CPU (7.5s -> 3.7s per 20k docs
+    with gc off). So threshold GC is off while a batch is built, and ONE
+    explicit collect per batch frees its parse forest (memory stays flat:
+    collect-per-batch measured rss-stable vs +370MB/batch fully disabled).
+    GC is back in its prior state before every ``yield`` and off again on
+    resume: Spark may abandon the generator at a yield (task cancellation,
+    a limit), and the reused worker must not keep GC off. The worker's
+    start-up heap (modules, the provider's tables) is frozen once per
+    process, so each collect walks only the objects of one batch."""
+    global _HEAP_FROZEN
+    import gc
+
+    from posextract_spark.parse.provider import get_provider
+
+    # lazy per-executor provider (the reference's module-level singleton,
+    # util.py:18-22, becomes a process-local cache)
+    prov = get_provider(provider, **provider_kwargs)
+    if not _HEAP_FROZEN:
+        gc.collect()
+        gc.freeze()
+        _HEAP_FROZEN = True
+    gc_was_enabled = gc.isenabled()
+    for pdf in batches:
+        gc.disable()
+        try:
+            ids, texts = docs(pdf)
+            out = pd.DataFrame(_triple_rows(prov, ids, texts, options), columns=columns)
+            del ids, texts
+            gc.collect()
+        finally:
+            if gc_was_enabled:
+                gc.enable()
+        yield out
+        del out
+
+
+def column_docs(
+    pdf: pd.DataFrame, id_cols: List[str], text_col: str
+) -> Tuple[List[tuple], List[Optional[str]]]:
+    """``docs`` for triples_batches: one document per row, ids from
+    ``id_cols``."""
+    # plain-list id columns: Series.iloc per document was ~40x the cost of
+    # a list index at batch sizes
+    if id_cols:
+        ids = list(zip(*(pdf[c].tolist() for c in id_cols)))
+    else:
+        ids = [()] * len(pdf)
+    return ids, pdf[text_col].tolist()
+
+
+def map_triples(
+    df: DataFrame,
+    docs: Callable[[pd.DataFrame], Tuple[List[tuple], List[Optional[str]]]],
+    id_fields: List[Tuple[str, str]],
+    options: Optional[TripleExtractorOptions] = None,
+    provider: str = "auto",
+    provider_kwargs: Optional[dict] = None,
+) -> DataFrame:
+    """``df.mapInPandas`` of triples_batches — the one Python crossing of
+    the triples path. ``id_fields`` names and types (DDL) the id tuples
+    ``docs`` yields; the output is (ids..., sent_id, triple fields)."""
+    if options is None:
+        options = TripleExtractorOptions()
+    provider_kwargs = provider_kwargs or {}
+    out_schema = ", ".join(
+        [f"`{name}` {ddl}" for name, ddl in id_fields]
+        + ["sent_id int"]
+        + [f"{name} string" for name in OUTPUT_STRING_FIELDS]
+    )
+    columns = [name for name, _ in id_fields] + ["sent_id"] + list(OUTPUT_STRING_FIELDS)
+
+    def gen(batches):
+        return triples_batches(batches, docs, columns, provider, provider_kwargs, options)
+
+    return df.mapInPandas(gen, out_schema)
 
 
 def extract_triples(
@@ -86,104 +189,22 @@ def extract_triples(
     it (vs the reference's post-hoc python filter at
     grammatical_triples.py:222-229).
     """
-    if options is None:
-        options = TripleExtractorOptions()
     id_cols = list(id_cols or [])
-    provider_kwargs = provider_kwargs or {}
-    provider_name = provider
-
     pruned = df.select(*id_cols, F.col(text_col))
     id_fields = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in pruned.schema.fields[: len(id_cols)]
+        (f.name, f.dataType.simpleString()) for f in pruned.schema.fields[: len(id_cols)]
     ]
-    out_schema = ", ".join(
-        id_fields + ["sent_id int"] + [f"{name} string" for name in OUTPUT_STRING_FIELDS]
+    out = map_triples(
+        pruned,
+        partial(column_docs, id_cols=id_cols, text_col=text_col),
+        id_fields,
+        options=options,
+        provider=provider,
+        provider_kwargs=provider_kwargs,
     )
-    columns = id_cols + ["sent_id"] + list(OUTPUT_STRING_FIELDS)
-
-    def gen(batches):
-        # Lazy per-executor provider (the reference's module-level
-        # singleton, util.py:18-22, becomes a process-local cache).
-        import gc
-
-        from posextract_spark.parse.provider import get_provider
-
-        prov = get_provider(provider_name, **provider_kwargs)
-        # Token._sent <-> Sentence.tokens is a reference cycle, so every
-        # batch leaves ~50 cyclic objects per document that only the
-        # cyclic collector can free. Under the default thresholds that
-        # allocation rate triggers thousands of threshold collections per
-        # batch, measured at ~50% of this UDF's CPU (7.5s -> 3.7s per 20k
-        # docs with gc off). Disable threshold GC for the task and run ONE
-        # explicit collect per batch after the parse forest is unbound:
-        # same liberated garbage, one heap walk. Memory stays flat
-        # (collect-per-batch measured rss-stable vs +370MB/batch fully
-        # disabled). Workers are single-threaded and reused, so the
-        # enabled state is restored in the finally.
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for pdf in batches:
-                texts = pdf[text_col]
-                segments_per_doc = [split_quotes_list(t) if t else [] for t in texts]
-                flat_segments = [seg for segs in segments_per_doc for seg in segs]
-                # lazy parse: Token objects materialize only where the
-                # traversal touches them (LazySentence; parity pinned by
-                # tests/test_lazy_sentence_parity.py)
-                parsed = prov.parse_lazy_batch(flat_segments)
-
-                rows = []
-                pos = 0
-                # plain-list id columns: Series.iloc per document was
-                # ~40x the cost of a list index at batch sizes
-                id_values = [pdf[c].tolist() for c in id_cols]
-                get_fields = _FIELDS_GETTER
-                for r, segs in enumerate(segments_per_doc):
-                    ids = tuple(col[r] for col in id_values)
-                    for sent_id in range(len(segs)):
-                        for flat in extract_triples_one(parsed[pos + sent_id], options=options):
-                            rows.append(ids + (sent_id,) + get_fields(flat))
-                    pos += len(segs)
-                out = pd.DataFrame(rows, columns=columns)
-                del parsed, segments_per_doc, flat_segments, rows
-                yield out
-                del out
-                gc.collect()
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    out = pruned.mapInPandas(gen, out_schema)
     if posrule_filter is not None:
         out = out.filter(posrule_filter)
     return out
-
-
-def parse_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    provider: str = "auto",
-    provider_kwargs: Optional[dict] = None,
-) -> DataFrame:
-    """Materialize the token-array parse as a column (for inspection /
-    operators that reuse parses). The triples path does NOT go through this
-    (fused UDF avoids shipping trees over Arrow)."""
-    pk = provider_kwargs or {}
-
-    @F.pandas_udf(ArrayType(TOKEN_STRUCT))
-    def parse_udf(texts: pd.Series) -> pd.Series:
-        from posextract_spark.parse.provider import get_provider
-
-        p = get_provider(provider, **pk)
-        toks = p.parse_tokens_batch([t if t else "" for t in texts])
-        return pd.Series(
-            [
-                [(t["i"], t["text"], t["lemma"], t["pos"], t["dep"], t["head"]) for t in sent]
-                for sent in toks
-            ]
-        )
-
-    return df.withColumn("tokens", parse_udf(F.col(text_col)))
 
 
 # ---------------------------------------------------------------------------

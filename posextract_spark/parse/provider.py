@@ -48,25 +48,6 @@ class ParseProvider:
             )
         return out
 
-    def parse_tokens_batch(self, texts: List[str]) -> List[List[dict]]:
-        """Token-array encoding for materializing parses as a column."""
-        out = []
-        for sent in self.parse_batch(texts):
-            out.append(
-                [
-                    {
-                        "i": t.i,
-                        "text": t.text,
-                        "lemma": t.lemma_,
-                        "pos": t.pos,
-                        "dep": t.dep,
-                        "head": t.head_i,
-                    }
-                    for t in sent
-                ]
-            )
-        return out
-
 
 def get_provider(name: str = "auto", **kwargs) -> ParseProvider:
     """Resolve a provider by name; per-process cached (executor-side lazy

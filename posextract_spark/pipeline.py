@@ -2,30 +2,51 @@
 
 pages(url, warc_ts, html, text, lang)
   -> lang filter (partition-prunable predicate, first thing after the scan)
-  -> extract_text (pandas UDF; byte-identical to the stored text contract)
-  -> split_sentences (native columns)
-  -> extract_triples (fused segment+parse+extract pandas UDF)
+  -> ONE Python crossing (mapInPandas over (url, html), or (url, text) with
+     use_stored_text): html -> text (byte-identical to the stored text
+     contract) -> sentence split (operators.sentences.sentences_of, the
+     Python mirror of split_sentences) -> quote split + parse + extract
+     (operators.triples.triples_batches, the batch function extract_triples
+     also runs)
   -> link_triples (broadcast alias joins)
   -> build_edges / build_nodes (grouped aggregation)
 
-Each stage is usable standalone; ``kg_from_pages`` composes them. The
-checkpoint-resumable form runs the same composition per url bucket via
-plans.lineage.BucketedRun.
+Each stage is usable standalone (extract_text, split_sentences and
+extract_triples compose to the same triples); ``kg_from_pages`` composes
+the pipeline. The checkpoint-resumable form runs the same composition per
+url bucket via plans.lineage.BucketedRun.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from functools import partial
+from typing import List, Optional, Tuple
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from posextract_spark.operators.html_text import extract_text
-from posextract_spark.operators.sentences import split_sentences
-from posextract_spark.operators.triples import extract_triples
 from posextract_spark.operators.graph import build_edges, build_nodes, link_triples
+from posextract_spark.operators.html_text import html_to_text
 from posextract_spark.operators.linking import link_entities, mentions_from_triples
+from posextract_spark.operators.sentences import sentences_of
+from posextract_spark.operators.triples import map_triples
 from posextract_spark.options import TripleExtractorOptions
+
+
+def page_docs(
+    pdf: pd.DataFrame, text_col: str, from_html: bool, remove_quotes: bool
+) -> Tuple[List[tuple], List[str]]:
+    """``docs`` for operators.triples.triples_batches: one document per
+    kept sentence of each page, ids (url, sent_pos)."""
+    ids, texts = [], []
+    for url, text in zip(pdf["url"].tolist(), pdf[text_col].tolist()):
+        if from_html:
+            text = html_to_text(text)
+        for pos, sentence in enumerate(sentences_of(text, remove_quotes=remove_quotes)):
+            ids.append((url, pos))
+            texts.append(sentence)
+    return ids, texts
 
 
 def pages_to_triples(
@@ -36,20 +57,23 @@ def pages_to_triples(
     options: Optional[TripleExtractorOptions] = None,
     remove_quotes: bool = False,
 ) -> DataFrame:
-    """pages -> triples with (url, sent_pos, sent_id) provenance."""
+    """pages -> triples with (url, sent_pos, sent_id) provenance: the rows
+    of extract_triples(split_sentences(extract_text(pages))), from one
+    mapInPandas per page batch."""
     df = pages
     if lang is not None:
         df = df.filter(F.col("lang") == lang)
-    if not use_stored_text:
-        df = df.drop("text")
-        df = extract_text(df, html_col="html", out_col="text")
-    sents = split_sentences(
-        df.select("url", "text"), text_col="text", remove_quotes=remove_quotes
-    )
-    return extract_triples(
-        sents,
-        text_col="sentence",
-        id_cols=["url", "sent_pos"],
+    text_col = "text" if use_stored_text else "html"
+    df = df.select("url", text_col)
+    return map_triples(
+        df,
+        partial(
+            page_docs,
+            text_col=text_col,
+            from_html=not use_stored_text,
+            remove_quotes=remove_quotes,
+        ),
+        [("url", df.schema["url"].dataType.simpleString()), ("sent_pos", "int")],
         options=options,
         provider=provider,
     )

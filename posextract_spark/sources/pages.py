@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from posextract_spark.operators.html_text import extract_text_pure
+from posextract_spark.sources.local import local_frame
 
 ENTITY_ALIASES = {
     "acme": ["Acme", "AcmeCorp", "AcmeInc"],
@@ -250,15 +251,15 @@ def typo_pages(spark: SparkSession) -> DataFrame:
         html = _gen_html(i, random.Random(f"typo:{i}"), [sentence])
         _, text = extract_text_pure(html)
         rows.append(
-            {
-                "url": f"https://synth.test/typo/{i}",
-                "warc_ts": _EPOCH + timedelta(days=7, seconds=i),
-                "html": html.encode("utf-8"),
-                "text": text,
-                "lang": "en",
-            }
+            (
+                f"https://synth.test/typo/{i}",
+                _EPOCH + timedelta(days=7, seconds=i),
+                html.encode("utf-8"),
+                text,
+                "en",
+            )
         )
-    return spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA)
+    return local_frame(spark, rows, PAGES_SCHEMA)
 
 
 def alias_table(spark: SparkSession) -> DataFrame:
@@ -268,4 +269,4 @@ def alias_table(spark: SparkSession) -> DataFrame:
         for canonical, surfaces in ENTITY_ALIASES.items()
         for surface in surfaces
     ]
-    return spark.createDataFrame(rows, "surface_norm string, canonical string")
+    return local_frame(spark, rows, "surface_norm string, canonical string")

@@ -274,11 +274,11 @@ def test_sentence_split_computes_once(spark):
 
 def test_pages_pipeline_python_crossings(spark, tmp_path):
     """The end-to-end pages->triples composite must cross into Python
-    exactly twice: one Arrow-batched pandas UDF for html->text and one
-    MapInPandas for the fused segment+parse+extract stage — and never
-    shuffle before extraction. Pages are materialized to parquet first so
-    the guard sees the PIPELINE's plan, not the synthetic generator's own
-    MapInPandas/repartition."""
+    exactly once: one MapInPandas for the fused html->text + sentence
+    split + segment+parse+extract stage, no separate pandas UDF — and
+    never shuffle before extraction. Pages are materialized to parquet
+    first so the guard sees the PIPELINE's plan, not the synthetic
+    generator's own MapInPandas/repartition."""
     from posextract_spark.pipeline import pages_to_triples
     from posextract_spark.sources.pages import generate_pages
 
@@ -287,13 +287,31 @@ def test_pages_pipeline_python_crossings(spark, tmp_path):
     pages = spark.read.parquet(path)
     plan = _plan(pages_to_triples(pages, provider="template"))
     assert plan.count("MapInPandas") == 1
-    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("ArrowEvalPython") == 0
     assert "Exchange" not in plan
     # the lang filter must reach the parquet scan. Matched loosely (ADVICE
     # r5): the exact bracketed rendering of PushedFilters varies across
     # Spark/datasource versions; what we pin is that pushdown HAPPENED.
     assert "PushedFilters" in plan
     assert "EqualTo(lang,en)" in plan
+
+
+def test_kg_from_pages_plans_no_python_scans(spark, tmp_path):
+    """The alias dictionary is a literal frame of Python rows: it must plan
+    as a LocalTableScan, never as ``Scan ExistingRDD`` (a Python job per
+    broadcast of it). Neither output of kg_from_pages scans an RDD."""
+    from posextract_spark.pipeline import kg_from_pages
+    from posextract_spark.sources.pages import alias_table, generate_pages
+
+    alias = alias_table(spark)
+    assert "LocalTableScan" in _plan(alias)
+    path = str(tmp_path / "pages")
+    generate_pages(spark, 20, seed=42, n_partitions=2).write.parquet(path)
+    nodes, edges = kg_from_pages(spark.read.parquet(path), alias, persist=False)
+    for df in (nodes, edges):
+        plan = _plan(df)
+        assert "ExistingRDD" not in plan
+        assert "LocalTableScan" in plan
 
 
 def test_fusion_plans_window_free_and_broadcast_gate(spark):
