@@ -31,6 +31,9 @@ from pyspark.sql import functions as F
 
 from posextract_spark.functions.hashing import word_array
 
+# longest raw segment kept as a sentence (north_rule: oversized pages)
+MAX_SENTENCE_CHARS = 8192
+
 
 def _passes_filter(s):
     words = word_array(s)
@@ -49,7 +52,7 @@ def split_sentences(
     remove_quotes: bool = True,
     out_col: str = "sentence",
     pos_col: str = "sent_pos",
-    max_sentence_chars: int = 8192,
+    max_sentence_chars: int = MAX_SENTENCE_CHARS,
 ) -> DataFrame:
     """One row per kept sentence, with its ordinal position in the page.
 
@@ -72,20 +75,19 @@ def split_sentences(
     return df.select(*other, F.posexplode(post).alias(pos_col, out_col))
 
 
-def sentences_of(
-    text: Optional[str], remove_quotes: bool = True, max_sentence_chars: int = 8192
-) -> List[str]:
+def sentences_of(text: Optional[str], remove_quotes: bool = True) -> List[str]:
     """split_sentences for one text: its kept sentences in order (list
-    index == sent_pos). Mirrors the Column form exactly: split on '.' or
-    '\\n', word count over ' '-separated non-empty fields, the char cap on
-    the raw segment, and Spark ``trim`` strips only ' '."""
+    index == sent_pos). Mirrors the Column form with its default cap
+    exactly: split on '.' or '\\n', word count over ' '-separated non-empty
+    fields, MAX_SENTENCE_CHARS on the raw segment, and Spark ``trim``
+    strips only ' '."""
     if not text:
         return []
     out = []
     for s in text.replace("\n", ".").split("."):
         if not s or s[-1] in ":," or s[0] == ",":
             continue
-        if max_sentence_chars and len(s) > max_sentence_chars:
+        if len(s) > MAX_SENTENCE_CHARS:
             continue
         words = s.split(" ")
         if len(words) - words.count("") < 5:

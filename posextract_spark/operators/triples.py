@@ -15,7 +15,9 @@ fused with extraction so token trees never cross a process boundary.
 
 from __future__ import annotations
 
+import gc
 import operator as _operator
+from contextlib import contextmanager
 from functools import partial
 from typing import Callable, Iterator, List, Optional, Tuple
 
@@ -48,8 +50,8 @@ def repartition_by_hash(
     """Explicit url-hash repartition (north_rule skew seam): call before
     extract_triples when upstream partitions are skewed — e.g. a scan whose
     input files cluster oversized pages. Hash partitioning spreads the KEYS
-    uniformly; pair it with split_sentences' max_sentence_chars cap, which
-    bounds the per-ROW work an oversized page can demand."""
+    uniformly; pair it with the sentence splitters' MAX_SENTENCE_CHARS
+    cap, which bounds the per-ROW work an oversized page can demand."""
     n = n_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, F.xxhash64(F.col(col)))
 
@@ -73,6 +75,17 @@ def _triple_rows(prov, ids: List[tuple], texts: List[Optional[str]], options) ->
     return rows
 
 
+@contextmanager
+def _threshold_gc_off(restore: bool):
+    """Threshold GC off for the block; back on after it if ``restore``."""
+    gc.disable()
+    try:
+        yield
+    finally:
+        if restore:
+            gc.enable()
+
+
 def triples_batches(
     batches: Iterator[pd.DataFrame],
     docs: Callable[[pd.DataFrame], Tuple[List[tuple], List[Optional[str]]]],
@@ -80,27 +93,29 @@ def triples_batches(
     provider: str,
     provider_kwargs: dict,
     options: TripleExtractorOptions,
+    max_docs: int,
 ) -> Iterator[pd.DataFrame]:
     """The Python batch function of the triples path: for each input
     batch, ``docs(batch)`` gives parallel lists of id tuples and texts,
-    and one output frame with ``columns`` holds their triples.
+    and one output frame with ``columns`` holds the triples of each chunk
+    of at most ``max_docs`` of them (``max_docs`` <= 0: the whole batch).
+    map_triples passes the Arrow batch size, so a batch of long pages
+    holds no more parse forests at once than a batch of sentences does.
 
     GC policy. Token._sent <-> Sentence.tokens is a reference cycle, so
-    every batch leaves ~50 cyclic objects per document that only the
+    every chunk leaves ~50 cyclic objects per document that only the
     cyclic collector can free. Under the default thresholds that
     allocation rate triggers thousands of threshold collections per batch,
     measured at ~50% of this function's CPU (7.5s -> 3.7s per 20k docs
-    with gc off). So threshold GC is off while a batch is built, and ONE
-    explicit collect per batch frees its parse forest (memory stays flat:
+    with gc off). So threshold GC is off while a chunk is built, and ONE
+    explicit collect per chunk frees its parse forest (memory stays flat:
     collect-per-batch measured rss-stable vs +370MB/batch fully disabled).
     GC is back in its prior state before every ``yield`` and off again on
     resume: Spark may abandon the generator at a yield (task cancellation,
     a limit), and the reused worker must not keep GC off. The worker's
     start-up heap (modules, the provider's tables) is frozen once per
-    process, so each collect walks only the objects of one batch."""
+    process, so each collect walks only the objects of one chunk."""
     global _HEAP_FROZEN
-    import gc
-
     from posextract_spark.parse.provider import get_provider
 
     # lazy per-executor provider (the reference's module-level singleton,
@@ -112,17 +127,19 @@ def triples_batches(
         _HEAP_FROZEN = True
     gc_was_enabled = gc.isenabled()
     for pdf in batches:
-        gc.disable()
-        try:
+        with _threshold_gc_off(gc_was_enabled):
             ids, texts = docs(pdf)
-            out = pd.DataFrame(_triple_rows(prov, ids, texts, options), columns=columns)
-            del ids, texts
-            gc.collect()
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-        yield out
-        del out
+        step = max_docs if max_docs > 0 else max(len(texts), 1)
+        for start in range(0, len(texts), step):
+            end = start + step
+            with _threshold_gc_off(gc_was_enabled):
+                out = pd.DataFrame(
+                    _triple_rows(prov, ids[start:end], texts[start:end], options),
+                    columns=columns,
+                )
+                gc.collect()
+            yield out
+            del out
 
 
 def column_docs(
@@ -159,9 +176,12 @@ def map_triples(
         + [f"{name} string" for name in OUTPUT_STRING_FIELDS]
     )
     columns = [name for name, _ in id_fields] + ["sent_id"] + list(OUTPUT_STRING_FIELDS)
+    max_docs = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
 
     def gen(batches):
-        return triples_batches(batches, docs, columns, provider, provider_kwargs, options)
+        return triples_batches(
+            batches, docs, columns, provider, provider_kwargs, options, max_docs
+        )
 
     return df.mapInPandas(gen, out_schema)
 

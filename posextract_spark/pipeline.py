@@ -20,7 +20,7 @@ url bucket via plans.lineage.BucketedRun.
 from __future__ import annotations
 
 from functools import partial
-from typing import List, Optional, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,16 +35,21 @@ from posextract_spark.options import TripleExtractorOptions
 
 
 def page_docs(
-    pdf: pd.DataFrame, text_col: str, from_html: bool, remove_quotes: bool
+    pdf: pd.DataFrame,
+    id_cols: Sequence[str],
+    text_col: str,
+    from_html: bool,
+    remove_quotes: bool,
 ) -> Tuple[List[tuple], List[str]]:
     """``docs`` for operators.triples.triples_batches: one document per
-    kept sentence of each page, ids (url, sent_pos)."""
+    kept sentence of each page, ids (id_cols..., sent_pos)."""
     ids, texts = [], []
-    for url, text in zip(pdf["url"].tolist(), pdf[text_col].tolist()):
+    page_ids = zip(*(pdf[c].tolist() for c in id_cols))
+    for page_id, text in zip(page_ids, pdf[text_col].tolist()):
         if from_html:
             text = html_to_text(text)
         for pos, sentence in enumerate(sentences_of(text, remove_quotes=remove_quotes)):
-            ids.append((url, pos))
+            ids.append(page_id + (pos,))
             texts.append(sentence)
     return ids, texts
 
@@ -56,24 +61,27 @@ def pages_to_triples(
     provider: str = "template",
     options: Optional[TripleExtractorOptions] = None,
     remove_quotes: bool = False,
+    id_cols: Sequence[str] = ("url",),
 ) -> DataFrame:
-    """pages -> triples with (url, sent_pos, sent_id) provenance: the rows
-    of extract_triples(split_sentences(extract_text(pages))), from one
-    mapInPandas per page batch."""
+    """pages -> triples with (id_cols..., sent_pos, sent_id) provenance:
+    the rows of extract_triples(split_sentences(extract_text(pages))),
+    from one mapInPandas per page batch."""
     df = pages
     if lang is not None:
         df = df.filter(F.col("lang") == lang)
     text_col = "text" if use_stored_text else "html"
-    df = df.select("url", text_col)
+    df = df.select(*id_cols, text_col)
     return map_triples(
         df,
         partial(
             page_docs,
+            id_cols=list(id_cols),
             text_col=text_col,
             from_html=not use_stored_text,
             remove_quotes=remove_quotes,
         ),
-        [("url", df.schema["url"].dataType.simpleString()), ("sent_pos", "int")],
+        [(c, df.schema[c].dataType.simpleString()) for c in id_cols]
+        + [("sent_pos", "int")],
         options=options,
         provider=provider,
     )

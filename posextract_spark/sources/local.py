@@ -15,7 +15,8 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence], ddl: str) -> Data
     an Arrow table, so it plans as a LocalTableScan whatever the Arrow
     conf; ``createDataFrame`` of Python rows, or of pandas with Arrow off,
     plans as ``Scan ExistingRDD``, and every action over it (a broadcast
-    included) then runs a Python job."""
+    included) then runs a Python job. ``createDataFrame`` takes a
+    ``pyarrow.Table`` from PySpark 4.0 on (pyproject.toml pins it)."""
     schema = _parse_datatype_string(ddl)
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)

@@ -3,7 +3,8 @@
 Design choices:
 - ``foreachBatch`` reuses the *exact* batch composition
   (pipeline.pages_to_triples -> graph stages), so streaming and batch can
-  never drift semantically;
+  never drift semantically; the native streaming surfaces extract through
+  the same pages_to_triples;
 - watermark on ``warc_ts`` bounds state for any windowed aggregation a
   caller adds downstream (edge weights per day, etc.);
 - checkpointLocation gives exactly-once sink semantics for file sinks —
@@ -96,21 +97,14 @@ def streaming_entity_profiles(
     output mode: each batch emits one row per entity TOUCHED in that batch,
     carrying the all-time totals from state.
     """
-    from posextract_spark.operators.sentences import split_sentences
-    from posextract_spark.operators.triples import extract_triples
+    from posextract_spark.pipeline import pages_to_triples
 
     stream = (
         spark.readStream.schema(_pages_schema())
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
-        .filter(F.col("lang") == "en")
     )
-    sents = split_sentences(
-        stream.select("url", "text"), text_col="text", remove_quotes=False
-    )
-    triples = extract_triples(
-        sents, text_col="sentence", id_cols=["url", "sent_pos"], provider=provider
-    )
+    triples = pages_to_triples(stream, use_stored_text=True, provider=provider)
     # ONE pass: a union of two selects would run the whole scan+parse
     # lineage twice per micro-batch (streaming cannot persist the triples —
     # the same fan-out cost the batch path fixes with persist())
@@ -170,23 +164,15 @@ def streaming_edge_weights(
     the post-UDF frame: mapInPandas is a stateless streaming operator and
     the event-time column passes through it as data.
     """
-    from posextract_spark.operators.sentences import split_sentences
-    from posextract_spark.operators.triples import extract_triples
+    from posextract_spark.pipeline import pages_to_triples
 
     stream = (
         spark.readStream.schema(_pages_schema())
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
-        .filter(F.col("lang") == "en")
     )
-    sents = split_sentences(
-        stream.select("url", "warc_ts", "text"), text_col="text", remove_quotes=False
-    )
-    triples = extract_triples(
-        sents,
-        text_col="sentence",
-        id_cols=["url", "warc_ts", "sent_pos"],
-        provider=provider,
+    triples = pages_to_triples(
+        stream, use_stored_text=True, provider=provider, id_cols=("url", "warc_ts")
     )
     return (
         triples.withWatermark("warc_ts", watermark)

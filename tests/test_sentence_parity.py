@@ -74,7 +74,7 @@ def test_documents_texts(spark):
     assert _python_rows(texts, True) == _column_rows(spark, texts, True)
 
 
-def test_cap_is_optional():
+def test_oversized_segment_dropped():
     long = " ".join(["long"] * 3000)
-    assert sentences_of(long, max_sentence_chars=0) == [long + "."]
     assert sentences_of(long) == []
+    assert sentences_of("one two three four five. " + long) == ["one two three four five."]

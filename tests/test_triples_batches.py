@@ -23,7 +23,7 @@ from posextract_spark.sources.pages import generate_pages
 COLUMNS = ["id", "sent_id", *OUTPUT_STRING_FIELDS]
 
 
-def _batches():
+def _batches(max_docs=0):
     pdf = pd.DataFrame(
         {"id": [1, 2], "text": ["Acme acquired Zorin.", "Bolt bought mines and sold bonds."]}
     )
@@ -34,6 +34,7 @@ def _batches():
         "template",
         {},
         TripleExtractorOptions(),
+        max_docs,
     )
 
 
@@ -68,6 +69,15 @@ def test_gc_state_of_worker_kept(fresh_heap):
         gc.enable()
 
 
+def test_batches_split_into_chunks_of_max_docs(fresh_heap):
+    """One output frame per chunk of max_docs documents, same rows."""
+    whole = list(_batches())
+    chunked = list(_batches(max_docs=1))
+    assert [sorted(set(f["id"])) for f in chunked] == [[1], [2], [1], [2]]
+    assert pd.concat(chunked).values.tolist() == pd.concat(whole).values.tolist()
+    assert gc.isenabled()
+
+
 @pytest.fixture(scope="module")
 def pages(spark):
     df = generate_pages(spark, 80, seed=5, n_partitions=2).persist()
@@ -97,3 +107,17 @@ def test_fused_equals_composed_operators(spark, pages, use_stored_text, remove_q
     rows = fused.collect()
     assert len(rows) > 100
     assert sorted(rows) == sorted(composed.collect())
+
+
+def test_fused_chunks_long_batches(spark, pages):
+    """Arrow batches of 16 pages hold ~5x that many sentences, so the
+    fused path parses each batch in chunks; the rows do not change."""
+    want = sorted(pages_to_triples(pages).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        got = sorted(pages_to_triples(pages).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
