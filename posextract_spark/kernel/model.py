@@ -219,6 +219,16 @@ class Sentence:
         self._children[i] = c
         return c
 
+    def release(self) -> None:
+        """Drop this sentence's references to its Token objects (the
+        ``Token._sent`` back-references then form no cycle, so refcounting
+        frees the whole parse forest without the cyclic collector). Call
+        once the sentence's triples are flattened: the sentence and its
+        tokens are unusable afterwards."""
+        self.tokens = None
+        self._children = None
+        self._soa = None
+
     def parse_view(self):
         """(words, pos, dep, head, kid_idx) parallel arrays — the
         traversal's input view. Derived (and cached) from the token
@@ -255,13 +265,16 @@ class LazySentence(Sentence):
     Token/children/head access resolves through ``_tok``/``_build_children``.
     Why it exists (r8): the triples path constructs ~50 Token objects per
     document but the traversal touches only the handful that reach an
-    emitted triple — and each Token participates in the
-    ``Token._sent <-> Sentence.tokens`` reference CYCLE, so unconstructed
-    tokens also never become cyclic-collector work (measured: the cyclic
-    garbage walk was ~half the extraction UDF's CPU before the
-    per-batch-collect fix, and shrinks ~5x with laziness on top).
-    The traversal reads ``parse_view()`` arrays directly, so a sentence
-    that emits nothing materializes zero tokens.
+    emitted triple. The traversal reads ``parse_view()`` arrays directly,
+    so a sentence that emits nothing materializes zero tokens.
+
+    Cycles: a materialized Token points back at its sentence
+    (``Token._sent``), which holds it in ``tokens``, ``_children`` and
+    ``_soa`` — a reference cycle until ``release()`` drops the sentence's
+    side. The triples batch function releases each sentence once its
+    triples are flattened, so refcounting frees the parse forest and the
+    cyclic collector finds nothing (pinned by
+    tests/test_triples_batches.py).
     """
 
     __slots__ = ("_pv_words", "_pv_lemmas", "_pv_pos", "_pv_dep", "_pv_head")

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from posextract_spark.functions.worker import drop_zip_importers
+
 IGNORED_SECTIONS = ("References", "See_also", "External_links", "References_2")
 
 _BRACKETS_RE = re.compile(r"\[.+\]")
@@ -64,6 +66,11 @@ class _PageParser(HTMLParser):
         self._in_title = False
         self._stack: List[dict] = []
         self._p: Optional[dict] = None
+
+    def updatepos(self, i, j):
+        # HTMLParser keeps line/offset bookkeeping (counting newlines in
+        # every consumed span) only for getpos(), which nothing here calls
+        return j
 
     def _flush_p(self):
         if self._p is not None:
@@ -151,6 +158,7 @@ def extract_text(
 
     @F.pandas_udf(StringType())
     def udf(htmls: pd.Series) -> pd.Series:
+        drop_zip_importers()
         return pd.Series([html_to_text(h, asbox_filter) for h in htmls])
 
     return df.withColumn(out_col, udf(F.col(html_col)))

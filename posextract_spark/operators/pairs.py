@@ -59,9 +59,11 @@ def extract_adj_noun_pairs(
         # pinned by tests/test_pairs_array_parity.py + the pairs differential
         import gc
 
+        from posextract_spark.functions.worker import drop_zip_importers
         from posextract_spark.kernel.pairs import adj_noun_pairs_arrays
         from posextract_spark.parse.provider import get_provider
 
+        drop_zip_importers()
         p = get_provider(provider, **pk)
         # Threshold GC costs ~50% of this batch's CPU at the parse's
         # allocation rate (measured 2.1s -> 1.1s per 20k docs); the parse
@@ -112,9 +114,11 @@ def extract_subj_verb_pairs(
     def pairs_udf(texts: pd.Series) -> pd.Series:
         import gc
 
+        from posextract_spark.functions.worker import drop_zip_importers
         from posextract_spark.kernel.pairs import subj_verb_pairs_arrays
         from posextract_spark.parse.provider import get_provider
 
+        drop_zip_importers()
         p = get_provider(provider, **pk)
         # same threshold-GC suspension as the adj-noun UDF: acyclic
         # garbage, refcount-freed, no collect needed

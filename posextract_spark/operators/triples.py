@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from posextract_spark.functions.worker import drop_zip_importers
 from posextract_spark.kernel.extract import extract_triples_one
 from posextract_spark.kernel.quotes import split_quotes_list
 from posextract_spark.kernel.triple import FLAT_FIELDS
@@ -69,8 +70,12 @@ def _triple_rows(prov, ids: List[tuple], texts: List[Optional[str]], options) ->
     get_fields = _FIELDS_GETTER
     for doc_ids, segs in zip(ids, segments_per_doc):
         for sent_id in range(len(segs)):
-            for flat in extract_triples_one(parsed[pos + sent_id], options=options):
+            sent = parsed[pos + sent_id]
+            for flat in extract_triples_one(sent, options=options):
                 rows.append(doc_ids + (sent_id,) + get_fields(flat))
+            # flattened rows hold only strings: break the sentence's
+            # Token cycles so refcounting frees its forest
+            sent.release()
         pos += len(segs)
     return rows
 
@@ -102,22 +107,25 @@ def triples_batches(
     map_triples passes the Arrow batch size, so a batch of long pages
     holds no more parse forests at once than a batch of sentences does.
 
-    GC policy. Token._sent <-> Sentence.tokens is a reference cycle, so
-    every chunk leaves ~50 cyclic objects per document that only the
-    cyclic collector can free. Under the default thresholds that
-    allocation rate triggers thousands of threshold collections per batch,
-    measured at ~50% of this function's CPU (7.5s -> 3.7s per 20k docs
-    with gc off). So threshold GC is off while a chunk is built, and ONE
-    explicit collect per chunk frees its parse forest (memory stays flat:
-    collect-per-batch measured rss-stable vs +370MB/batch fully disabled).
-    GC is back in its prior state before every ``yield`` and off again on
-    resume: Spark may abandon the generator at a yield (task cancellation,
-    a limit), and the reused worker must not keep GC off. The worker's
+    GC policy. ``_triple_rows`` releases each sentence once its triples
+    are flattened (``Sentence.release``), so the parse forest holds no
+    reference cycle and refcounting frees it: the per-chunk collect finds
+    no garbage (it freed ~2.1M cyclic objects per 10k stock pages without
+    the release). Threshold GC stays off while a chunk is built, so young
+    collections do not walk the live forest, and one explicit collect per
+    chunk bounds whatever cyclic garbage a provider may leave. GC is back
+    in its prior state before every ``yield`` and off again on resume:
+    Spark may abandon the generator at a yield (task cancellation, a
+    limit), and the reused worker must not keep GC off. The worker's
     start-up heap (modules, the provider's tables) is frozen once per
-    process, so each collect walks only the objects of one chunk."""
+    process, so each collect walks only the objects of one chunk. The
+    task's zip importers are dropped first
+    (``functions.worker.drop_zip_importers``), so the next task's start
+    re-reads no archive."""
     global _HEAP_FROZEN
     from posextract_spark.parse.provider import get_provider
 
+    drop_zip_importers()
     # lazy per-executor provider (the reference's module-level singleton,
     # util.py:18-22, becomes a process-local cache)
     prov = get_provider(provider, **provider_kwargs)

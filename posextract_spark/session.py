@@ -5,8 +5,9 @@ Settings chosen for the 100 TB design point (and harmless locally):
   oversized-page skew is a first-class concern (BASELINE.json north_rule);
 - Arrow everywhere; bounded Arrow batch size so long documents cannot blow
   up executor-python memory inside the parse/extract UDFs;
-- shuffle partitions sized for the local harness (32 cores); on a real
-  cluster this is overridden by --conf / AQE coalescing.
+- local parallelism and shuffle partitions default to the host's core
+  count, the driver heap to half its physical memory (at most 48g); on a
+  real cluster these are overridden by --conf / AQE coalescing.
 """
 
 from __future__ import annotations
@@ -14,6 +15,24 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the former fixed default, sized for local[32] (an 8g heap GC-thrashed there)
+MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the host's core count."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half the host's physical memory, at
+    most 48g."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(MAX_DRIVER_MEMORY_MB, physical_mb // 2)}m"
 
 
 def build_session(
@@ -23,7 +42,7 @@ def build_session(
     arrow_batch_size: int = 2048,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
 
@@ -43,9 +62,8 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # local mode: the driver heap IS the executor heap — size it for the
-        # core count (an 8g heap GC-thrashes with 32 concurrent tasks).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode: the driver heap IS the executor heap
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     # last-wins overrides (e.g. tools/stress_sf1.py re-enables the UI to

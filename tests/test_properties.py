@@ -1,5 +1,9 @@
 """Property-based tests (hypothesis) for the pure kernel pieces."""
 
+import os
+import sys
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -95,35 +99,29 @@ def test_cc_star_equals_label_propagation(spark, edge_list):
     assert a == b
 
 
-def _reference_split_quotes():
-    """Load the reference's pure-python split_quotes through the shim loader.
-    Only safe when no real spaCy is installed (the shim occupies
+@pytest.fixture(scope="module")
+def reference_split_quotes():
+    """The reference's pure-python split_quotes, loaded through the shim
+    loader. Only safe when no real spaCy is installed (the shim occupies
     sys.modules['spacy']); with real spaCy present the subprocess-isolated
     tools/differential.py covers this instead."""
+    from tools import differential
+
+    ref_src = os.path.dirname(differential.REF_SRC)
+    if not os.path.isdir(ref_src):
+        pytest.skip(f"reference checkout absent: no {ref_src}")
     try:
         import spacy as _sp
 
         if not getattr(_sp, "__shim__", False):
-            return None
+            pytest.skip("real spaCy installed; covered by tools/differential.py")
     except ImportError:
         pass
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from tools.differential import _load_patched_reference
-
-    _load_patched_reference()
+    differential._load_patched_reference()
     return sys.modules["posextract.util"].split_quotes
 
 
-_REF_SPLIT_QUOTES = _reference_split_quotes()
-
-
-@given(_TEXT)
+@given(doc=_TEXT)
 @settings(max_examples=500, deadline=None)
-def test_split_quotes_matches_reference(doc):
-    import pytest as _pytest
-
-    if _REF_SPLIT_QUOTES is None:  # real spaCy present; see docstring
-        _pytest.skip("real spaCy installed; covered by tools/differential.py")
-    assert split_quotes_list(doc) == list(_REF_SPLIT_QUOTES(doc))
+def test_split_quotes_matches_reference(reference_split_quotes, doc):
+    assert split_quotes_list(doc) == list(reference_split_quotes(doc))

@@ -2,11 +2,14 @@
 fused pages -> triples crossing built on it."""
 
 import gc
+import random
 from functools import partial
 
 import pandas as pd
 import pytest
 
+from posextract_spark.kernel.extract import extract_triples_one
+from posextract_spark.kernel.quotes import split_quotes_list
 from posextract_spark.operators import triples as triples_mod
 from posextract_spark.operators.html_text import extract_text
 from posextract_spark.operators.sentences import split_sentences
@@ -17,8 +20,12 @@ from posextract_spark.operators.triples import (
     triples_batches,
 )
 from posextract_spark.options import TripleExtractorOptions
+from posextract_spark.parse.provider import get_provider
 from posextract_spark.pipeline import pages_to_triples
-from posextract_spark.sources.pages import generate_pages
+from posextract_spark.sources.pages import _gen_sentences, generate_pages
+from tests.test_lazy_sentence_parity import _lazy_from_rows, _tree_rows
+
+SVO_WORDS = "the a fast slow small big scan merge join sort filter data table row line query".split()
 
 COLUMNS = ["id", "sent_id", *OUTPUT_STRING_FIELDS]
 
@@ -76,6 +83,78 @@ def test_batches_split_into_chunks_of_max_docs(fresh_heap):
     assert [sorted(set(f["id"])) for f in chunked] == [[1], [2], [1], [2]]
     assert pd.concat(chunked).values.tolist() == pd.concat(whole).values.tolist()
     assert gc.isenabled()
+
+
+class _TreeProvider:
+    """Provider whose texts are fuzz-tree numbers: parse_lazy_batch
+    returns a fresh LazySentence of that tree each call."""
+
+    def __init__(self, trees):
+        self.trees = trees
+
+    def parse_lazy_batch(self, texts):
+        return [_lazy_from_rows(self.trees[int(t)]) for t in texts]
+
+
+def _corpora():
+    rng = random.Random(7)
+    template = [" ".join(_gen_sentences(rng)) for _ in range(60)]
+    template += ["Acme acquired Zorin.", "Bolt bought mines and sold bonds.", "", None]
+    svo = [" ".join(rng.choices(SVO_WORDS, k=rng.randint(0, 30))) for _ in range(200)]
+    trees = list(_tree_rows(seed=99, n=600))
+    return [
+        ("template", get_provider("template"), template),
+        ("svo", get_provider("svo"), svo),
+        ("fuzz", _TreeProvider(trees), [str(k) for k in range(len(trees))]),
+    ]
+
+
+def _unreleased_rows(prov, ids, texts, options):
+    """The rows _triple_rows must give, from extract_triples_one over a
+    fresh parse of each segment that is never released."""
+    rows = []
+    for doc_ids, text in zip(ids, texts):
+        for sent_id, seg in enumerate(split_quotes_list(text) if text else []):
+            (sent,) = prov.parse_lazy_batch([seg])
+            for flat in extract_triples_one(sent, options=options):
+                rows.append(doc_ids + (sent_id,) + tuple(flat[f] for f in OUTPUT_STRING_FIELDS))
+    return rows
+
+
+@pytest.mark.parametrize("opts", [{}, {"combine_adj": True, "prep_phrase": True}])
+def test_released_forest_is_acyclic(opts):
+    """_triple_rows releases every sentence after flattening it: same rows
+    as over unreleased parses, and the parse forest leaves no cyclic
+    garbage (with threshold GC off, a collect right after finds none)."""
+    options = TripleExtractorOptions(**opts)
+    for name, prov, texts in _corpora():
+        ids = [(k,) for k in range(len(texts))]
+        want = _unreleased_rows(prov, ids, texts, options)
+        assert want, name
+        was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            gc.collect()
+            got = triples_mod._triple_rows(prov, ids, texts, options)
+            assert gc.collect() == 0, name
+        finally:
+            if was_enabled:
+                gc.enable()
+        assert got == want, name
+
+
+def test_unreleased_forest_is_cyclic():
+    """Control for the test above: without release() the same parses do
+    leave cyclic garbage, so a zero count there is the release's doing."""
+    prov = get_provider("template")
+    texts = ["Acme acquired Zorin.", "Bolt bought mines and sold bonds."]
+    gc.disable()
+    try:
+        gc.collect()
+        _unreleased_rows(prov, [(0,), (1,)], texts, TripleExtractorOptions())
+        assert gc.collect() > 0
+    finally:
+        gc.enable()
 
 
 @pytest.fixture(scope="module")
