@@ -29,10 +29,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from posextract_spark.session import default_cpus
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(default_cpus())
     replicate = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "40"))
     n_parts = int(os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "64"))
 

@@ -29,6 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from posextract_spark.session import default_cpus
+
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
@@ -43,7 +45,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(default_cpus())
     replicate = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "40"))
     n_parts = int(os.environ.get("SPARK_GRAFT_BENCH_PARTITIONS", "64"))
 

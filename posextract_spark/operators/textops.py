@@ -579,7 +579,7 @@ def dedup_paragraphs(
     sep: str = "\n\n",
     out_col: str = "text_dedup",
 ) -> DataFrame:
-    """INTRA-document paragraph dedup: drop repeated paragraphs within one
+    r"""INTRA-document paragraph dedup: drop repeated paragraphs within one
     document, keeping the FIRST occurrence in order (the within-page half
     of C4's repeated-span removal — nav boilerplate pasted between
     sections, templated footers, etc.).
@@ -595,7 +595,7 @@ def dedup_paragraphs(
     separator as a REGEX while DuckDB's string_split is literal, so an
     unquoted regex-special separator ('.', '|') would silently diverge
     between the operator and its oracle. (Quoting caveat: a sep containing
-    the literal sequence '\\E' is not supported.)"""
+    the literal sequence '\E' is not supported.)"""
     paras = F.split(F.col(text_col), F.lit("\\Q" + sep + "\\E"))
     kept = F.array_distinct(paras)
     return df.select(
@@ -613,7 +613,7 @@ def dedup_paragraphs_global(
     sep: str = "\n\n",
     out_col: str = "text_dedup",
 ) -> DataFrame:
-    """GLOBAL paragraph dedup: every distinct paragraph is kept exactly
+    r"""GLOBAL paragraph dedup: every distinct paragraph is kept exactly
     once across the whole corpus — at its first occurrence by
     (min doc id, min position) — and removed everywhere else (C4: "we
     removed any three-sentence span occurring more than once"; the unit

@@ -19,6 +19,7 @@ import gc
 import operator as _operator
 from contextlib import contextmanager
 from functools import partial
+from itertools import chain
 from typing import Callable, Iterator, List, Optional, Tuple
 
 import pandas as pd
@@ -57,26 +58,33 @@ def repartition_by_hash(
     return df.repartition(n, F.xxhash64(F.col(col)))
 
 
-def _triple_rows(prov, ids: List[tuple], texts: List[Optional[str]], options) -> List[tuple]:
+def _triple_rows(
+    prov, ids: List[tuple], texts: List[Optional[str]], options, memo: Optional[dict] = None
+) -> List[tuple]:
     """(ids..., sent_id, fields...) rows of every triple in ``texts``;
-    ``sent_id`` numbers the split_quotes segments of each text."""
+    ``sent_id`` numbers the split_quotes segments of each text.
+
+    ``memo`` maps a segment's text to the field tuples of its triples; the
+    segments it lacks are parsed (once each, in one batch) and added, and
+    every row is then rebuilt from it in document order."""
+    if memo is None:
+        memo = {}
     segments_per_doc = [split_quotes_list(t) if t else [] for t in texts]
+    new = [seg for seg in dict.fromkeys(chain.from_iterable(segments_per_doc)) if seg not in memo]
+    get_fields = _FIELDS_GETTER
     # lazy parse: Token objects materialize only where the traversal
     # touches them (LazySentence; parity pinned by
     # tests/test_lazy_sentence_parity.py)
-    parsed = prov.parse_lazy_batch([seg for segs in segments_per_doc for seg in segs])
+    for seg, sent in zip(new, prov.parse_lazy_batch(new)):
+        memo[seg] = tuple(map(get_fields, extract_triples_one(sent, options=options)))
+        # flattened fields hold only strings: break the sentence's Token
+        # cycles so refcounting frees its forest
+        sent.release()
     rows = []
-    pos = 0
-    get_fields = _FIELDS_GETTER
     for doc_ids, segs in zip(ids, segments_per_doc):
-        for sent_id in range(len(segs)):
-            sent = parsed[pos + sent_id]
-            for flat in extract_triples_one(sent, options=options):
-                rows.append(doc_ids + (sent_id,) + get_fields(flat))
-            # flattened rows hold only strings: break the sentence's
-            # Token cycles so refcounting frees its forest
-            sent.release()
-        pos += len(segs)
+        for sent_id, seg in enumerate(segs):
+            for fields in memo[seg]:
+                rows.append(doc_ids + (sent_id,) + fields)
     return rows
 
 
@@ -107,6 +115,21 @@ def triples_batches(
     map_triples passes the Arrow batch size, so a batch of long pages
     holds no more parse forests at once than a batch of sentences does.
 
+    Segment memo. Web text repeats (boilerplate, stock phrases): of the
+    67,040 quote-split segments in 10k stock pages, 68% repeat a segment
+    already seen in the same task. A dict local to this generator, so to
+    one task, maps a segment's text to its triples' field tuples; each
+    chunk parses, extracts and flattens only the distinct segments the
+    memo lacks, in one ``parse_lazy_batch`` call, and ``_triple_rows``
+    rebuilds every row from the memo in document order, the same rows as
+    parsing every segment. Before a chunk the memo is cleared once it holds
+    ``max_docs`` entries (``max_docs`` <= 0: before every batch), so it
+    holds at most ``max_docs`` plus one chunk's distinct segments, all
+    flattened strings, and no chunk parses more than its own segments. It
+    is not per process: a worker cache would outlive the task, grow with
+    every query the reused worker serves, need the provider and options
+    in its key, and let repeated jobs over the same input skip their work.
+
     GC policy. ``_triple_rows`` releases each sentence once its triples
     are flattened (``Sentence.release``), so the parse forest holds no
     reference cycle and refcounting frees it: the per-chunk collect finds
@@ -134,15 +157,18 @@ def triples_batches(
         gc.freeze()
         _HEAP_FROZEN = True
     gc_was_enabled = gc.isenabled()
+    memo: dict = {}
     for pdf in batches:
         with _threshold_gc_off(gc_was_enabled):
             ids, texts = docs(pdf)
         step = max_docs if max_docs > 0 else max(len(texts), 1)
         for start in range(0, len(texts), step):
             end = start + step
+            if max_docs <= 0 or len(memo) >= max_docs:
+                memo.clear()
             with _threshold_gc_off(gc_was_enabled):
                 out = pd.DataFrame(
-                    _triple_rows(prov, ids[start:end], texts[start:end], options),
+                    _triple_rows(prov, ids[start:end], texts[start:end], options, memo),
                     columns=columns,
                 )
                 gc.collect()

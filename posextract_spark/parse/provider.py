@@ -33,20 +33,21 @@ class ParseProvider:
         providers that can skip Token/Sentence construction entirely
         override it (parse.svo: ~70% of its parse time was Token
         allocation the pair extractors never used)."""
-        out = []
-        for sent in self.parse_batch(texts):
-            toks = sent.tokens
-            out.append(
-                (
-                    [t.text for t in toks],
-                    [t.lemma_ for t in toks],
-                    [t.pos for t in toks],
-                    [t.dep for t in toks],
-                    [t.head_i for t in toks],
-                    sent._kid_idx,
-                )
-            )
-        return out
+        return [sentence_arrays(sent) for sent in self.parse_batch(texts)]
+
+
+def sentence_arrays(sent: Sentence) -> tuple:
+    """The (words, lemmas, pos, dep, head, kid_idx) view of a parsed
+    Sentence."""
+    toks = sent.tokens
+    return (
+        [t.text for t in toks],
+        [t.lemma_ for t in toks],
+        [t.pos for t in toks],
+        [t.dep for t in toks],
+        [t.head_i for t in toks],
+        sent._kid_idx,
+    )
 
 
 def get_provider(name: str = "auto", **kwargs) -> ParseProvider:

@@ -22,20 +22,7 @@ from posextract_spark.kernel.pairs import (
     subj_verb_pairs_arrays,
     subj_verb_pairs_one,
 )
-from posextract_spark.parse.provider import ParseProvider, get_provider
-
-
-def _sent_arrays(sent: Sentence):
-    """Base-class conversion for a single already-built Sentence."""
-    toks = sent.tokens
-    return (
-        [t.text for t in toks],
-        [t.lemma_ for t in toks],
-        [t.pos for t in toks],
-        [t.dep for t in toks],
-        [t.head_i for t in toks],
-        sent._kid_idx,
-    )
+from posextract_spark.parse.provider import ParseProvider, get_provider, sentence_arrays
 
 
 def _assert_corpus_parity(provider, texts, **kw):
@@ -134,6 +121,6 @@ ADVERSARIAL_TREES = [
 @pytest.mark.parametrize("sent", ADVERSARIAL_TREES)
 @pytest.mark.parametrize("kw", [{}, {"letter_case": "upper"}, {"lemmatize": True}])
 def test_adversarial_negation_tree_parity(sent, kw):
-    arr = _sent_arrays(sent)
+    arr = sentence_arrays(sent)
     assert adj_noun_pairs_one(sent, **kw) == adj_noun_pairs_arrays(arr, **kw)
     assert subj_verb_pairs_one(sent, **kw) == subj_verb_pairs_arrays(arr, **kw)

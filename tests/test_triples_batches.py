@@ -3,6 +3,7 @@ fused pages -> triples crossing built on it."""
 
 import gc
 import random
+from collections import Counter
 from functools import partial
 
 import pandas as pd
@@ -20,9 +21,10 @@ from posextract_spark.operators.triples import (
     triples_batches,
 )
 from posextract_spark.options import TripleExtractorOptions
+from posextract_spark.parse import provider as provider_mod
 from posextract_spark.parse.provider import get_provider
-from posextract_spark.pipeline import pages_to_triples
-from posextract_spark.sources.pages import _gen_sentences, generate_pages
+from posextract_spark.pipeline import page_docs, pages_to_triples
+from posextract_spark.sources.pages import _gen_sentences, gen_page, generate_pages
 from tests.test_lazy_sentence_parity import _lazy_from_rows, _tree_rows
 
 SVO_WORDS = "the a fast slow small big scan merge join sort filter data table row line query".split()
@@ -155,6 +157,119 @@ def test_unreleased_forest_is_cyclic():
         assert gc.collect() > 0
     finally:
         gc.enable()
+
+
+def _repetitive_corpora():
+    """(name, provider, texts) whose segments repeat heavily, with None
+    and '' texts among them."""
+    rng = random.Random(3)
+    pages = [gen_page(i, seed=11) for i in range(30)]
+    pdf = pd.DataFrame({"url": [p["url"] for p in pages], "html": [p["html"] for p in pages]})
+    _, sentences = page_docs(pdf, ["url"], "html", from_html=True, remove_quotes=False)
+    quoted = [
+        'Acme said "Bolt bought mines and sold bonds." Acme acquired Zorin.',
+        'Acme acquired Zorin."Bolt sold the bonds." Acme acquired Zorin.',  # a segment twice
+    ]
+    template = rng.choices(sentences + quoted, k=400) + ["", None] + sentences[:50]
+    trees = list(_tree_rows(seed=5, n=60))
+    fuzz = [str(k) for k in rng.choices(range(len(trees)), k=400)] + [None, ""]
+    return [
+        ("template", get_provider("template"), template),
+        ("fuzz", _TreeProvider(trees), fuzz),
+    ]
+
+
+class _SpyProvider:
+    """Counts every segment handed to parse_lazy_batch."""
+
+    def __init__(self, prov):
+        self.prov = prov
+        self.parsed = Counter()
+
+    def parse_lazy_batch(self, texts):
+        self.parsed.update(texts)
+        return self.prov.parse_lazy_batch(texts)
+
+
+def _task(monkeypatch, prov, texts, options, max_docs, batch=0):
+    """One task's generator over ``texts`` (ids 0..n-1) in Arrow batches
+    of ``batch`` rows (0: one batch), parsing with ``prov``."""
+    monkeypatch.setattr(provider_mod, "get_provider", lambda name, **kwargs: prov)
+    pdf = pd.DataFrame({"id": range(len(texts)), "text": texts})
+    step = batch or len(texts)
+    return triples_batches(
+        iter([pdf.iloc[i : i + step] for i in range(0, len(texts), step)]),
+        partial(column_docs, id_cols=["id"], text_col="text"),
+        COLUMNS,
+        "spy",
+        {},
+        options,
+        max_docs,
+    )
+
+
+def _rows(frames):
+    return [tuple(r) for f in frames for r in f.values.tolist()]
+
+
+def _segments(texts):
+    return [seg for t in texts if t for seg in split_quotes_list(t)]
+
+
+@pytest.mark.parametrize("opts", [{}, {"combine_adj": True, "prep_phrase": True}])
+@pytest.mark.parametrize("max_docs,batch", [(0, 0), (0, 50), (7, 50), (64, 0)])
+def test_memo_rows_equal_memo_free(fresh_heap, monkeypatch, opts, max_docs, batch):
+    """The memo changes no row and no row order: triples_batches gives
+    the rows of a fresh parse of every segment."""
+    options = TripleExtractorOptions(**opts)
+    for name, prov, texts in _repetitive_corpora():
+        want = _unreleased_rows(prov, [(k,) for k in range(len(texts))], texts, options)
+        assert want, name
+        got = _rows(_task(monkeypatch, prov, texts, options, max_docs, batch))
+        assert got == want, name
+
+
+def test_each_distinct_segment_parsed_once_per_task(fresh_heap, monkeypatch):
+    """Within a task every distinct segment is parsed exactly once, across
+    chunks and Arrow batches; a second generator (a new task) starts with
+    an empty memo and parses each again."""
+    options = TripleExtractorOptions()
+    for name, prov, texts in _repetitive_corpora():
+        segments = _segments(texts)
+        distinct = Counter(set(segments))
+        assert len(distinct) * 3 < len(segments), name  # heavy repetition
+        spy = _SpyProvider(prov)
+        list(_task(monkeypatch, spy, texts, options, max_docs=len(texts), batch=50))
+        assert spy.parsed == distinct, name
+        list(_task(monkeypatch, spy, texts, options, max_docs=len(texts), batch=50))
+        assert spy.parsed == distinct + distinct, name
+
+
+@pytest.mark.parametrize("max_docs,batch", [(5, 0), (16, 40), (0, 40)])
+def test_memo_bounded_by_max_docs(fresh_heap, monkeypatch, max_docs, batch):
+    """After each chunk the memo holds at most max_docs entries plus that
+    chunk's distinct segments (max_docs <= 0: just the batch's), so it is
+    cleared as it fills and never lasts past its task."""
+    real = triples_mod._triple_rows
+    seen = []
+
+    def spy_rows(prov, ids, texts, options, memo=None):
+        rows = real(prov, ids, texts, options, memo)
+        seen.append((id(memo), len(memo), len(set(_segments(texts)))))
+        return rows
+
+    monkeypatch.setattr(triples_mod, "_triple_rows", spy_rows)
+    name, prov, texts = _repetitive_corpora()[0]
+    list(_task(monkeypatch, prov, texts, TripleExtractorOptions(), max_docs, batch))
+    assert len(seen) > 2
+    assert len({memo for memo, _, _ in seen}) == 1  # one memo per task
+    for _, held, chunk_distinct in seen:
+        assert held <= max(max_docs, 0) + chunk_distinct
+        if max_docs <= 0:
+            assert held == chunk_distinct  # cleared once per batch
+    if max_docs > 0:
+        sizes = [held for _, held, _ in seen]
+        assert any(b < a for a, b in zip(sizes, sizes[1:]))  # it was cleared
 
 
 @pytest.fixture(scope="module")

@@ -146,9 +146,9 @@ def pairs_differential(anp, svp, corpora) -> dict:
     return out
 
 
-def main() -> int:
-    gt, anp, svp = _load_patched_reference()
-
+def build_corpora():
+    """[(name, [token rows per sentence])] of the three differential
+    corpora: fixture sentences, generated pages, svo-parsed documents."""
     # corpus 1: golden fixture sentences (template parses)
     from posextract_spark.parse.template import TemplateParser
     from posextract_spark.parse.svo import SVOChunkParser
@@ -194,6 +194,12 @@ def main() -> int:
         ).fetchall()
     ]
     corpora.append(("svo_docs", [tokens_of(svo.parse_one(t)) for t in texts]))
+    return corpora
+
+
+def main() -> int:
+    gt, anp, svp = _load_patched_reference()
+    corpora = build_corpora()
 
     report = {}
     worst = 1.0

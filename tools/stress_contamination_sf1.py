@@ -6,7 +6,7 @@ a trained k=256 quantizer (the literal-centroid argmax's practical k
 ceiling — see the operator docstring's broadcast-join note for beyond).
 
 Reuses the deterministic sf1 tables stress_sf1.py / stress_r7_sf1.py
-materialize. Usage: python3 tools/stress_contamination_sf1.py [--cpus 32]
+materialize. Usage: python3 tools/stress_contamination_sf1.py [--cpus N]
 Paste the summary into BENCH/BASELINE.md.
 """
 
@@ -21,6 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from posextract_spark.session import default_cpus  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOC_PATH = os.path.join(REPO, ".localdata", "sf1", "documents.parquet")
 EMB_PATH = os.path.join(REPO, ".localdata", "sf1", "embeddings.parquet")
@@ -34,7 +36,7 @@ MERGES = [
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     ap.add_argument("--semdedup-n", type=int, default=200_000)
     ap.add_argument("--semdedup-k", type=int, default=256)
     args = ap.parse_args()

@@ -12,7 +12,7 @@ proves the audit path is BOUNDED at scale the way its docstrings claim.
     the LSH candidate listing is near-linear at the same scale).
 
 Reuses the sf1 documents table stress_sf1.py materializes.
-Usage: python3 tools/stress_dedup_quality_sf1.py [--cpus 32]
+Usage: python3 tools/stress_dedup_quality_sf1.py [--cpus N]
 Paste the summary into BENCH/BASELINE.md.
 """
 
@@ -27,13 +27,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from posextract_spark.session import default_cpus  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOC_PATH = os.path.join(REPO, ".localdata", "sf1", "documents.parquet")
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     args = ap.parse_args()
 
     from posextract_spark.functions.hashing import portable_hash64

@@ -28,6 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from posextract_spark.session import default_cpus  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_DIR = os.path.join(REPO, ".localdata", "sf1")
 
@@ -35,7 +37,7 @@ OUT_DIR = os.path.join(REPO, ".localdata", "sf1")
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rounds", type=int, default=2)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     args = ap.parse_args()
 
     from tools.stress_sf1 import _stage_metrics  # shared REST scraper

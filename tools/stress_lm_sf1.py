@@ -8,7 +8,7 @@ with skip edges — output ~= n_nodes * max_depth rows, the shape a deep
 category hierarchy produces. Paste the JSON summary into
 BENCH/BASELINE.md.
 
-Usage: python3 tools/stress_lm_sf1.py [--replicate 400] [--cpus 32]
+Usage: python3 tools/stress_lm_sf1.py [--replicate 400] [--cpus N]
 """
 
 from __future__ import annotations
@@ -23,13 +23,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from posextract_spark.session import default_cpus  # noqa: E402
 from tools.stress_sf1 import OUT_DIR, _stage_metrics  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--replicate", type=int, default=400)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     args = ap.parse_args()
 
     from posextract_spark.session import build_session

@@ -3,7 +3,7 @@ quality classifier, bloom vs exact decontamination (direct A/B on the
 same inputs), BPE training at 16 merges, and corpus-editing substring
 dedup. Reuses the deterministic sf1 table stress_sf1.py materializes.
 
-Usage: python3 tools/stress_newops_sf1.py [--cpus 32]
+Usage: python3 tools/stress_newops_sf1.py [--cpus N]
 Paste the summary into BENCH/BASELINE.md.
 """
 
@@ -18,13 +18,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from posextract_spark.session import default_cpus  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOC_PATH = os.path.join(REPO, ".localdata", "sf1", "documents.parquet")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     args = ap.parse_args()
 
     from posextract_spark.session import build_session

@@ -7,7 +7,7 @@ Reuses the deterministic sf1 documents table stress_sf1.py materializes;
 synthesizes a deterministic 2M x 64 embeddings table on first run
 (hash-derived floats, scan-side, no external data).
 
-Usage: python3 tools/stress_r7_sf1.py [--cpus 32] [--skip-pipelines]
+Usage: python3 tools/stress_r7_sf1.py [--cpus N] [--skip-pipelines]
 Paste the summary into BENCH/BASELINE.md.
 """
 
@@ -21,6 +21,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from posextract_spark.session import default_cpus  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOC_PATH = os.path.join(REPO, ".localdata", "sf1", "documents.parquet")
@@ -57,7 +59,7 @@ def _materialize_embeddings(spark) -> None:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(default_cpus()))
     ap.add_argument("--skip-pipelines", action="store_true")
     args = ap.parse_args()
 
