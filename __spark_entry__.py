@@ -959,23 +959,10 @@ def q_entity_link_scored(spark, sf_dir):
     return resolve_surfaces_scored(surfaces, alias_df)
 
 
-def q_connected_components(spark, sf_dir):
-    """Iterative min-label CC over a star graph (nation -> region anchor);
-    the oracle computes the closed form, verifying convergence exactly."""
-    from posextract_spark.operators.canonicalize import connected_components
-
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    edges = nation.select(
-        F.col("n_nationkey").cast("long").alias("src"),
-        (F.col("n_regionkey").cast("long") + F.lit(1000)).alias("dst"),
-    )
-    return connected_components(edges)
-
-
 def q_connected_components_star(spark, sf_dir):
-    """Same fixpoint as q_connected_components, computed by the O(log n)
-    alternating large-star/small-star algorithm (the adversarial-depth scale
-    path) — the oracle is algorithm-independent."""
+    """CC over a star graph (nation -> region anchor) by the O(log n)
+    alternating large-star/small-star algorithm; the oracle computes the
+    closed form, verifying convergence exactly."""
     from posextract_spark.operators.canonicalize import connected_components_star
 
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
@@ -2457,8 +2444,9 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     embedding_neardup's bucketed join), and media_frame_sample (media
     keeps image_features) move here. r6 late
     rotations making room for the graph-analytics trio: sample_n (P8 keeps
-    stratified_take), connected_components (the star variant — the scale
-    path — keeps the CC row; both share _CC_ORACLE_SQL), media_resize
+    stratified_take), connected_components (the same star CC as
+    connected_components_star, which keeps the CC row; both share
+    _CC_ORACLE_SQL), media_resize
     (media keeps image/audio/frame_sample rows). End-of-r6 rotation:
     media_audio_features + ivf_topk move here so kg_taxonomy_closure +
     lm_familiarity earn driver-checked rows (their families keep
@@ -2497,7 +2485,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_by_type_day": q_events_by_type_day,
         "revenue_by_nation": q_revenue_by_nation,
         "sample_n": q_sample_n,
-        "connected_components": q_connected_components,
+        "connected_components": q_connected_components_star,
         "media_resize": q_media_resize,
         # r6 additions land here first (queries() is pinned at the
         # driver's 50-entry cap); rotate them in when something rotates out

@@ -45,11 +45,6 @@ def is_noun_attribute(token: Token) -> bool:
     return (token.pos == "NOUN" or token.pos == "PROPN") and token.dep == "attr"
 
 
-def is_poa(token: Token) -> bool:
-    """Preposition-or-agent-ish head check (reference: util.py:106-107)."""
-    return token.dep in ("prep", "agent", "det", "nmod")
-
-
 def should_consider_verb_phrase(vp: VerbPhrase) -> bool:
     """reference: util.py:44-52 — CComp (and its XComp subclass) always pass;
     otherwise reject when the second token has its own subject."""

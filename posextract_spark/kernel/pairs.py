@@ -1,15 +1,25 @@
 """Adjective-noun and subject-verb pair extractors.
 
 Re-expression of reference: src/posextract/adj_noun_pairs.py:49-88 and
-subj_verb_pairs.py:49-81 over the token-array model.
+subj_verb_pairs.py:49-81 over the provider's parallel token arrays
+(``ParseProvider.parse_arrays_batch``; ``parse.provider.sentence_arrays``
+gives the same view of a parsed Sentence). The extractors read only
+(text, lemma, pos, dep, head, children), so they need no Token or Sentence
+objects: the svo parse spent ~70% of its time allocating Tokens the pair
+extractors then read six fields from.
+
+Their output is pinned by ``tests/goldens/kernel.jsonl`` (the reference's
+pairs on the differential corpora), by tests/test_pairs_and_posrule.py and
+tests/test_pairs_array_parity.py (hand-built trees for the negation
+branches the corpora never hit), and end to end by the DuckDB oracles of
+operators.pairs.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
-from posextract_spark.kernel.model import Sentence, Token
-from posextract_spark.kernel.negation import get_subject_neg, get_verb_neg
+from posextract_spark.kernel.negation import _NEG_DETS  # single source of truth
 
 
 def _apply_case(values: Tuple[str, ...], letter_case: str) -> Tuple[str, ...]:
@@ -19,105 +29,6 @@ def _apply_case(values: Tuple[str, ...], letter_case: str) -> Tuple[str, ...]:
         return tuple(v.lower() for v in values)
     return values
 
-
-def adj_noun_pairs_one(
-    sent: Sentence, lemmatize: bool = False, letter_case: str = "default"
-) -> List[dict]:
-    """(verb_neg, neg_det, adjective, noun) per ADJ token whose head is a
-    NOUN (reference: adj_noun_pairs.py:49-88)."""
-    pairs: List[dict] = []
-    for adjective in sent:
-        if adjective.pos == "ADJ" and adjective.head.pos == "NOUN":
-            noun = adjective.head
-
-            neg_det_tok = get_subject_neg(noun)
-            neg_det = "" if neg_det_tok is None else neg_det_tok.text
-
-            verb_neg = ""
-            if noun.head.pos in ("AUX", "VERB"):
-                verb_neg_tok, _ = get_verb_neg(noun.head)
-                if verb_neg_tok is not None:
-                    verb_neg = verb_neg_tok.text
-
-            if lemmatize:
-                adj_s, noun_s = adjective.lemma_, noun.lemma_
-            else:
-                adj_s, noun_s = adjective.text, noun.text
-
-            verb_neg, neg_det, adj_s, noun_s = _apply_case(
-                (verb_neg, neg_det, adj_s, noun_s), letter_case
-            )
-            pairs.append(
-                {"verb_neg": verb_neg, "neg_det": neg_det, "adjective": adj_s, "noun": noun_s}
-            )
-    return pairs
-
-
-def subj_verb_pairs_one(
-    sent: Sentence, lemmatize: bool = False, letter_case: str = "default"
-) -> List[dict]:
-    """(subject, verb_neg, verb) per VERB-pos token that has its OWN
-    subject (reference: subj_verb_pairs.py:49-81).
-
-    Faithfulness notes:
-    - the reference's ``subject`` variable does leak across loop iterations
-      (subj_verb_pairs.py:49-59), but it is stringified at the END of every
-      emitting iteration (``subject = subject.text``, :68-72), so a verb
-      that would inherit a carried-over subject crashes on ``str.text``
-      (AttributeError); a verb with no subject and no prior one crashes
-      with UnboundLocalError (SURVEY.md §0.1.3). Either way the reference
-      NEVER emits a carry-over pair — proven by the pairs differential
-      (tools/differential.py), which runs the actual reference code. We
-      define both crash classes as skip-this-verb, the only output-defined
-      behavior consistent with what the reference can actually produce.
-    - the *last* nsubj/nsubjpass child wins (subj_verb_pairs.py:57-59).
-    """
-    pairs: List[dict] = []
-    for verb in sent:
-        if verb.pos != "VERB":
-            continue
-
-        subject: Optional[Token] = None
-        if verb.head.dep in ("nsubj", "nsubjpass"):
-            subject = verb.head
-        for child in verb.children:
-            if child.dep in ("nsubj", "nsubjpass"):
-                subject = child
-
-        if subject is None:
-            continue
-
-        verb_neg_tok, _ = get_verb_neg(verb)
-        verb_neg = "" if verb_neg_tok is None else verb_neg_tok.text
-
-        if lemmatize:
-            subj_s, verb_s = subject.lemma_, verb.lemma_
-        else:
-            subj_s, verb_s = subject.text, verb.text
-
-        if letter_case == "upper":
-            subj_s, verb_s = subj_s.upper(), verb_s.upper()
-        elif letter_case == "lower":
-            subj_s, verb_s = subj_s.lower(), verb_s.lower()
-
-        pairs.append({"subject": subj_s, "verb_neg": verb_neg, "verb": verb_s})
-    return pairs
-
-
-# --- array-native fast paths -------------------------------------------------
-#
-# The pair extractors only touch (text, lemma, pos, dep, head, children) —
-# they never need the object tree the triples kernel walks. These variants
-# run directly on the provider's parallel arrays (ParseProvider.
-# parse_arrays_batch), skipping Token/Sentence construction entirely: the
-# svo parse spent ~70% of its time allocating n Token objects per sentence
-# that the pair extractors then read six fields from. Semantics are the
-# EXACT transcription of the object versions above (which remain the
-# reference-cited baseline); tests/test_pairs_array_parity.py pins
-# row-for-row equality on every provider, and the DuckDB oracle pins the
-# Spark path end-to-end.
-
-from posextract_spark.kernel.negation import _NEG_DETS  # single source of truth
 
 _SUBJ_DEPS = ("nsubj", "nsubjpass")
 
@@ -155,7 +66,8 @@ def _subject_neg_arrays(ni, words, dep, kid_idx) -> str:
 def adj_noun_pairs_arrays(
     arrays, lemmatize: bool = False, letter_case: str = "default"
 ) -> List[dict]:
-    """Array-native adj_noun_pairs_one: identical output, no object tree."""
+    """(verb_neg, neg_det, adjective, noun) per ADJ token whose head is a
+    NOUN (reference: adj_noun_pairs.py:49-88)."""
     words, lemmas, pos, dep, head, kid_idx = arrays
     pairs: List[dict] = []
     for ai in range(len(words)):
@@ -186,8 +98,23 @@ def adj_noun_pairs_arrays(
 def subj_verb_pairs_arrays(
     arrays, lemmatize: bool = False, letter_case: str = "default"
 ) -> List[dict]:
-    """Array-native subj_verb_pairs_one: identical output (including the
-    crash->skip semantics for subjectless verbs), no object tree."""
+    """(subject, verb_neg, verb) per VERB-pos token that has its OWN
+    subject (reference: subj_verb_pairs.py:49-81).
+
+    Faithfulness notes:
+    - the reference's ``subject`` variable does leak across loop iterations
+      (subj_verb_pairs.py:49-59), but it is stringified at the END of every
+      emitting iteration (``subject = subject.text``, :68-72), so a verb
+      that would inherit a carried-over subject crashes on ``str.text``
+      (AttributeError); a verb with no subject and no prior one crashes
+      with UnboundLocalError (SURVEY.md §0.1.3). Either way the reference
+      NEVER emits a carry-over pair — proven by the pairs differential
+      (tools/differential.py), which runs the actual reference code. We
+      define both crash classes as skip-this-verb, the only output-defined
+      behavior consistent with what the reference can actually produce.
+    - the *last* nsubj/nsubjpass child wins (subj_verb_pairs.py:57-59).
+    - verb_neg keeps its case under ``letter_case`` (subj_verb_pairs.py
+      cases only the subject and the verb)."""
     words, lemmas, pos, dep, head, kid_idx = arrays
     pairs: List[dict] = []
     for vi in range(len(words)):

@@ -16,9 +16,25 @@ from posextract_spark.kernel.classifiers import is_noun_attribute
 from posextract_spark.kernel.model import Token, TokenLike
 
 
+def dep_gate(*deps: str):
+    """Declare the verb deps a rule can admit, as the rule's ``deps``.
+
+    The rule's first check rejects any other verb dep by reading ``deps``,
+    and traversal._RULE_DEP_GATES reads the same attribute to skip the
+    rules a verb's dep rules out before calling any. rule10 declares no
+    gate: it takes any Token verb and never a VerbPhrase."""
+
+    def declare(rule):
+        rule.deps = frozenset(deps)
+        return rule
+
+    return declare
+
+
+@dep_gate("pcomp")
 def rule1(verb, subject, obj, poa) -> bool:
     """pcomp verb under a prep (reference: rules.py:9-22)."""
-    if verb.dep != "pcomp":
+    if verb.dep not in rule1.deps:
         return False
     verb_head = verb.head
     if verb_head.dep != "prep":
@@ -28,9 +44,10 @@ def rule1(verb, subject, obj, poa) -> bool:
     return obj.dep == "dobj" and verb == obj.head
 
 
+@dep_gate("ccomp", "conj", "relcl", "advcl", "pcomp", "ROOT")
 def rule2(verb, subject, obj, poa) -> bool:
     """Main-clause verb (reference: rules.py:25-46)."""
-    if verb.dep not in ("ccomp", "conj", "relcl", "advcl", "pcomp") and verb.dep != "ROOT":
+    if verb.dep not in rule2.deps:
         return False
     if not (verb == subject.head):
         return False
@@ -49,9 +66,10 @@ def rule2(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("relcl", "acl")
 def rule3(verb, subject, obj, poa) -> bool:
     """relcl/acl on the subject noun (reference: rules.py:49-64)."""
-    if verb.dep not in ("relcl", "acl"):
+    if verb.dep not in rule3.deps:
         return False
     if verb.head is not subject:
         return False
@@ -64,9 +82,10 @@ def rule3(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("xcomp", "advcl", "conj")
 def rule4(verb, subject, obj, poa) -> bool:
     """xcomp/advcl/conj verb (reference: rules.py:67-97)."""
-    if verb.dep not in ("xcomp", "advcl", "conj"):
+    if verb.dep not in rule4.deps:
         return False
     if not (verb == subject.head) and subject.head is not verb.head:
         return False
@@ -79,9 +98,10 @@ def rule4(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("ccomp", "advcl", "pcomp", "ROOT")
 def rule5(verb, subject, obj, poa) -> bool:
     """ccomp/advcl/pcomp/ROOT (reference: rules.py:100-116)."""
-    if verb.dep not in ("ccomp", "advcl", "pcomp") and verb.dep != "ROOT":
+    if verb.dep not in rule5.deps:
         return False
     if not (verb == subject.head):
         return False
@@ -94,9 +114,10 @@ def rule5(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("xcomp", "advcl")
 def rule6(verb, subject, obj, poa) -> bool:
     """xcomp/advcl sibling of subject (reference: rules.py:119-135)."""
-    if verb.dep != "xcomp" and verb.dep != "advcl":
+    if verb.dep not in rule6.deps:
         return False
     if verb.head is not subject.head:
         return False
@@ -111,9 +132,10 @@ def rule6(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("relcl")
 def rule7(verb, subject, obj, poa) -> bool:
     """relcl on subject (reference: rules.py:138-154)."""
-    if verb.dep != "relcl":
+    if verb.dep not in rule7.deps:
         return False
     if verb.head is not subject:
         return False
@@ -128,11 +150,12 @@ def rule7(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("conj")
 def rule8(verb, subject, obj, poa) -> Optional[bool]:
     """conj verb, head-sharing (reference: rules.py:157-171). The reference
     falls through with an implicit None for the final dobj case miss —
     equivalent to False; preserved by returning None."""
-    if verb.dep != "conj":
+    if verb.dep not in rule8.deps:
         return False
     if verb.head is not subject.head:
         return False
@@ -147,6 +170,7 @@ def rule8(verb, subject, obj, poa) -> Optional[bool]:
     return None
 
 
+@dep_gate("relcl")
 def rule9(verb, subject, obj, poa) -> bool:
     """relcl via a noun attribute of the object (reference: rules.py:174-200).
 
@@ -155,7 +179,7 @@ def rule9(verb, subject, obj, poa) -> bool:
     because rules 2/5-8 catch acomp/amod/advmod objects first. We guard
     (poa None => that branch is not satisfied) instead of crashing.
     """
-    if verb.dep != "relcl":
+    if verb.dep not in rule9.deps:
         return False
     noun_attribute = None
     for child in obj.children:
@@ -203,9 +227,10 @@ def rule10(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("ccomp")
 def rule11(verb, subject, obj, poa) -> bool:
     """ccomp verb with an xcomp child (reference: rules.py:232-255)."""
-    if verb.dep != "ccomp":
+    if verb.dep not in rule11.deps:
         return False
     if not (verb == subject.head):
         return False
@@ -223,9 +248,10 @@ def rule11(verb, subject, obj, poa) -> bool:
     return False
 
 
+@dep_gate("conj")
 def rule12(verb, subject, obj, poa) -> bool:
     """conj verb owning the subject (reference: rules.py:258-273)."""
-    if verb.dep != "conj":
+    if verb.dep not in rule12.deps:
         return False
     if not (verb == subject.head):
         return False

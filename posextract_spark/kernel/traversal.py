@@ -326,29 +326,15 @@ def _dedup_sorted_objects(objects: List[ObjectCand]) -> List[ObjectCand]:
 # rule tag strings precomputed once (not per emitted triple)
 _RULES = tuple((f, " <%s>" % f.__name__) for f in RULE_FUNCS)
 
-# Dep-gated rule sequences. Each rule's FIRST check is a verb.dep gate
-# (reference: rules.py — rule3 `not in (relcl, acl)`, rule8 `!= conj`,
-# ...); pre-filtering by verb.dep skips calls that would return False on
-# line one, preserving first-match-wins order over the surviving subset.
-# rule10 has NO dep gate for Token verbs and is ALWAYS excluded for
-# VerbPhrases (its hasattr(verb, 'conjuncts') is False for every
-# VerbPhrase — reference: rules.py:209-210). Gate sets transcribed from
-# each rule's dep test; pinned exhaustively by
-# tests/test_fast_kernel_parity.py over the fuzz corpus.
-_RULE_DEP_GATES = (
-    {"pcomp"},                                              # rule1
-    {"ccomp", "conj", "relcl", "advcl", "pcomp", "ROOT"},   # rule2
-    {"relcl", "acl"},                                       # rule3
-    {"xcomp", "advcl", "conj"},                             # rule4
-    {"ccomp", "advcl", "pcomp", "ROOT"},                    # rule5
-    {"xcomp", "advcl"},                                     # rule6
-    {"relcl"},                                              # rule7
-    {"conj"},                                               # rule8
-    {"relcl"},                                              # rule9
-    None,                                                   # rule10: any dep
-    {"ccomp"},                                              # rule11
-    {"conj"},                                               # rule12
-)
+# Dep-gated rule sequences. Each rule's FIRST check rejects a verb whose
+# dep is outside the rule's declared ``deps`` (rules.dep_gate); pre-filtering
+# by verb.dep skips calls that would return False on line one, preserving
+# first-match-wins order over the surviving subset. rule10 declares no gate:
+# it takes any Token verb and is ALWAYS excluded for VerbPhrases (its
+# hasattr(verb, 'conjuncts') is False for every VerbPhrase — reference:
+# rules.py:209-210). Pinned exhaustively by tests/test_fast_kernel_parity.py
+# over the fuzz corpus.
+_RULE_DEP_GATES = tuple(getattr(f, "deps", None) for f in RULE_FUNCS)
 
 _GATED_RULES: dict = {}
 

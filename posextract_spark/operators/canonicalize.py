@@ -1,15 +1,12 @@
 """Canonicalization: surface-form aggregation + connected components.
 
 Connected components over co-reference/alias edges is the one operator
-Spark lacks natively (SURVEY.md §4.2). Two implementations share one
-output contract: ``connected_components_star`` — alternating
-large-star/small-star (Kiveris et al., "Connected Components in MapReduce
-and Beyond"), O(log n) rounds on any graph shape — is the DEFAULT used by
-``canonical_clusters``; ``connected_components`` (iterative min-label
-propagation, O(graph-diameter) join rounds) is kept as the simpler
-reference implementation and converges faster only on near-star graphs
-(diameter <= ~4). Both localCheckpoint() per round to cut lineage growth
-and early-exit on convergence.
+Spark lacks natively (SURVEY.md §4.2). ``connected_components_star`` —
+alternating large-star/small-star (Kiveris et al., "Connected Components
+in MapReduce and Beyond"), O(log n) rounds on any graph shape — is the one
+implementation; ``canonical_clusters`` and ``resolve_canonical_cc`` use
+it. It localCheckpoint()s per round to cut lineage growth and exits early
+on convergence.
 
 Skew note (north_rule): head entities produce hot keys in the surface-form
 groupBy; ``salted_counts`` demonstrates the two-phase salted aggregation
@@ -22,61 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(node BIGINT, component BIGINT) — component = min node id reachable.
-
-    edges: undirected pairs of BIGINT node ids (any orientation).
-    """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # label(v) starts as min(v, min neighbor) — one round for free
-    labels = (
-        e.groupBy(F.col("a").alias("node"))
-        .agg(F.least(F.min("b"), F.first("a")).alias("component"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(max_iter):
-        # propagate: candidate label for v = min over neighbors u of label(u)
-        prop = (
-            e.join(labels.withColumnRenamed("node", "b_node"), F.col("b") == F.col("b_node"))
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("neighbor_component"))
-        )
-        new_labels = (
-            labels.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("neighbor_component"), F.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-
-    return labels
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -87,9 +29,9 @@ def connected_components_star(
     """(node BIGINT, component BIGINT) via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — O(log n) rounds on ANY graph shape, vs min-label
-    propagation's O(diameter). Same output contract as
-    ``connected_components``: component = min reachable node id; nodes with
-    only self-loops are absent.
+    propagation's O(diameter). component = min reachable node id; nodes
+    with only self-loops are absent. ``edges``: undirected pairs of BIGINT
+    node ids (any orientation).
 
     Per round: two groupBy-min passes + re-emit (each a single shuffle on
     node id, map-side combinable), localCheckpoint to cut lineage, and a
@@ -167,29 +109,22 @@ def salted_counts(
     key_col: str,
     n_salts: int = 16,
     count_alias: str = "n",
-    id_col: str | None = None,
+    *,
+    id_col: str,
 ) -> DataFrame:
     """Two-phase salted count for skewed keys: partial count on
     (key, salt), then final merge. Bounded partition width on hot keys.
 
-    Pass ``id_col`` (a stable, unique column) whenever one exists: the
-    salt is then ``pmod(xxhash64(id_col), n_salts)`` — deterministic in
-    the DATA, so a fetch-failure-driven recompute of the partial-count
-    map stage re-derives identical (key, salt) assignments and the result
-    is exactly equal to a direct groupBy-count even across task attempts.
-
-    Without ``id_col`` the salt falls back to
-    ``xxhash64(monotonically_increasing_id())`` — NONDETERMINISTIC across
-    stage retries (the row->partition->offset mapping can change between
-    attempts). On a single attempt the result still equals a direct
-    groupBy, but at the 1000-executor design point a map-stage retry can
-    mix partials from different salt assignments (SPARK-23207-class
-    hazard: double- or drop-counted rows). Prefer ``id_col``; the
-    fallback exists only for frames with no stable key."""
-    if id_col is not None:
-        salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
-    else:
-        salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
+    ``id_col`` is a stable, unique column: the salt is
+    ``pmod(xxhash64(id_col), n_salts)`` — deterministic in the DATA, so a
+    fetch-failure-driven recompute of the partial-count map stage
+    re-derives identical (key, salt) assignments and the result is exactly
+    equal to a direct groupBy-count even across task attempts. A salt from
+    ``monotonically_increasing_id()`` would not be: the
+    row->partition->offset mapping can change between attempts, and a
+    map-stage retry could mix partials from different salt assignments
+    (SPARK-23207-class hazard: double- or drop-counted rows)."""
+    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
     salted = df.withColumn("_salt", salt)
     partial = salted.groupBy(key_col, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy(key_col).agg(F.sum("_partial").cast("bigint").alias(count_alias))

@@ -1,9 +1,12 @@
 """Adjective-noun and subject-verb pair operators.
 
 Spark shape mirrors the reference's extract_df wrappers
-(reference: src/posextract/adj_noun_pairs.py:109-121, subj_verb_pairs.py:102-114):
-df -> pandas UDF -> explode, with sibling columns preserved for free by the
-explode (the reference broadcasts the original row manually at
+(reference: src/posextract/adj_noun_pairs.py:109-121, subj_verb_pairs.py:102-114),
+with one ``mapInPandas`` through operators.batches: each document is one
+segment, parsed to the provider's token arrays (``parse_arrays_batch``, no
+Token/Sentence objects) and mapped by the array extractors of kernel.pairs
+to flat rows. The id columns travel through the crossing with the text
+(the reference broadcasts the original row manually at
 adj_noun_pairs.py:114).
 
 DuckDB oracle SQL mirrors for the SVO provider are defined alongside.
@@ -11,29 +14,56 @@ DuckDB oracle SQL mirrors for the SVO provider are defined alongside.
 
 from __future__ import annotations
 
-from typing import List, Optional
+import operator as _operator
+from functools import partial
+from typing import Callable, Iterator, List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-ADJ_NOUN_STRUCT = StructType(
-    [
-        StructField("verb_neg", StringType(), False),
-        StructField("neg_det", StringType(), False),
-        StructField("adjective", StringType(), False),
-        StructField("noun", StringType(), False),
-    ]
-)
+from posextract_spark.kernel.pairs import adj_noun_pairs_arrays, subj_verb_pairs_arrays
+from posextract_spark.operators.batches import Extract, map_column
 
-SUBJ_VERB_STRUCT = StructType(
-    [
-        StructField("subject", StringType(), False),
-        StructField("verb_neg", StringType(), False),
-        StructField("verb", StringType(), False),
-    ]
-)
+ADJ_NOUN_FIELDS = ("verb_neg", "neg_det", "adjective", "noun")
+SUBJ_VERB_FIELDS = ("subject", "verb_neg", "verb")
+
+
+def _whole_text(text: str) -> List[str]:
+    return [text]
+
+
+def _pair_fields(
+    prov,
+    texts: List[str],
+    kernel: Callable,
+    names: Tuple[str, ...],
+    lemmatize: bool,
+    letter_case: str,
+) -> Iterator[tuple]:
+    """Per text, the field tuples of its pairs (Extract.fields)."""
+    get_fields = _operator.itemgetter(*names)
+    for arrays in prov.parse_arrays_batch(texts):
+        yield tuple(map(get_fields, kernel(arrays, lemmatize=lemmatize, letter_case=letter_case)))
+
+
+def pair_extract(
+    kernel: Callable,
+    names: Tuple[str, ...],
+    lemmatize: bool = False,
+    letter_case: str = "default",
+) -> Extract:
+    """A pair extractor for operators.batches.run_batches: each text is
+    one segment (``sent_id`` 0), ``kernel`` maps its arrays to the pair
+    dicts, and ``names`` orders their fields."""
+    fields = partial(
+        _pair_fields, kernel=kernel, names=names, lemmatize=lemmatize, letter_case=letter_case
+    )
+    return Extract(names, _whole_text, fields)
+
+
+def _map_pairs(df, text_col, id_cols, keep, extract, provider, provider_kwargs) -> DataFrame:
+    keep_cols = list(id_cols or []) if keep else []
+    out = map_column(df, text_col, keep_cols, extract, provider, provider_kwargs)
+    return out.select(*keep_cols, *extract.names)
 
 
 def extract_adj_noun_pairs(
@@ -48,49 +78,8 @@ def extract_adj_noun_pairs(
 ) -> DataFrame:
     """reference: adj_noun_pairs.py:49-121. ``keep=False`` mirrors the
     column-drop variant (adj_noun_pairs.py:27-31)."""
-    id_cols = list(id_cols or [])
-    pk = provider_kwargs or {}
-
-    @F.pandas_udf(ArrayType(ADJ_NOUN_STRUCT))
-    def pairs_udf(texts: pd.Series) -> pd.Series:
-        # array-native path: the extractors never touch the object tree,
-        # so providers that can skip Token/Sentence construction (svo) do;
-        # parity with the object kernel (the reference transcription) is
-        # pinned by tests/test_pairs_array_parity.py + the pairs differential
-        import gc
-
-        from posextract_spark.functions.worker import drop_zip_importers
-        from posextract_spark.kernel.pairs import adj_noun_pairs_arrays
-        from posextract_spark.parse.provider import get_provider
-
-        drop_zip_importers()
-        p = get_provider(provider, **pk)
-        # Threshold GC costs ~50% of this batch's CPU at the parse's
-        # allocation rate (measured 2.1s -> 1.1s per 20k docs); the parse
-        # and kernel allocations of the array path are acyclic (lists and
-        # dicts, no backrefs), so refcounting frees them and no explicit
-        # collect is needed — just suspend threshold collections for the
-        # batch. pandas may leave some cyclic garbage when it builds the
-        # output Series; threshold GC frees it once re-enabled.
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            out = []
-            for arrays in p.parse_arrays_batch([t if t else "" for t in texts]):
-                out.append(
-                    [
-                        (d["verb_neg"], d["neg_det"], d["adjective"], d["noun"])
-                        for d in adj_noun_pairs_arrays(arrays, lemmatize=lemmatize, letter_case=letter_case)
-                    ]
-                )
-            return pd.Series(out)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    keep_cols = id_cols if keep else []
-    exploded = df.select(*keep_cols, F.explode(pairs_udf(F.col(text_col))).alias("pair"))
-    return exploded.select(*keep_cols, "pair.*")
+    extract = pair_extract(adj_noun_pairs_arrays, ADJ_NOUN_FIELDS, lemmatize, letter_case)
+    return _map_pairs(df, text_col, id_cols, keep, extract, provider, provider_kwargs)
 
 
 def extract_subj_verb_pairs(
@@ -104,43 +93,11 @@ def extract_subj_verb_pairs(
     keep: bool = True,
 ) -> DataFrame:
     """reference: subj_verb_pairs.py:49-114 (incl. the stale-subject
-    carry-over quirk — see kernel.pairs.subj_verb_pairs_one).
+    carry-over quirk — see kernel.pairs.subj_verb_pairs_arrays).
     ``keep=False`` mirrors the column-drop variant
     (reference: subj_verb_pairs.py:21-31)."""
-    id_cols = list(id_cols or [])
-    pk = provider_kwargs or {}
-
-    @F.pandas_udf(ArrayType(SUBJ_VERB_STRUCT))
-    def pairs_udf(texts: pd.Series) -> pd.Series:
-        import gc
-
-        from posextract_spark.functions.worker import drop_zip_importers
-        from posextract_spark.kernel.pairs import subj_verb_pairs_arrays
-        from posextract_spark.parse.provider import get_provider
-
-        drop_zip_importers()
-        p = get_provider(provider, **pk)
-        # same threshold-GC suspension as the adj-noun UDF: acyclic
-        # garbage, refcount-freed, no collect needed
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            out = []
-            for arrays in p.parse_arrays_batch([t if t else "" for t in texts]):
-                out.append(
-                    [
-                        (d["subject"], d["verb_neg"], d["verb"])
-                        for d in subj_verb_pairs_arrays(arrays, lemmatize=lemmatize, letter_case=letter_case)
-                    ]
-                )
-            return pd.Series(out)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    keep_cols = id_cols if keep else []
-    exploded = df.select(*keep_cols, F.explode(pairs_udf(F.col(text_col))).alias("pair"))
-    return exploded.select(*keep_cols, "pair.*")
+    extract = pair_extract(subj_verb_pairs_arrays, SUBJ_VERB_FIELDS, lemmatize, letter_case)
+    return _map_pairs(df, text_col, id_cols, keep, extract, provider, provider_kwargs)
 
 
 # DuckDB mirrors for the SVO provider over the `documents` view. -------------
@@ -191,7 +148,7 @@ WHERE a.pos = 'ADJ' AND (a.has_verb = 1 OR a.idx <> a.first_idx)
 # not nsubj-attached by the SVO parser). Verbs without an own subject emit
 # nothing: the reference's stale-subject variable is stringified at the end
 # of each emitting iteration, so a carried-over subject always crashes
-# (AttributeError / UnboundLocalError — see kernel.pairs.subj_verb_pairs_one
+# (AttributeError / UnboundLocalError — see kernel.pairs.subj_verb_pairs_arrays
 # and the pairs differential).
 SVO_SUBJ_VERB_SQL = """
 WITH toks AS (

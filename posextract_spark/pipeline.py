@@ -6,8 +6,8 @@ pages(url, warc_ts, html, text, lang)
      use_stored_text): html -> text (byte-identical to the stored text
      contract) -> sentence split (operators.sentences.sentences_of, the
      Python mirror of split_sentences) -> quote split + parse + extract
-     (operators.triples.triples_batches, the batch function extract_triples
-     also runs)
+     (operators.batches.run_batches, the batch function extract_triples
+     and the pair operators also run)
   -> link_triples (broadcast alias joins)
   -> build_edges / build_nodes (grouped aggregation)
 
@@ -30,7 +30,8 @@ from posextract_spark.operators.graph import build_edges, build_nodes, link_trip
 from posextract_spark.operators.html_text import html_to_text
 from posextract_spark.operators.linking import link_entities, mentions_from_triples
 from posextract_spark.operators.sentences import sentences_of
-from posextract_spark.operators.triples import map_triples
+from posextract_spark.operators.batches import map_batches
+from posextract_spark.operators.triples import triple_extract
 from posextract_spark.options import TripleExtractorOptions
 
 
@@ -41,7 +42,7 @@ def page_docs(
     from_html: bool,
     remove_quotes: bool,
 ) -> Tuple[List[tuple], List[str]]:
-    """``docs`` for operators.triples.triples_batches: one document per
+    """``docs`` for operators.batches.run_batches: one document per
     kept sentence of each page, ids (id_cols..., sent_pos)."""
     ids, texts = [], []
     page_ids = zip(*(pdf[c].tolist() for c in id_cols))
@@ -71,7 +72,7 @@ def pages_to_triples(
         df = df.filter(F.col("lang") == lang)
     text_col = "text" if use_stored_text else "html"
     df = df.select(*id_cols, text_col)
-    return map_triples(
+    return map_batches(
         df,
         partial(
             page_docs,
@@ -82,7 +83,7 @@ def pages_to_triples(
         ),
         [(c, df.schema[c].dataType.simpleString()) for c in id_cols]
         + [("sent_pos", "int")],
-        options=options,
+        triple_extract(options),
         provider=provider,
     )
 

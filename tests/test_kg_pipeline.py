@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from posextract_spark.operators.html_text import extract_text, extract_text_pure
 from posextract_spark.operators.sentences import split_sentences
-from posextract_spark.operators.canonicalize import connected_components, salted_counts
+from posextract_spark.operators.canonicalize import connected_components_star, salted_counts
 from posextract_spark.pipeline import kg_from_pages, pages_to_triples
 from posextract_spark.sources.pages import alias_table, gen_page, generate_pages
 
@@ -90,21 +90,37 @@ def test_kg_materialize_and_linking(spark, pages, tmp_path):
     assert (edges_pd.sources.map(len) <= 8).all()
 
 
+def union_find_components(edges):
+    """{node: min node id of its component} by union-find over the edges
+    that are not self-loops: the star CC's contract (nodes with only
+    self-loops have no component)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component's min
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_connected_components(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (5, 5), (3, 4)], "src long, dst long"
-    )
-    comps = {r.node: r.component for r in connected_components(edges).collect()}
+    pairs = [(1, 2), (2, 3), (10, 11), (5, 5), (3, 4)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    comps = {r.node: r.component for r in connected_components_star(edges).collect()}
     assert comps[1] == comps[2] == comps[3] == comps[4] == 1
     assert comps[10] == comps[11] == 10
     assert 5 not in comps  # self-loop only => no edges
-
-
-def test_salted_counts_matches_direct(spark):
-    df = spark.createDataFrame([("a",)] * 50 + [("b",)] * 3, "k string")
-    direct = {r.k: r.n for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    salted = {r.k: r.n for r in salted_counts(df, "k", n_salts=4).collect()}
-    assert direct == salted
+    assert comps == union_find_components(pairs)
 
 
 def test_salted_counts_deterministic_id_salt_matches_direct(spark):
@@ -153,22 +169,16 @@ def test_template_triple_table_pins_kernel():
         assert kernel_triples == triples_for_sentence(sentence), sentence
 
 
-def test_star_cc_matches_label_propagation_on_random_graphs(spark):
-    """large-star/small-star and min-label propagation must compute the
-    identical node->component map (component = min reachable id)."""
+def test_star_cc_matches_union_find_on_random_graphs(spark):
+    """large-star/small-star must compute union-find's node->component map
+    (component = min reachable id)."""
     import random
-
-    from posextract_spark.operators.canonicalize import (
-        connected_components,
-        connected_components_star,
-    )
 
     rng = random.Random(11)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    a = {r.node: r.component for r in connected_components(df).collect()}
     b = {r.node: r.component for r in connected_components_star(df).collect()}
-    assert a == b and len(a) > 0
+    assert b == union_find_components(edges) and len(b) > 0
 
 
 def test_star_cc_logarithmic_on_deep_chain(spark):

@@ -3,7 +3,8 @@
 import pytest
 
 from posextract_spark.kernel.model import Sentence, Token
-from posextract_spark.kernel.pairs import adj_noun_pairs_one, subj_verb_pairs_one
+from posextract_spark.kernel.pairs import adj_noun_pairs_arrays, subj_verb_pairs_arrays
+from posextract_spark.parse.provider import sentence_arrays
 from posextract_spark.posrule import parse_posrule_text, to_python_predicate, to_sql
 from posextract_spark.posrule.parser import Equality, Expr
 from posextract_spark.kernel.triple import TripleExtraction
@@ -11,6 +12,10 @@ from posextract_spark.kernel.triple import TripleExtraction
 
 def S(rows):
     return Sentence([Token(i, *r) for i, r in enumerate(rows)])
+
+
+def A(rows):
+    return sentence_arrays(S(rows))
 
 
 def test_adj_noun_basic_and_negation():
@@ -24,7 +29,7 @@ def test_adj_noun_basic_and_negation():
         ("cat", "cat", "NOUN", "dobj", 3),
         (".", ".", "PUNCT", "punct", 3),
     ]
-    out = adj_noun_pairs_one(S(rows))
+    out = adj_noun_pairs_arrays(A(rows))
     assert out == [
         {"verb_neg": "", "neg_det": "", "adjective": "red", "noun": "dog"},
         {"verb_neg": "", "neg_det": "no", "adjective": "black", "noun": "cat"},
@@ -41,7 +46,7 @@ def test_adj_noun_verb_neg_and_case():
         ("black", "black", "ADJ", "amod", 6),
         ("cats", "cat", "NOUN", "dobj", 4),
     ]
-    out = adj_noun_pairs_one(S(rows), letter_case="upper")
+    out = adj_noun_pairs_arrays(A(rows), letter_case="upper")
     assert out == [{"verb_neg": "NOT", "neg_det": "", "adjective": "BLACK", "noun": "CATS"}]
 
 
@@ -59,7 +64,7 @@ def test_subj_verb_own_subject_only():
         ("and", "and", "CCONJ", "cc", 2),
         ("howl", "howl", "VERB", "conj", 2),  # no own subject -> ref crashes -> skip
     ]
-    out = subj_verb_pairs_one(S(rows))
+    out = subj_verb_pairs_arrays(A(rows))
     assert out == [
         {"subject": "dogs", "verb_neg": "", "verb": "bark"},
     ]
@@ -118,7 +123,7 @@ def test_posrule_empty_raises():
 
 
 def test_subj_verb_keep_modes(spark):
-    """keep=True carries the id columns through the explode; keep=False is
+    """keep=True carries the id columns through the crossing; keep=False is
     the reference's column-drop variant (subj_verb_pairs.py:21-31)."""
     from posextract_spark.operators.pairs import extract_subj_verb_pairs
 

@@ -5,6 +5,7 @@ single-Python-crossing extraction stage, zero shuffles in extraction, and
 the md5-once minhash plan (the Generate-boundary fix). If a refactor
 reintroduces a shuffle or duplicates the hash pass, these fail."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from posextract_spark.operators.dedup import minhash_signatures
@@ -294,6 +295,25 @@ def test_pages_pipeline_python_crossings(spark, tmp_path):
     # Spark/datasource versions; what we pin is that pushdown HAPPENED.
     assert "PushedFilters" in plan
     assert "EqualTo(lang,en)" in plan
+
+
+@pytest.mark.parametrize("op", ["extract_adj_noun_pairs", "extract_subj_verb_pairs"])
+@pytest.mark.parametrize("keep", [True, False])
+def test_pair_operators_one_map_in_pandas(spark, op, keep):
+    """Each pair operator crosses into Python once, through the batch
+    runner's MapInPandas, emitting flat rows: no scalar pandas UDF
+    (ArrowEvalPython) and no JVM explode (Generate)."""
+    from posextract_spark.operators import pairs
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    out = getattr(pairs, op)(
+        docs, text_col="text", id_cols=["doc_id"], provider="svo", keep=keep
+    )
+    plan = _plan(out)
+    assert plan.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in plan
+    assert "Generate" not in plan
+    assert "Exchange" not in plan
 
 
 def test_kg_from_pages_plans_no_python_scans(spark, tmp_path):

@@ -84,19 +84,16 @@ def test_oversized_sentence_dropped(spark):
         max_size=40,
     )
 )
-def test_cc_star_equals_label_propagation(spark, edge_list):
+def test_cc_star_equals_union_find(spark, edge_list):
     """Property: on ANY graph shape hypothesis produces (self-loops, multi
-    components, cycles, stars, chains), large-star/small-star and min-label
-    propagation compute the identical component map."""
-    from posextract_spark.operators.canonicalize import (
-        connected_components,
-        connected_components_star,
-    )
+    components, cycles, stars, chains), large-star/small-star computes
+    union-find's component map."""
+    from posextract_spark.operators.canonicalize import connected_components_star
+    from tests.test_kg_pipeline import union_find_components
 
     df = spark.createDataFrame(edge_list, "src long, dst long")
-    a = {r.node: r.component for r in connected_components(df).collect()}
     b = {r.node: r.component for r in connected_components_star(df).collect()}
-    assert a == b
+    assert b == union_find_components(edge_list)
 
 
 @pytest.fixture(scope="module")

@@ -64,6 +64,17 @@ def test_rule3_relcl_on_subject():
     assert "rule3" in rules_fired(rows)
 
 
+def test_rule3_acl_on_subject():
+    # rule3's other declared dep: an acl verb on the subject noun
+    rows = [
+        T(0, "company", "NOUN", "nsubj", 3),
+        T(1, "owning", "VERB", "acl", 0),
+        T(2, "mines", "NOUN", "dobj", 1),
+        T(3, "failed", "VERB", "ROOT", 3),
+    ]
+    assert "rule3" in rules_fired(rows)
+
+
 def test_rule4_xcomp():
     rows = [
         T(0, "wanted", "VERB", "ROOT", 0),
@@ -135,3 +146,22 @@ def test_dead_rules_never_fire_in_fuzz_corpus():
         for f in extract_triples_one(Sentence.from_rows(rows)):
             fired.add(f["rule"].strip(" <>"))
     assert not fired & {"rule5", "rule9", "rule11", "rule12"}
+
+
+def test_rules_reject_verbs_outside_their_declared_deps():
+    """Each rule's first check reads its declared deps (rules.dep_gate), the
+    set traversal pre-filters by: a verb with any other dep is rejected
+    before the rule reads the subject (None here). rule10 declares no
+    gate."""
+    from types import SimpleNamespace
+
+    from posextract_spark.kernel import traversal
+    from posextract_spark.kernel.rules import RULE_FUNCS, rule10
+
+    assert traversal._RULE_DEP_GATES == tuple(getattr(f, "deps", None) for f in RULE_FUNCS)
+    assert not hasattr(rule10, "deps")
+    gated = [f for f in RULE_FUNCS if f is not rule10]
+    deps = set().union(*(f.deps for f in gated)) | {"nsubj", "dobj"}
+    for rule in gated:
+        for dep in sorted(deps - rule.deps):
+            assert rule(SimpleNamespace(dep=dep), None, None, None) is False, (rule, dep)

@@ -1,5 +1,5 @@
-"""The triples batch function (operators.triples.triples_batches) and the
-fused pages -> triples crossing built on it."""
+"""The batch runner (operators.batches.run_batches) on the triples path,
+and the fused pages -> triples crossing built on it."""
 
 import gc
 import random
@@ -11,14 +11,14 @@ import pytest
 
 from posextract_spark.kernel.extract import extract_triples_one
 from posextract_spark.kernel.quotes import split_quotes_list
-from posextract_spark.operators import triples as triples_mod
+from posextract_spark.operators import batches as batches_mod
 from posextract_spark.operators.html_text import extract_text
 from posextract_spark.operators.sentences import split_sentences
+from posextract_spark.operators.batches import column_docs, run_batches
 from posextract_spark.operators.triples import (
     OUTPUT_STRING_FIELDS,
-    column_docs,
     extract_triples,
-    triples_batches,
+    triple_extract,
 )
 from posextract_spark.options import TripleExtractorOptions
 from posextract_spark.parse import provider as provider_mod
@@ -36,13 +36,13 @@ def _batches(max_docs=0):
     pdf = pd.DataFrame(
         {"id": [1, 2], "text": ["Acme acquired Zorin.", "Bolt bought mines and sold bonds."]}
     )
-    return triples_batches(
+    return run_batches(
         iter([pdf, pdf]),
         partial(column_docs, id_cols=["id"], text_col="text"),
         COLUMNS,
         "template",
         {},
-        TripleExtractorOptions(),
+        triple_extract(),
         max_docs,
     )
 
@@ -50,7 +50,7 @@ def _batches(max_docs=0):
 @pytest.fixture
 def fresh_heap(monkeypatch):
     """Run as a fresh worker would (heap not yet frozen); unfreeze after."""
-    monkeypatch.setattr(triples_mod, "_HEAP_FROZEN", False)
+    monkeypatch.setattr(batches_mod, "_HEAP_FROZEN", False)
     yield
     gc.unfreeze()
 
@@ -112,7 +112,7 @@ def _corpora():
 
 
 def _unreleased_rows(prov, ids, texts, options):
-    """The rows _triple_rows must give, from extract_triples_one over a
+    """The rows the runner must give, from extract_triples_one over a
     fresh parse of each segment that is never released."""
     rows = []
     for doc_ids, text in zip(ids, texts):
@@ -125,9 +125,10 @@ def _unreleased_rows(prov, ids, texts, options):
 
 @pytest.mark.parametrize("opts", [{}, {"combine_adj": True, "prep_phrase": True}])
 def test_released_forest_is_acyclic(opts):
-    """_triple_rows releases every sentence after flattening it: same rows
-    as over unreleased parses, and the parse forest leaves no cyclic
-    garbage (with threshold GC off, a collect right after finds none)."""
+    """The triples extractor releases every sentence after flattening it:
+    same rows as over unreleased parses, and the parse forest leaves no
+    cyclic garbage (with threshold GC off, a collect right after finds
+    none)."""
     options = TripleExtractorOptions(**opts)
     for name, prov, texts in _corpora():
         ids = [(k,) for k in range(len(texts))]
@@ -137,7 +138,7 @@ def test_released_forest_is_acyclic(opts):
         gc.disable()
         try:
             gc.collect()
-            got = triples_mod._triple_rows(prov, ids, texts, options)
+            got = batches_mod._rows(prov, triple_extract(options), ids, texts)
             assert gc.collect() == 0, name
         finally:
             if was_enabled:
@@ -197,13 +198,13 @@ def _task(monkeypatch, prov, texts, options, max_docs, batch=0):
     monkeypatch.setattr(provider_mod, "get_provider", lambda name, **kwargs: prov)
     pdf = pd.DataFrame({"id": range(len(texts)), "text": texts})
     step = batch or len(texts)
-    return triples_batches(
+    return run_batches(
         iter([pdf.iloc[i : i + step] for i in range(0, len(texts), step)]),
         partial(column_docs, id_cols=["id"], text_col="text"),
         COLUMNS,
         "spy",
         {},
-        options,
+        triple_extract(options),
         max_docs,
     )
 
@@ -219,7 +220,7 @@ def _segments(texts):
 @pytest.mark.parametrize("opts", [{}, {"combine_adj": True, "prep_phrase": True}])
 @pytest.mark.parametrize("max_docs,batch", [(0, 0), (0, 50), (7, 50), (64, 0)])
 def test_memo_rows_equal_memo_free(fresh_heap, monkeypatch, opts, max_docs, batch):
-    """The memo changes no row and no row order: triples_batches gives
+    """The memo changes no row and no row order: run_batches gives
     the rows of a fresh parse of every segment."""
     options = TripleExtractorOptions(**opts)
     for name, prov, texts in _repetitive_corpora():
@@ -250,15 +251,15 @@ def test_memo_bounded_by_max_docs(fresh_heap, monkeypatch, max_docs, batch):
     """After each chunk the memo holds at most max_docs entries plus that
     chunk's distinct segments (max_docs <= 0: just the batch's), so it is
     cleared as it fills and never lasts past its task."""
-    real = triples_mod._triple_rows
+    real = batches_mod._rows
     seen = []
 
-    def spy_rows(prov, ids, texts, options, memo=None):
-        rows = real(prov, ids, texts, options, memo)
+    def spy_rows(prov, extract, ids, texts, memo=None):
+        rows = real(prov, extract, ids, texts, memo)
         seen.append((id(memo), len(memo), len(set(_segments(texts)))))
         return rows
 
-    monkeypatch.setattr(triples_mod, "_triple_rows", spy_rows)
+    monkeypatch.setattr(batches_mod, "_rows", spy_rows)
     name, prov, texts = _repetitive_corpora()[0]
     list(_task(monkeypatch, prov, texts, TripleExtractorOptions(), max_docs, batch))
     assert len(seen) > 2

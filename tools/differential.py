@@ -101,13 +101,14 @@ def pairs_differential(anp, svp, corpora) -> dict:
     (SURVEY.md §0.1.3; we define crash -> skip); crashing sentences are
     counted and excluded from the parity stats."""
     from posextract_spark.kernel.model import Sentence
-    from posextract_spark.kernel.pairs import adj_noun_pairs_one, subj_verb_pairs_one
+    from posextract_spark.kernel.pairs import adj_noun_pairs_arrays, subj_verb_pairs_arrays
+    from posextract_spark.parse.provider import sentence_arrays
 
     out = {}
     for label, ref_rule, ours_fn, fields, may_crash in (
-        ("adj_noun_pairs", anp.rule, adj_noun_pairs_one,
+        ("adj_noun_pairs", anp.rule, adj_noun_pairs_arrays,
          ("verb_neg", "neg_det", "adjective", "noun"), False),
-        ("subj_verb_pairs", svp.rule, subj_verb_pairs_one,
+        ("subj_verb_pairs", svp.rule, subj_verb_pairs_arrays,
          ("subject", "verb_neg", "verb"), True),
     ):
         exact = total = crashes = 0
@@ -115,7 +116,7 @@ def pairs_differential(anp, svp, corpora) -> dict:
         for _, sents in corpora:
             for rows in sents:
                 ours = [tuple(d[f] for f in fields)
-                        for d in ours_fn(Sentence.from_rows(rows))]
+                        for d in ours_fn(sentence_arrays(Sentence.from_rows(rows)))]
                 try:
                     ref = [tuple(p) for p in ref_rule(spacy_shim.ShimDoc(rows))]
                 except (UnboundLocalError, AttributeError):

@@ -41,10 +41,9 @@ from posextract_spark.kernel.extract import extract_triples_one  # noqa: E402
 from posextract_spark.kernel.model import Sentence  # noqa: E402
 from posextract_spark.kernel.pairs import (  # noqa: E402
     adj_noun_pairs_arrays,
-    adj_noun_pairs_one,
     subj_verb_pairs_arrays,
-    subj_verb_pairs_one,
 )
+from posextract_spark.operators.pairs import ADJ_NOUN_FIELDS, SUBJ_VERB_FIELDS  # noqa: E402
 from posextract_spark.operators.triples import OUTPUT_STRING_FIELDS  # noqa: E402
 from posextract_spark.options import TripleExtractorOptions  # noqa: E402
 from posextract_spark.parse.provider import sentence_arrays  # noqa: E402
@@ -60,14 +59,10 @@ PROVENANCE = (
 )
 FUZZ_SEED = 1234
 FUZZ_TREES = 2000
-PAIR_FIELDS = {
-    "adj_noun_pairs": ("verb_neg", "neg_det", "adjective", "noun"),
-    "subj_verb_pairs": ("subject", "verb_neg", "verb"),
-}
-# (kind, object-tree extractor, array extractor)
+PAIR_FIELDS = {"adj_noun_pairs": ADJ_NOUN_FIELDS, "subj_verb_pairs": SUBJ_VERB_FIELDS}
 _PAIRS = (
-    ("adj_noun_pairs", adj_noun_pairs_one, adj_noun_pairs_arrays),
-    ("subj_verb_pairs", subj_verb_pairs_one, subj_verb_pairs_arrays),
+    ("adj_noun_pairs", adj_noun_pairs_arrays),
+    ("subj_verb_pairs", subj_verb_pairs_arrays),
 )
 
 
@@ -90,21 +85,17 @@ def _triples(rows, options=None) -> List[List[str]]:
 
 def corpus_outputs(corpora) -> Tuple[Dict[str, str], Dict[Tuple[str, str, int], list]]:
     """({corpus: input digest}, {(corpus, kind, index): rows}) of the
-    kernel on ``corpora`` (tools/differential.build_corpora). Each pair
-    kind is computed by both its object-tree and its array extractor; the
-    array one is keyed ``<kind>_arrays``."""
+    kernel on ``corpora`` (tools/differential.build_corpora); the pair
+    extractors read each tree through ``sentence_arrays``."""
     digests, out = {}, {}
     for name, sents in corpora:
         digests[name] = _digest(sents)
         for k, rows in enumerate(sents):
             out[(name, "triples", k)] = _triples(rows)
-            sent = Sentence.from_rows(rows)
-            for kind, one, arrays in _PAIRS:
+            arrays = sentence_arrays(Sentence.from_rows(rows))
+            for kind, extract in _PAIRS:
                 fields = PAIR_FIELDS[kind]
-                out[(name, kind, k)] = [[p[f] for f in fields] for p in one(sent)]
-                out[(name, kind + "_arrays", k)] = [
-                    [p[f] for f in fields] for p in arrays(sentence_arrays(sent))
-                ]
+                out[(name, kind, k)] = [[p[f] for f in fields] for p in extract(arrays)]
     return digests, out
 
 
@@ -154,7 +145,7 @@ def write(path: str = GOLDEN_PATH) -> None:
     with open(path, "w") as f:
         f.write(json.dumps(header) + "\n")
         for (corpus, kind, index), value in out.items():
-            if value and not kind.endswith("_arrays"):
+            if value:
                 f.write(json.dumps([corpus, kind, index, value]) + "\n")
 
 
@@ -171,16 +162,9 @@ def mismatches(golden, current, limit: int = 5) -> List[str]:
         for name, d in digests.items()
         if header["input_digests"].get(name) != d
     ]
-    # each pair kind is checked twice: object-tree and array extractor
-    expected = dict(want)
-    expected.update(
-        {(c, k + "_arrays", i): v for (c, k, i), v in want.items() if k in PAIR_FIELDS}
-    )
-    bad = [
-        key for key in sorted(set(expected) | set(got)) if expected.get(key, []) != got.get(key, [])
-    ]
+    bad = [key for key in sorted(set(want) | set(got)) if want.get(key, []) != got.get(key, [])]
     errors += [
-        f"{c} {k} #{i}: golden {expected.get((c, k, i), [])} != kernel {got.get((c, k, i), [])}"
+        f"{c} {k} #{i}: golden {want.get((c, k, i), [])} != kernel {got.get((c, k, i), [])}"
         for c, k, i in bad[:limit]
     ]
     if len(bad) > limit:
