@@ -4,9 +4,11 @@ Connected components over co-reference/alias edges is the one operator
 Spark lacks natively (SURVEY.md §4.2). ``connected_components_star`` —
 alternating large-star/small-star (Kiveris et al., "Connected Components
 in MapReduce and Beyond"), O(log n) rounds on any graph shape — is the one
-implementation; ``canonical_clusters`` and ``resolve_canonical_cc`` use
-it. It localCheckpoint()s per round to cut lineage growth and exits early
-on convergence.
+implementation. It localCheckpoint()s per round to cut lineage growth and
+exits early on convergence. ``resolve_canonical_cc`` is the one
+canonicalizer: scored links and co-reference edges through that CC, one
+canonical per surface cluster; pipeline.kg_from_pages links through its
+(surface_norm, canonical) map exactly as through the alias dictionary.
 
 Skew note (north_rule): head entities produce hot keys in the surface-form
 groupBy; ``salted_counts`` demonstrates the two-phase salted aggregation
@@ -128,34 +130,6 @@ def salted_counts(
     salted = df.withColumn("_salt", salt)
     partial = salted.groupBy(key_col, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy(key_col).agg(F.sum("_partial").cast("bigint").alias(count_alias))
-
-
-def canonical_clusters(
-    linked_mentions: DataFrame,
-    alias_df: DataFrame,
-) -> DataFrame:
-    """Cluster surface forms that share a canonical entity (alias edges),
-    then pick the lexicographically-smallest surface as the cluster
-    representative. Returns (surface_norm, cluster_rep)."""
-    from posextract_spark.functions.hashing import portable_hash64
-
-    # alias edges: surface <-> canonical anchor node
-    edges = alias_df.select(
-        portable_hash64(F.col("surface_norm")).alias("src"),
-        portable_hash64(F.concat(F.lit("canon:"), F.col("canonical"))).alias("dst"),
-    )
-    # Default to large-star/small-star: O(log n) rounds on ANY component
-    # shape. min-label propagation is O(diameter) join rounds — a
-    # pronoun-hub co-reference chain at 100x data makes that dozens of
-    # shuffles (VERDICT r2 item 5); star CC is the only safe default.
-    comps = connected_components_star(edges)
-
-    surfaces = alias_df.select(
-        "surface_norm", portable_hash64(F.col("surface_norm")).alias("node")
-    )
-    with_comp = surfaces.join(comps, "node")
-    reps = with_comp.groupBy("component").agg(F.min("surface_norm").alias("cluster_rep"))
-    return with_comp.join(reps, "component").select("surface_norm", "cluster_rep")
 
 
 def coref_edges(

@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from posextract_spark.functions.hashing import portable_hash64
-from posextract_spark.operators.linking import normalize_surface
+from posextract_spark.operators.linking import attach_entities
 
 MAX_SOURCES = 8
 
@@ -52,25 +51,10 @@ def build_nodes(linked_mentions: DataFrame) -> DataFrame:
 
 
 def link_triples(triples: DataFrame, alias_df: DataFrame) -> DataFrame:
-    """Attach subject/object entity ids to triples via the broadcast alias
-    dictionary (two cheap broadcast joins; no shuffle)."""
-    def attach(df: DataFrame, col: str, out: str) -> DataFrame:
-        norm = normalize_surface(F.col(col))
-        a = alias_df.select(
-            F.col("surface_norm").alias(f"_{out}_norm"),
-            F.col("canonical").alias(f"_{out}_canon"),
-        )
-        df = df.withColumn(f"_{out}_norm", norm).join(
-            F.broadcast(a), f"_{out}_norm", "left"
-        )
-        return df.withColumn(
-            out,
-            portable_hash64(F.coalesce(F.col(f"_{out}_canon"), F.col(f"_{out}_norm"))),
-        ).drop(f"_{out}_canon")
-
-    out = attach(triples, "subject", "subject_entity_id")
-    out = attach(out, "object", "object_entity_id")
-    return out
+    """Attach subject_/object_-prefixed entity columns (linking.
+    attach_entities) to triples: two broadcast joins, no shuffle."""
+    out = attach_entities(triples, alias_df, "subject", prefix="subject_")
+    return attach_entities(out, alias_df, "object", prefix="object_")
 
 
 def merge_edge_deltas(base: DataFrame, delta: DataFrame) -> DataFrame:

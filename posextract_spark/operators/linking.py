@@ -1,14 +1,16 @@
-"""Entity linking: broadcast alias-dictionary lookup.
+"""Entity linking: broadcast alias-dictionary lookup (BASELINE.json
+north_star).
 
-mentions (surface strings from triple subjects/objects) are normalized and
-left-joined against a broadcast alias dictionary (surface_norm -> canonical
-entity). Unresolved mentions fall back to a deterministic surface-form
-entity id so downstream stages never see nulls (BASELINE.json north_star:
-"entity linking via broadcast alias-dictionary lookup").
+``attach_entities`` is the KG's one link path, for nodes
+(``link_entities``) and edges (graph.link_triples, subject and object):
+normalize the surface (``normalize_surface``), left-join a broadcast
+(surface_norm -> canonical) table — the alias dictionary, or
+operators.canonicalize.resolve_canonical_cc's map — and fall back to the
+normalized surface, so downstream stages never see null ids.
 
-Scale: the alias dictionary is the small side — explicit F.broadcast keeps
-the join shuffle-free regardless of autoBroadcastJoinThreshold; mention
-traffic stays partitioned as produced by the extraction stage.
+Scale: the table is the small side — explicit F.broadcast keeps the join
+shuffle-free regardless of autoBroadcastJoinThreshold; mention traffic
+stays partitioned as produced by the extraction stage.
 """
 
 from __future__ import annotations
@@ -171,20 +173,35 @@ def resolve_surfaces_scored(
     )
 
 
+def attach_entities(
+    df: DataFrame,
+    table: DataFrame,
+    surface_col: str,
+    prefix: str = "",
+) -> DataFrame:
+    """Adds ({prefix}surface_norm, {prefix}canonical, {prefix}linked,
+    {prefix}entity_id) to ``df``. ``table``: (surface_norm, canonical),
+    surfaces pre-normalized. A miss keeps its normalized surface as
+    canonical (linked = false); entity_id is the portable hash of the
+    canonical. A null surface stays null throughout (the triples batch
+    never emits one: every field it flattens is a string)."""
+    norm, canon = f"{prefix}surface_norm", f"{prefix}canonical"
+    t = table.select(F.col("surface_norm").alias(norm), F.col("canonical").alias(canon))
+    joined = df.withColumn(norm, normalize_surface(F.col(surface_col))).join(
+        F.broadcast(t), norm, "left"
+    )
+    return (
+        joined.withColumn(f"{prefix}linked", F.col(canon).isNotNull())
+        .withColumn(canon, F.coalesce(F.col(canon), F.col(norm)))
+        .withColumn(f"{prefix}entity_id", portable_hash64(F.col(canon)))
+    )
+
+
 def link_entities(
     mentions: DataFrame,
     alias_df: DataFrame,
     surface_col: str = "surface",
 ) -> DataFrame:
-    """Adds (surface_norm, canonical, entity_id, linked).
-
-    alias_df: (surface_norm, canonical). entity_id is the portable hash of
-    the canonical form when linked, of the normalized surface otherwise.
-    """
-    m = mentions.withColumn("surface_norm", normalize_surface(F.col(surface_col)))
-    joined = m.join(F.broadcast(alias_df), "surface_norm", "left")
-    return (
-        joined.withColumn("linked", F.col("canonical").isNotNull())
-        .withColumn("canonical", F.coalesce(F.col("canonical"), F.col("surface_norm")))
-        .withColumn("entity_id", portable_hash64(F.col("canonical")))
-    )
+    """Adds (surface_norm, canonical, linked, entity_id) to mentions
+    (attach_entities). alias_df: (surface_norm, canonical)."""
+    return attach_entities(mentions, alias_df, surface_col)

@@ -8,7 +8,11 @@ pages(url, warc_ts, html, text, lang)
      Python mirror of split_sentences) -> quote split + parse + extract
      (operators.batches.run_batches, the batch function extract_triples
      and the pair operators also run)
-  -> link_triples (broadcast alias joins)
+  -> ONE link table, (surface_norm, canonical): the alias dictionary, or
+     with canonicalize=True the resolved map of
+     operators.canonicalize.resolve_canonical_cc
+  -> link_triples (edges) and link_entities (nodes), both through
+     operators.linking.attach_entities (broadcast joins of that table)
   -> build_edges / build_nodes (grouped aggregation)
 
 Each stage is usable standalone (extract_text, split_sentences and
@@ -102,16 +106,18 @@ def kg_from_pages(
 ):
     """(nodes, edges) from raw pages.
 
-    ``canonicalize=True`` (r6, SURVEY §7.6 full chain) builds the NODES via
-    scored fuzzy linking + co-reference connected components instead of the
-    exact broadcast alias join: distinct mention surfaces are scored against
-    the dictionary (operators.linking.resolve_surfaces_scored), link and
-    co-reference edges feed the O(log n) star CC, and the vocabulary-sized
-    (surface -> cluster-canonical) map is broadcast back onto mention
-    traffic (operators.canonicalize.resolve_canonical_cc). EDGES link
-    through the same map, so every edge endpoint id is a canonical nodes
-    entity_id — a fuzzy/coref merge moves the node AND its edges together
-    (graph consistency, pinned by tests/test_canonicalize_cc.py).
+    Edges and nodes link through ONE (surface_norm, canonical) table and
+    one link path (operators.linking.attach_entities: broadcast left join
+    on the normalized surface, entity_id = portable hash of the
+    canonical), so every edge endpoint id is a nodes entity_id whichever
+    table is used. The table is ``alias_df`` (exact link), or with
+    ``canonicalize=True`` (SURVEY §7.6 full chain) the vocabulary-sized
+    map of operators.canonicalize.resolve_canonical_cc: distinct mention
+    surfaces scored against the dictionary, link and co-reference edges
+    through the O(log n) star CC, one canonical per cluster. That map
+    holds every normalized mention surface, so a fuzzy/coref merge moves
+    the node AND its edges together (pinned by
+    tests/test_canonicalize_cc.py).
 
     ``persist`` caches the triples at the fan-out point — CRITICAL for
     scale: edges and nodes both consume the triples, and
@@ -126,43 +132,20 @@ def kg_from_pages(
     if persist:
         triples = triples.persist()
     mentions = mentions_from_triples(triples, id_cols=("url", "sent_id"))
+    table = alias_df
     if canonicalize:
         from posextract_spark.operators.canonicalize import resolve_canonical_cc
-        from posextract_spark.operators.linking import normalize_surface
 
-        mapping = resolve_canonical_cc(
+        table = resolve_canonical_cc(
             mentions,
             alias_df,
             surface_col="surface",
             min_score_e6=min_score_e6,
             coref_min_sim_e6=coref_min_sim_e6,
             max_block_width=max_block_width,
-        )
-
-        # EDGES must link through the SAME map as the nodes: exact-link
-        # endpoint ids would not join a canonical nodes table whenever a
-        # fuzzy/coref cluster changed a surface's canonical (graph
-        # consistency — every edge endpoint is a node entity_id).
-        def attach(df: DataFrame, col: str, out: str) -> DataFrame:
-            m = mapping.select(
-                F.col("surface_norm").alias(f"_{out}_norm"),
-                F.col("entity_id").alias(out),
-            )
-            return df.withColumn(
-                f"_{out}_norm", normalize_surface(F.col(col))
-            ).join(F.broadcast(m), f"_{out}_norm", "left")
-
-        linked = attach(
-            attach(triples, "subject", "subject_entity_id"),
-            "object",
-            "object_entity_id",
-        )
-        linked_mentions = mentions.withColumn(
-            "surface_norm", normalize_surface(F.col("surface"))
-        ).join(F.broadcast(mapping), "surface_norm")
-    else:
-        linked = link_triples(triples, alias_df)
-        linked_mentions = link_entities(mentions, alias_df)
+        ).select("surface_norm", "canonical")
+    linked = link_triples(triples, table)
+    linked_mentions = link_entities(mentions, table)
     edges = build_edges(linked, source_col="url").withColumn(
         "bucket", F.pmod(F.col("src"), F.lit(n_buckets))
     )

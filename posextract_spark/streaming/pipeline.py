@@ -97,6 +97,7 @@ def streaming_entity_profiles(
     output mode: each batch emits one row per entity TOUCHED in that batch,
     carrying the all-time totals from state.
     """
+    from posextract_spark.operators.linking import normalize_surface
     from posextract_spark.pipeline import pages_to_triples
 
     stream = (
@@ -112,11 +113,11 @@ def streaming_entity_profiles(
         F.explode(
             F.array(
                 F.struct(
-                    F.lower(F.trim(F.col("subject"))).alias("surface_norm"),
+                    normalize_surface(F.col("subject")).alias("surface_norm"),
                     F.lit(1).alias("is_subject"),
                 ),
                 F.struct(
-                    F.lower(F.trim(F.col("object"))).alias("surface_norm"),
+                    normalize_surface(F.col("object")).alias("surface_norm"),
                     F.lit(0).alias("is_subject"),
                 ),
             )

@@ -1,6 +1,8 @@
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout that holds this file, ahead of any installed or other copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pytest
 

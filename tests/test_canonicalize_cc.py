@@ -108,23 +108,26 @@ def test_kg_canonicalize_equals_exact_link_on_alias_only_corpus(spark):
     assert rows(exact_nodes) == rows(cc_nodes)
 
 
-def test_kg_canonicalize_edges_join_canonical_nodes(spark):
-    """Graph consistency under canonicalize=True: every edge endpoint id
-    is an entity_id present in the canonical nodes table — including
-    endpoints whose canonical came from a fuzzy link or a coref cluster
-    (the typo pages force both)."""
+@pytest.mark.parametrize("canonicalize", [False, True])
+def test_kg_canonicalize_edges_join_canonical_nodes(spark, canonicalize):
+    """Graph consistency on both link tables: every edge endpoint id is an
+    entity_id present in the nodes table — under canonicalize=True
+    including endpoints whose canonical came from a fuzzy link or a coref
+    cluster (the typo pages force both)."""
     from posextract_spark.pipeline import kg_from_pages
     from posextract_spark.sources.pages import alias_table, generate_pages, typo_pages
 
     pages = generate_pages(spark, 30, seed=42, n_partitions=2).unionAll(
         typo_pages(spark)
     )
-    nodes, edges = kg_from_pages(pages, alias_table(spark), canonicalize=True)
+    nodes, edges = kg_from_pages(pages, alias_table(spark), canonicalize=canonicalize)
     node_ids = {r.entity_id for r in nodes.select("entity_id").collect()}
     endpoints = {r.src for r in edges.select("src").collect()} | {
         r.dst for r in edges.select("dst").collect()
     }
     assert endpoints and endpoints <= node_ids
+    if not canonicalize:
+        return
     # and the typo surfaces really did merge: AcmeCorpX's mentions flow
     # into the acme node (no separate acmecorpx node exists)
     canons = {r.canonical for r in nodes.select("canonical").collect()}

@@ -1,19 +1,29 @@
-"""canonical_clusters + CLI end-to-end (subprocess) tests."""
+"""resolve_canonical_cc on the alias dictionary + CLI end-to-end
+(subprocess) tests."""
 
 import csv
 import glob
+import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def test_canonical_clusters_groups_aliases(spark):
-    from posextract_spark.operators.canonicalize import canonical_clusters
+
+def test_resolve_canonical_cc_groups_aliases(spark):
+    from pyspark.sql import functions as F
+
+    from posextract_spark.operators.canonicalize import resolve_canonical_cc
     from posextract_spark.sources.pages import alias_table
 
+    aliases = alias_table(spark)
     clusters = {
-        r.surface_norm: r.cluster_rep for r in canonical_clusters(None, alias_table(spark)).collect()
+        r.surface_norm: r.canonical
+        for r in resolve_canonical_cc(
+            aliases.select(F.col("surface_norm").alias("surface")), aliases
+        ).collect()
     }
-    # all acme surfaces share one representative; zorin's differ from acme's
+    # all acme surfaces share one canonical; zorin's differ from acme's
     assert clusters["acme"] == clusters["acmecorp"] == clusters["acmeinc"]
     assert clusters["zorin"] == clusters["zorinltd"] == clusters["zorin holdings"]
     assert clusters["acme"] != clusters["zorin"]
@@ -47,7 +57,7 @@ def test_cli_triples_subprocess(tmp_path):
         capture_output=True,
         text=True,
         timeout=280,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert res.returncode == 0, res.stderr[-2000:]
     rows = []

@@ -56,7 +56,7 @@ def test_goldens_catch_a_broken_rule(golden, corpora, monkeypatch):
 def test_differential_pr_gate():
     # run in a subprocess so the spaCy shim never pollutes this interpreter
     res = subprocess.run(
-        [sys.executable, "/root/repo/tools/differential.py"],
+        [sys.executable, differential.__file__],
         capture_output=True,
         text=True,
         timeout=280,

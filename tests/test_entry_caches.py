@@ -9,10 +9,6 @@ pytest session's ContextCleaner asynchronously unpersists frames dropped
 by earlier tests, so absolute counts are racy.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 SF = "/root/testdata/sf0.001"
 
 

@@ -17,9 +17,6 @@ repo's pre-rewrite r2 code) over thousands of random trees:
 """
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from posextract_spark.kernel.model import Sentence, VerbPhrase
 from posextract_spark.kernel.negation import get_object_neg, get_poa_neg, get_subject_neg

@@ -33,7 +33,11 @@ def test_fuzz_trees_match_goldens():
 )
 def test_fuzz_differential_slice():
     res = subprocess.run(
-        [sys.executable, "/root/repo/tools/fuzz_differential.py", "150"],
+        [
+            sys.executable,
+            os.path.join(os.path.dirname(differential.__file__), "fuzz_differential.py"),
+            "150",
+        ],
         capture_output=True,
         text=True,
         timeout=280,

@@ -14,9 +14,6 @@ triple. Pinned three ways:
 """
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 

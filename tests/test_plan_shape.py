@@ -5,6 +5,8 @@ single-Python-crossing extraction stage, zero shuffles in extraction, and
 the md5-once minhash plan (the Generate-boundary fix). If a refactor
 reintroduces a shuffle or duplicates the hash pass, these fail."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,7 +46,8 @@ def test_minhash_hashes_once(spark):
 
 def test_broadcast_linking_no_shuffle_join(spark):
     from posextract_spark.operators.graph import link_triples
-    from posextract_spark.sources.pages import alias_table
+    from posextract_spark.pipeline import kg_from_pages
+    from posextract_spark.sources.pages import alias_table, generate_pages
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     t = extract_triples(docs, text_col="text", id_cols=["doc_id"], provider="svo")
@@ -52,6 +55,16 @@ def test_broadcast_linking_no_shuffle_join(spark):
     plan = _plan(linked)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    # the canonical path links its edges through the same broadcast joins,
+    # over the canonicalizer's map in place of the dictionary (the map's
+    # own build, vocabulary-sized, may shuffle)
+    pages = generate_pages(spark, 10, seed=1, n_partitions=1)
+    _, edges = kg_from_pages(pages, alias_table(spark), canonicalize=True, persist=False)
+    link_joins = re.findall(r"(\w+Join) \[(\w+_)surface_norm#", _plan(edges))
+    assert sorted(link_joins) == [
+        ("BroadcastHashJoin", "object_"),
+        ("BroadcastHashJoin", "subject_"),
+    ]
 
 
 def test_ivf_assign_no_shuffle(spark):

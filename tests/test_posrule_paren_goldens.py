@@ -28,10 +28,6 @@ that code; each case documents its derivation:
   to an identical tree here.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from posextract_spark.posrule.parser import Equality, Expr, parse_posrule_text
 
 

@@ -98,9 +98,6 @@ def test_semdedup_quality_floor_on_planted_corpus(spark):
     corpus, pruning is PERFECT-precision (no distractor ever pruned) and
     finds >= 70% of the 0.97-cosine planted pairs at the production
     threshold (ceiling = cluster splits, measured in the full harness)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.semdedup_quality import evaluate, planted_corpus
 
     rows, truth = planted_corpus(400, 60)

@@ -1,9 +1,5 @@
 """Golden cases for the URL canonicalization rules (operators/urls.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
 

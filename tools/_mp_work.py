@@ -1,8 +1,9 @@
 """Picklable worker for the multiprocessing control in tools/scaling.py."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def work(texts):

@@ -27,10 +27,11 @@ Usage: python3 tools/dedup_quality.py [--sf /root/testdata/sf0.01]
 """
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -17,10 +17,11 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
 import types
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools import spacy_shim  # noqa: E402
 

@@ -25,11 +25,12 @@ poa-None AttributeError, SURVEY.md T14) are counted and skipped.
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 POS_VOCAB = [
     "NOUN", "NOUN", "NOUN", "PROPN", "PRON", "VERB", "VERB", "AUX", "ADJ",
@@ -81,7 +82,6 @@ OPTION_SETS = [
 
 _SINGLE_MODE_SRC = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from tools.differential import _load_patched_reference
 from tools import spacy_shim
 payload = json.loads(sys.stdin.read())
@@ -96,7 +96,6 @@ print(json.dumps(keys))
 
 
 def _matches_any_hashseed(rows, opts, our_svo, seeds=(0, 1, 2, 3, 4, 5, 6, 7)) -> bool:
-    import os
     import subprocess
 
     payload = json.dumps({"tree": rows, "opts": opts})
@@ -105,6 +104,7 @@ def _matches_any_hashseed(rows, opts, our_svo, seeds=(0, 1, 2, 3, 4, 5, 6, 7)) -
         res = subprocess.run(
             [sys.executable, "-c", _SINGLE_MODE_SRC],
             input=payload, capture_output=True, text=True, env=env, timeout=120,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
         if res.returncode != 0:
             continue

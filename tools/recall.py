@@ -21,10 +21,11 @@ calls), and the vectorized IVF arm is the ann_recall_ivf contract query.
 Usage: python3 tools/recall.py [--sf /root/testdata/sf0.01] [--out RECALL.md]
 """
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
