@@ -5,7 +5,8 @@
 equivalent (SURVEY.md §2, §5.2). Extraction queries are genuinely
 oracle-checked: the deterministic SVO parse provider
 (posextract_spark/parse/svo.py) is constructed so the *real* kernel pipeline
-(pandas UDF -> rules -> explode) has an exact window-function SQL mirror.
+(mapInPandas: parse -> rules -> field rows) has an exact window-function
+SQL mirror.
 """
 
 from __future__ import annotations

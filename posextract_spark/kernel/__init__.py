@@ -1,9 +1,10 @@
 """Pure-Python extraction kernel (zero Spark imports).
 
-Operates on the neutral token-array encoding (one sentence = one list of
-tokens; ``head`` is a token index, ROOT points at itself). The Spark layer
-invokes these functions from Arrow-batched pandas UDFs; the pytest suite
-invokes them directly on fixture parses.
+Operates on the parse arrays (words, lemmas, pos, dep, head, kid_idx) of
+one sentence; ``head`` is a token index, ROOT points at itself
+(kernel.model). The Spark layer invokes these functions from the
+mapInPandas batch function (operators.batches); the pytest suite invokes
+them directly on fixture parses.
 
 Semantics are a faithful re-expression of the reference's rule engine
 (reference: src/posextract/{traversal,rules,util,triple_extraction,

@@ -1,15 +1,19 @@
 """Token / Sentence / VerbPhrase data model.
 
-The kernel consumes a columnar token-array encoding:
+The kernel consumes one parse format, six parallel arrays per sentence:
 
-    tokens: list of (i, text, lemma, pos, dep, head)
+    (words, lemmas, pos, dep, head, kid_idx)
 
 with spaCy-convention coarse POS labels (NOUN, PROPN, PRON, VERB, AUX,
 ADJ, ADV, ADP, PART, DET, SCONJ, ...) and en_core_web_sm dependency labels
 (nsubj, nsubjpass, dobj, pobj, acomp, amod, advmod, attr, dative, prep,
 agent, det, nmod, neg, aux, conj, cc, ccomp, xcomp, pcomp, advcl, relcl,
-acl, csubj, csubjpass, compound, prt, punct, ROOT). ``head`` is a token
-index; the root has ``head == i`` and ``dep == 'ROOT'``.
+acl, csubj, csubjpass, compound, prt, punct, ROOT). ``head`` holds token
+indices; the root has ``head == i`` and ``dep == 'ROOT'``. ``kid_idx`` is
+``kid_index(head)``: each token's child indices in index order. Every
+provider emits these arrays (``ParseProvider.parse_arrays_batch``); the
+pair extractors read them directly and ``Sentence`` wraps them for the
+triple kernel.
 
 ``Token`` mirrors the attribute surface the reference's rule engine reads
 off spaCy tokens (``i``, ``text``, ``lemma_``, ``pos``, ``dep``, ``head``,
@@ -54,9 +58,6 @@ class Token:
     def head(self) -> "Token":
         s = self._sent
         t = s.tokens[self.head_i]
-        # None only on a LazySentence whose head token is not yet
-        # materialized; eager sentences never store None, so the extra
-        # check costs one comparison on the hot path.
         return t if t is not None else s._tok(self.head_i)
 
     @property
@@ -64,9 +65,6 @@ class Token:
         """Children in token-index order (spaCy yields them in order)."""
         s = self._sent
         c = s._children[self.i]
-        # None only on a LazySentence slot not yet built; eager
-        # construction never stores None (a childless slot holds [] from
-        # __init__ or _EMPTY from from_arrays).
         return c if c is not None else s._build_children(self.i)
 
     @property
@@ -77,12 +75,9 @@ class Token:
         collect every token reachable from it through conj edges, excluding
         self. Used by rule10 (reference: src/posextract/rules.py:212-215).
 
-        Walks the parse_view arrays (indices, not Token objects) so a
-        LazySentence materializes only the chain members returned — the
-        object walk scanned every child of the chain head, which on
-        dangling-attachment trees is most of the sentence. Visit order is
-        the object walk's exactly (same LIFO stack over in-order child
-        lists), so the returned order is unchanged.
+        Walks the parse arrays (indices, not Token objects), so only the
+        chain members returned are materialized. Visit order is a LIFO
+        stack over in-order child lists, as an object walk would give.
         """
         s = self._sent
         _, _, dep, head_idx, kid_idx = s.parse_view()
@@ -118,102 +113,102 @@ class Token:
 _EMPTY = ()
 
 
+def kid_index(head: Sequence[int]) -> List[Sequence[int]]:
+    """Each token's child indices, in index order, from the ``head`` array.
+    A self-loop (the root, or an inert dangler) is no child edge.
+    Childless tokens, the majority, share one immutable empty tuple."""
+    kid_idx: List = [None] * len(head)
+    for i, hi in enumerate(head):
+        if hi != i:
+            k = kid_idx[hi]
+            if k is None:
+                kid_idx[hi] = [i]
+            else:
+                k.append(i)
+    return [_EMPTY if k is None else k for k in kid_idx]
+
+
 class Sentence:
-    """One parsed sentence: a token array wired into a tree.
+    """One parsed sentence over its parse arrays.
 
-    ``_soa`` is a lazily-built struct-of-arrays view (per-token bitmask
-    flags + int child/head index arrays) used by the traversal hot path —
-    see kernel.traversal._soa_of. Built once per sentence, it replaces
-    repeated string comparisons across the ~N-verbs-per-sentence searches
-    with single int ops."""
+    The traversal reads the arrays (``parse_view()``) and asks for a
+    ``Token`` only where an emitted triple needs one: ``tokens`` and the
+    per-token child lists are caches that hold ``None`` until a token is
+    touched, so a sentence that emits nothing builds no Token. Iterating
+    or indexing the sentence materializes the tokens it returns.
 
-    __slots__ = ("tokens", "_children", "_kid_idx", "_soa", "_view")
+    ``_soa`` is the traversal's struct-of-arrays view (per-token bitmask
+    flags, candidate tables, subject reach masks), built once per sentence
+    by kernel.traversal._soa_of.
 
-    def __init__(self, tokens: Sequence[Token]):
-        self.tokens: List[Token] = list(tokens)
-        self._soa = None
-        self._view = None
-        self._children: List[List[Token]] = [[] for _ in self.tokens]
-        self._kid_idx: List[List[int]] = [[] for _ in self.tokens]
-        # tokens are iterated in index order, so each child list is already
-        # sorted by token index (spaCy convention) — no sort needed.
-        for tok in self.tokens:
-            tok._sent = self
-            hi = tok.head_i
-            if hi != tok.i:
-                self._children[hi].append(tok)
-                self._kid_idx[hi].append(tok.i)
+    Cycles: a materialized Token points back at its sentence
+    (``Token._sent``), which holds it in ``tokens``, ``_children`` and
+    ``_soa`` — a reference cycle until ``release()`` drops the sentence's
+    side. The triples batch function releases each sentence once its
+    triples are flattened, so refcounting frees the parse forest and the
+    cyclic collector finds nothing (pinned by
+    tests/test_triples_batches.py).
+    """
 
-    @classmethod
-    def from_arrays(
-        cls,
+    __slots__ = ("_arrays", "_view", "_kid_idx", "tokens", "_children", "_soa")
+
+    def __init__(
+        self,
         words: Sequence[str],
         lemmas: Sequence[str],
         pos: Sequence[str],
         dep: Sequence[str],
         head: Sequence[int],
-    ) -> "Sentence":
-        """Fused construction from parallel arrays: one pass creates the
-        tokens AND wires children (providers already hold these arrays;
-        the Token-listcomp + re-iteration in __init__ was ~10% of
-        single-core extraction)."""
-        sent = cls.__new__(cls)
+        kid_idx: Sequence[Sequence[int]],
+    ):
+        """Wrap parse arrays without building any Token; ``kid_idx`` must
+        be ``kid_index(head)``."""
         n = len(words)
-        tokens: List[Token] = [None] * n  # type: ignore[list-item]
-        # Childless tokens (the majority) share ONE immutable empty tuple
-        # instead of each allocating two empty lists — profiled at a third
-        # of parse-side construction. Nothing mutates children after
-        # construction (the build appends are on per-head private lists).
-        children: List = [None] * n
-        kid_idx: List = [None] * n
-        for i in range(n):
-            hi = head[i]
-            tok = Token(i, words[i], lemmas[i], pos[i], dep[i], hi)
-            tok._sent = sent
-            tokens[i] = tok
-            if hi != i:
-                c = children[hi]
-                if c is None:
-                    children[hi] = [tok]
-                    kid_idx[hi] = [i]
-                else:
-                    c.append(tok)
-                    kid_idx[hi].append(i)
-        for i in range(n):
-            if children[i] is None:
-                children[i] = _EMPTY
-                kid_idx[i] = _EMPTY
-        sent.tokens = tokens
-        sent._children = children
-        sent._kid_idx = kid_idx
-        sent._soa = None
-        sent._view = None
-        return sent
+        self._arrays = (words, lemmas, pos, dep, head, kid_idx)
+        self._view = (words, pos, dep, head, kid_idx)
+        self._kid_idx = kid_idx
+        self.tokens: List[Optional[Token]] = [None] * n
+        self._children: List = [None] * n
+        self._soa = None
 
     @classmethod
     def from_rows(cls, rows: Sequence) -> "Sentence":
-        """Build from an iterable of (i, text, lemma, pos, dep, head) rows
-        (tuples, dicts, or pyarrow/pandas struct rows)."""
-        toks = []
-        for r in rows:
-            if isinstance(r, dict):
-                toks.append(Token(int(r["i"]), r["text"], r["lemma"], r["pos"], r["dep"], int(r["head"])))
-            else:
-                toks.append(Token(int(r[0]), r[1], r[2], r[3], r[4], int(r[5])))
-        return cls(toks)
+        """Build from (i, text, lemma, pos, dep, head) rows (tuples, dicts,
+        or pyarrow/pandas struct rows) in index order."""
+        cols = [
+            (r["text"], r["lemma"], r["pos"], r["dep"], r["head"]) if isinstance(r, dict) else r[1:6]
+            for r in rows
+        ]
+        head = [int(c[4]) for c in cols]
+        return cls(
+            [c[0] for c in cols],
+            [c[1] for c in cols],
+            [c[2] for c in cols],
+            [c[3] for c in cols],
+            head,
+            kid_index(head),
+        )
 
-    def children_of(self, i: int) -> List[Token]:
-        c = self._children[i]
-        return c if c is not None else self._build_children(i)
+    def arrays(self) -> tuple:
+        """The (words, lemmas, pos, dep, head, kid_idx) parse arrays."""
+        return self._arrays
+
+    def parse_view(self) -> tuple:
+        """(words, pos, dep, head, kid_idx): the traversal's input view."""
+        return self._view
 
     def _tok(self, i: int) -> Token:
-        """Token at index i (overridden by LazySentence to materialize)."""
-        return self.tokens[i]
+        """The Token at index i, built on first access."""
+        t = self.tokens[i]
+        if t is None:
+            words, lemmas, pos, dep, head, _ = self._arrays
+            t = Token(i, words[i], lemmas[i], pos[i], dep[i], head[i])
+            t._sent = self
+            self.tokens[i] = t
+        return t
 
     def _build_children(self, i: int) -> List[Token]:
-        """Resolve a lazily-unbuilt child list from the int index list.
-        Generic over eager/lazy (``_tok`` dispatches); eager sentences
-        never hit it because construction fills every slot."""
+        """Token i's child list, built from its child indices."""
         kids = self._kid_idx[i]
         c = [self._tok(k) for k in kids] if kids else _EMPTY
         self._children[i] = c
@@ -229,120 +224,17 @@ class Sentence:
         self._children = None
         self._soa = None
 
-    def parse_view(self):
-        """(words, pos, dep, head, kid_idx) parallel arrays — the
-        traversal's input view. Derived (and cached) from the token
-        objects here; LazySentence returns its stored parse arrays
-        without materializing any Token."""
-        v = self._view
-        if v is None:
-            toks = self.tokens
-            v = self._view = (
-                [t.text for t in toks],
-                [t.pos for t in toks],
-                [t.dep for t in toks],
-                [t.head_i for t in toks],
-                self._kid_idx,
-            )
-        return v
-
-    def __iter__(self) -> Iterator[Token]:
-        return iter(self.tokens)
-
-    def __getitem__(self, i: int) -> Token:
-        return self.tokens[i]
-
-    def __len__(self) -> int:
-        return len(self.tokens)
-
-
-class LazySentence(Sentence):
-    """A Sentence over stored parse arrays that materializes Token objects
-    on demand.
-
-    Observably identical to an eager Sentence (pinned by
-    tests/test_lazy_sentence_parity.py over the fuzz-tree corpus): every
-    Token/children/head access resolves through ``_tok``/``_build_children``.
-    Why it exists (r8): the triples path constructs ~50 Token objects per
-    document but the traversal touches only the handful that reach an
-    emitted triple. The traversal reads ``parse_view()`` arrays directly,
-    so a sentence that emits nothing materializes zero tokens.
-
-    Cycles: a materialized Token points back at its sentence
-    (``Token._sent``), which holds it in ``tokens``, ``_children`` and
-    ``_soa`` — a reference cycle until ``release()`` drops the sentence's
-    side. The triples batch function releases each sentence once its
-    triples are flattened, so refcounting frees the parse forest and the
-    cyclic collector finds nothing (pinned by
-    tests/test_triples_batches.py).
-    """
-
-    __slots__ = ("_pv_words", "_pv_lemmas", "_pv_pos", "_pv_dep", "_pv_head")
-
-    def __init__(self, *a, **k):  # pragma: no cover - guard
-        raise TypeError("use LazySentence.from_parse")
-
-    @classmethod
-    def from_parse(
-        cls,
-        words: Sequence[str],
-        lemmas: Sequence[str],
-        pos: Sequence[str],
-        dep: Sequence[str],
-        head: Sequence[int],
-        kid_idx: Sequence,
-    ) -> "LazySentence":
-        """Wrap parse arrays without building any Token. ``kid_idx`` is the
-        per-head child-index list (childless slots may share one immutable
-        empty sequence); self-loop roots must not appear as children,
-        matching Sentence.from_arrays."""
-        sent = cls.__new__(cls)
-        n = len(words)
-        sent._pv_words = words
-        sent._pv_lemmas = lemmas
-        sent._pv_pos = pos
-        sent._pv_dep = dep
-        sent._pv_head = head
-        sent._kid_idx = kid_idx
-        sent.tokens = [None] * n
-        sent._children = [None] * n
-        sent._soa = None
-        sent._view = None
-        return sent
-
-    def _tok(self, i: int) -> Token:
-        t = self.tokens[i]
-        if t is None:
-            t = Token(
-                i,
-                self._pv_words[i],
-                self._pv_lemmas[i],
-                self._pv_pos[i],
-                self._pv_dep[i],
-                self._pv_head[i],
-            )
-            t._sent = self
-            self.tokens[i] = t
-        return t
-
-    def parse_view(self):
-        v = self._view
-        if v is None:
-            v = self._view = (
-                self._pv_words,
-                self._pv_pos,
-                self._pv_dep,
-                self._pv_head,
-                self._kid_idx,
-            )
-        return v
-
     def __iter__(self) -> Iterator[Token]:
         tok = self._tok
-        return iter([tok(i) for i in range(len(self.tokens))])
+        return iter([tok(i) for i in range(len(self._kid_idx))])
 
     def __getitem__(self, i: int) -> Token:
-        return self._tok(i)
+        # range() resolves a negative index (and rejects one out of range)
+        # before the cache slot is picked
+        return self._tok(range(len(self._kid_idx))[i])
+
+    def __len__(self) -> int:
+        return len(self._kid_idx)
 
 
 class VerbPhrase:

@@ -1,12 +1,10 @@
 """Adjective-noun and subject-verb pair extractors.
 
 Re-expression of reference: src/posextract/adj_noun_pairs.py:49-88 and
-subj_verb_pairs.py:49-81 over the provider's parallel token arrays
-(``ParseProvider.parse_arrays_batch``; ``parse.provider.sentence_arrays``
-gives the same view of a parsed Sentence). The extractors read only
-(text, lemma, pos, dep, head, children), so they need no Token or Sentence
-objects: the svo parse spent ~70% of its time allocating Tokens the pair
-extractors then read six fields from.
+subj_verb_pairs.py:49-81 over the provider's parse arrays
+(``ParseProvider.parse_arrays_batch``; ``Sentence.arrays()`` returns a
+sentence's own). The extractors read only (text, lemma, pos, dep, head,
+children), so they need no Token or Sentence objects.
 
 Their output is pinned by ``tests/goldens/kernel.jsonl`` (the reference's
 pairs on the differential corpora), by tests/test_pairs_and_posrule.py and

@@ -31,10 +31,8 @@ def conj_expansions(triple: TripleExtraction) -> List[TripleExtraction]:
         anchor: Token = getattr(triple, attr)
         sent = anchor._sent
         _, pos, dep, _, kid_idx = sent.parse_view()
-        # index DFS (same LIFO order over the same in-order child lists as
-        # the object walk; the visited set keys on index instead of
-        # object id — equivalent, tokens are unique per index): only the
-        # matched conjuncts materialize Tokens on a LazySentence
+        # index DFS (LIFO over the in-order child lists, visited set keyed
+        # on token index): only the matched conjuncts materialize Tokens
         visited = set()
         considering = list(kid_idx[anchor.i])
         while considering:

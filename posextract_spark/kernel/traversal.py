@@ -164,14 +164,12 @@ def _soa_of(sent: Sentence):
                 F_OBJCAND token (all four fields are pure functions of
                 the candidate token), else None.
 
-    r8: the build reads ``sent.parse_view()`` arrays instead of Token
-    attributes and resolves negations by index (_subject_neg_i /
-    _object_neg_i / _poa_neg_i — transcriptions of negation.py's child
-    scans), so on a LazySentence the ONLY Token objects ever constructed
-    are the candidate/negation tokens the emission path can touch.
-    Eager sentences go through the identical code (parse_view derives the
-    arrays once); parity pinned by tests/test_lazy_sentence_parity.py on
-    top of the existing differential.
+    The build reads the ``sent.parse_view()`` arrays and resolves
+    negations by index (_subject_neg_i / _object_neg_i / _poa_neg_i —
+    transcriptions of negation.py's child scans, pinned against them by
+    tests/test_lazy_sentence_parity.py), so the ONLY Token objects it
+    constructs are the candidate/negation tokens the emission path can
+    touch.
     """
     soa = sent._soa
     if soa is None:
@@ -431,9 +429,9 @@ def _emit_for_verb(
     if is_vp:
         neg_adverb, neg_adverb_part = get_verb_neg(verb)
     else:
-        # index form: avoids materializing the verb's full child list on
-        # a LazySentence (the root verb's children are most of the
-        # sentence on dangling-attachment trees)
+        # index form: avoids materializing the verb's full child list
+        # (the root verb's children are most of the sentence on
+        # dangling-attachment trees)
         sent = verb._sent
         words, pos, dep, head_idx, kid_idx2 = sent.parse_view()
         ni = _verb_neg_i(verb.i, kid_idx2, dep, words, pos, head_idx)

@@ -148,10 +148,8 @@ class TripleExtraction:
             out["object_adjectives"] = "[]"
 
         # Child scans over the parse_view arrays (indices, not Token
-        # objects): identical text assembly, but a LazySentence no longer
-        # materializes the verb's full child list — on dangling-attachment
-        # trees that list is most of the sentence (r8; parity pinned by
-        # tests/test_lazy_sentence_parity.py).
+        # objects), so flattening materializes no child list — on
+        # dangling-attachment trees the verb's is most of the sentence.
         subj = self.subject
         words, pos, dep, head_idx, kid_idx = subj._sent.parse_view()
 

@@ -54,10 +54,9 @@ def find_verb_phrases(sent: Sentence) -> List[VerbPhrase]:
     nested loop yields anchors in token order and children in index
     order, which is the same key.
 
-    r8: scans the parse_view arrays (dep/pos/head) instead of Token
-    objects, so on a LazySentence only the matched anchor/child pairs
-    materialize Tokens; a sentence with no advcl/conj/ccomp/xcomp edge
-    (the common case) touches none. The self-loop guard ``head is child``
+    Scans the parse_view arrays (dep/pos/head), so only the matched
+    anchor/child pairs materialize Tokens; a sentence with no
+    advcl/conj/ccomp/xcomp edge (the common case) touches none. The self-loop guard ``head is child``
     becomes ``hi == ci`` (identical: token identity == index equality
     within one sentence)."""
     _, pos, dep, head_idx, _ = sent.parse_view()

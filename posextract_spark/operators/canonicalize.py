@@ -288,7 +288,7 @@ def resolve_canonical_cc(
         .groupBy("component")
         .agg(F.min("surface_norm").alias("_srep"))
     )
-    reps = surf_rep.join(anchor_rep, "component", "left").select(
+    reps = surf_rep.join(F.broadcast(anchor_rep), "component", "left").select(
         "component", F.coalesce(F.col("_arep"), F.col("_srep")).alias("_rep")
     )
     return (

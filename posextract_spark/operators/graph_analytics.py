@@ -214,62 +214,18 @@ def pagerank(
         rank'(v)    = teleport + sum over in-neighbors u of share(u)
         teleport    = ((1_000_000 - damping_e6) * PR_SCALE) div (1_000_000 * N)
 
-    Scale shape per iteration: one join ranks⋈edges on src (ranks is
-    node-sized, edges corpus-sized — sort-merge or AQE-broadcast when ranks
-    is small), one map-side-combinable groupBy(dst), one node-sized left
-    join for teleport. localCheckpoint per round cuts lineage. Hot dst
-    nodes (celebrity entities) receive many shares but aggregate to one
-    BIGINT — partial aggregation absorbs the skew. The only driver-side
-    scalar is N = node count.
+    This is pagerank_weighted() with unit weights on the distinct edges:
+    there out_w(u) = out_deg(u), and its two-step share
+    ((r * d) div 10^6 * 1) div out_deg equals (r * d) div (10^6 * out_deg),
+    since floor(floor(x / a) / b) = floor(x / (a * b)) for integers
+    x >= 0 and a, b > 0.
     """
-    e = (
+    unit = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .persist()
+        .withColumn("w", F.lit(1))
     )
-    try:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionAll(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n = nodes.count()
-        if n == 0:
-            return nodes.select("node", F.lit(0).cast("long").alias("rank_e12"))
-        init = PR_SCALE // n
-        teleport = ((1_000_000 - damping_e6) * PR_SCALE) // (1_000_000 * n)
-        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("outd"))
-        # the edges-with-outdegree frame is loop-INVARIANT: materialize it
-        # once instead of re-running the edges-by-outdeg join inside every
-        # iteration (r8 — one corpus-sized join per round removed; the
-        # ranks join below is the only per-round join left)
-        eo = e.join(outdeg, "src").localCheckpoint(eager=True)
-
-        ranks = nodes.select("node", F.lit(init).cast("long").alias("r"))
-        for _ in range(n_iters):
-            inflow = (
-                eo
-                .join(ranks.withColumnRenamed("node", "src"), "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr(f"(r * {damping_e6}) div (1000000 * outd)").alias("share"),
-                )
-                .groupBy("node")
-                .agg(F.sum("share").alias("inflow"))
-            )
-            ranks = (
-                nodes.join(inflow, "node", "left")
-                .select(
-                    "node",
-                    (F.lit(teleport).cast("long") + F.coalesce(F.col("inflow"), F.lit(0))).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        return ranks.select("node", F.col("r").alias("rank_e12"))
-    finally:
-        e.unpersist()
+    return pagerank_weighted(unit, weight="w", n_iters=n_iters, damping_e6=damping_e6)
 
 
 # --- DuckDB oracle mirrors ---------------------------------------------------
@@ -712,9 +668,14 @@ def pagerank_weighted(
     divide the whole src group by its gcd) — rank is scale-free per
     source, so any per-src common factor is a no-op.
 
-    Scale shape is identical to pagerank(): one src-keyed join + one
-    combinable groupBy(dst) + one node-sized teleport join per iteration,
-    localCheckpoint per round.
+    Scale shape per iteration: one join ranks⋈edges on src (ranks is
+    node-sized, edges corpus-sized — sort-merge or AQE-broadcast when ranks
+    is small), one map-side-combinable groupBy(dst), one node-sized left
+    join for teleport. The edges⋈out-weight join is loop-invariant and
+    materialized once; localCheckpoint per round cuts lineage. Hot dst
+    nodes (celebrity entities) receive many shares but aggregate to one
+    BIGINT — partial aggregation absorbs the skew. The only driver-side
+    scalar is N = node count.
     """
     e = (
         edges.select(
@@ -738,12 +699,14 @@ def pagerank_weighted(
         init = PR_SCALE // n
         teleport = ((1_000_000 - damping_e6) * PR_SCALE) // (1_000_000 * n)
         outw = e.groupBy("src").agg(F.sum("w").cast("long").alias("outw"))
+        # the edges-with-out-weight frame is loop-invariant: materialize it
+        # once, so the ranks join below is the only per-round join
+        eo = e.join(outw, "src").localCheckpoint(eager=True)
 
         ranks = nodes.select("node", F.lit(init).cast("long").alias("r"))
         for _ in range(n_iters):
             inflow = (
-                e.join(outw, "src")
-                .join(ranks.withColumnRenamed("node", "src"), "src")
+                eo.join(ranks.withColumnRenamed("node", "src"), "src")
                 .select(
                     F.col("dst").alias("node"),
                     F.expr(

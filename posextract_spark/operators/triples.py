@@ -54,9 +54,7 @@ def repartition_by_hash(
 def _triple_fields(prov, segments: List[str], options: TripleExtractorOptions) -> Iterator[tuple]:
     """Per segment, the field tuples of its triples (Extract.fields)."""
     get_fields = _FIELDS_GETTER
-    # lazy parse: Token objects materialize only where the traversal
-    # touches them (LazySentence; parity pinned by
-    # tests/test_lazy_sentence_parity.py)
+    # Token objects materialize only where the traversal touches them
     for sent in prov.parse_lazy_batch(segments):
         fields = tuple(map(get_fields, extract_triples_one(sent, options=options)))
         # flattened fields hold only strings: break the sentence's Token

@@ -1,11 +1,15 @@
 """Dependency-parse providers.
 
-The kernel consumes the neutral token-array model; providers produce it:
+Every provider emits one parse format, the parallel arrays
+(words, lemmas, pos, dep, head, kid_idx) per text (``parse_arrays_batch``);
+the pair extractors read them as they are and the triple kernel through a
+``kernel.model.Sentence`` over them (``parse_lazy_batch``):
 
 - ``spacy``   — production path: batched en_core_web_sm via nlp.pipe inside
-                pandas UDFs (mirrors reference: src/posextract/adj_noun_pairs.py:98's
-                batching, applied to *all* surfaces). Guarded import; absent
-                in this sandbox.
+                the mapInPandas batch function (mirrors reference:
+                src/posextract/adj_noun_pairs.py:98's batching, applied to
+                *all* surfaces). Guarded import: without spaCy installed,
+                ``auto`` falls back to ``svo``.
 - ``svo``     — deterministic lexicon-driven SVO chunker for synthetic
                 corpora. Its parse trees are simple enough that the triple
                 extraction over them is *also* expressible in ANSI SQL,

@@ -10,44 +10,23 @@ _SINGLETONS: Dict[str, "ParseProvider"] = {}
 
 
 class ParseProvider:
-    """Interface: batch text -> parsed Sentence (token tree)."""
+    """Interface: batch text -> parse arrays, one tuple per text.
+
+    A provider implements only ``parse_arrays_batch``; the triple kernel's
+    ``Sentence`` view is derived here."""
 
     name = "base"
 
-    def parse_batch(self, texts: List[str]) -> List[Sentence]:
+    def parse_arrays_batch(self, texts: List[str]) -> List[tuple]:
+        """(words, lemmas, pos, dep, head, kid_idx) per text, ``kid_idx``
+        as ``kernel.model.kid_index(head)`` gives it — all the pair
+        extractors read (kernel/pairs.py)."""
         raise NotImplementedError
 
     def parse_lazy_batch(self, texts: List[str]) -> List[Sentence]:
-        """Sentences for the extraction path. Providers that parse to
-        arrays override this to return LazySentence (Token objects
-        materialized on demand — observably identical, pinned by
-        tests/test_lazy_sentence_parity.py); the default is the eager
-        object parse."""
-        return self.parse_batch(texts)
-
-    def parse_arrays_batch(self, texts: List[str]) -> List[tuple]:
-        """Struct-of-arrays encoding (words, lemmas, pos, dep, head,
-        kid_idx) per sentence — all the pair extractors need
-        (kernel/pairs.py array fast paths). Default derives the view from
-        the object parse so every provider supports the array path;
-        providers that can skip Token/Sentence construction entirely
-        override it (parse.svo: ~70% of its parse time was Token
-        allocation the pair extractors never used)."""
-        return [sentence_arrays(sent) for sent in self.parse_batch(texts)]
-
-
-def sentence_arrays(sent: Sentence) -> tuple:
-    """The (words, lemmas, pos, dep, head, kid_idx) view of a parsed
-    Sentence."""
-    toks = sent.tokens
-    return (
-        [t.text for t in toks],
-        [t.lemma_ for t in toks],
-        [t.pos for t in toks],
-        [t.dep for t in toks],
-        [t.head_i for t in toks],
-        sent._kid_idx,
-    )
+        """A ``Sentence`` over each text's parse arrays, for the triple
+        kernel: Token objects materialize only where it touches them."""
+        return [Sentence(*arrays) for arrays in self.parse_arrays_batch(texts)]
 
 
 def get_provider(name: str = "auto", **kwargs) -> ParseProvider:

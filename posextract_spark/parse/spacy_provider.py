@@ -21,7 +21,7 @@ from typing import List
 
 import spacy  # guarded by provider.get_provider
 
-from posextract_spark.kernel.model import Sentence, Token
+from posextract_spark.kernel.model import kid_index
 from posextract_spark.parse.provider import ParseProvider
 
 
@@ -41,12 +41,18 @@ class SpacyParseProvider(ParseProvider):
             self._nlp.add_pipe("merge_noun_chunks")
         self._batch_size = batch_size
 
-    def parse_batch(self, texts: List[str]) -> List[Sentence]:
-        sentences = []
+    def parse_arrays_batch(self, texts: List[str]) -> List[tuple]:
+        out = []
         for doc in self._nlp.pipe(texts, batch_size=self._batch_size):
-            toks = [
-                Token(t.i, t.text, t.lemma_, t.pos_, t.dep_ if t.dep_ else "dep", t.head.i)
-                for t in doc
-            ]
-            sentences.append(Sentence(toks))
-        return sentences
+            head = [t.head.i for t in doc]
+            out.append(
+                (
+                    [t.text for t in doc],
+                    [t.lemma_ for t in doc],
+                    [t.pos_ for t in doc],
+                    [t.dep_ or "dep" for t in doc],
+                    head,
+                    kid_index(head),
+                )
+            )
+        return out

@@ -3,7 +3,8 @@
 Purpose: give the extraction kernel real trees for synthetic bag-of-words
 corpora (like /root/testdata/sf*/documents.parquet) with semantics simple
 enough to mirror in ANSI SQL, so the full Spark pipeline
-(parse UDF -> kernel -> explode) can be verified against a DuckDB oracle.
+(mapInPandas: parse -> kernel -> field rows) can be verified against a
+DuckDB oracle.
 
 Contract (mirrored by posextract_spark.operators.triples.SVO_TRIPLES_CTE):
 
@@ -33,7 +34,7 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from posextract_spark.kernel.model import LazySentence, Sentence, Token
+from posextract_spark.kernel.model import kid_index
 from posextract_spark.parse.provider import ParseProvider
 
 DET_WORDS = frozenset({"the", "a", "an"})
@@ -54,15 +55,12 @@ def classify(word: str) -> str:
     return _POS_MAP.get(word, "NOUN")
 
 
-_EMPTY: tuple = ()
-
-
 class SVOChunkParser(ParseProvider):
     name = "svo"
 
     def _parse_core(self, text: str):
         """(words, pos, dep, head) parallel arrays — the whole parse, no
-        objects. ``head`` is None only for the empty sentence."""
+        objects (all empty for a text with no words)."""
         words = [w for w in text.split(" ") if w]
         n = len(words)
         get_pos = _POS_MAP.get
@@ -87,7 +85,7 @@ class SVOChunkParser(ParseProvider):
             root = 0
             head[0], dep[0] = 0, "ROOT"
         else:
-            return words, pos, dep, None
+            return words, pos, dep, head
 
         prev_obj: Optional[int] = None
         for j, v in enumerate(verb_idxs):
@@ -141,51 +139,11 @@ class SVOChunkParser(ParseProvider):
 
         return words, pos, dep, head
 
-    def parse_one(self, text: str) -> Sentence:
-        words, pos, dep, head = self._parse_core(text)
-        if head is None:
-            return Sentence([])
-        return Sentence.from_arrays(words, words, pos, dep, head)
-
-    def parse_batch(self, texts: List[str]) -> List[Sentence]:
-        return [self.parse_one(t) for t in texts]
-
-    def parse_lazy_batch(self, texts: List[str]) -> List[Sentence]:
-        """LazySentence over the array parse: no Token/Sentence-children
-        objects until the traversal touches one. Same arrays as
-        parse_arrays_batch; parity with parse_batch is pinned by
-        tests/test_lazy_sentence_parity.py."""
-        return [
-            LazySentence.from_parse(*arrays)
-            for arrays in self.parse_arrays_batch(texts)
-        ]
-
     def parse_arrays_batch(self, texts: List[str]) -> List[tuple]:
-        """Direct struct-of-arrays parse: same (words, lemmas, pos, dep,
-        head, kid_idx) view as the base-class conversion, WITHOUT building
-        Token/Sentence objects — the per-token allocations were ~70% of
-        parse_batch and the pair extractors read six fields from them.
-        Childless tokens share one empty tuple (same trick as
-        Sentence.from_arrays); self-loops (inert danglers) emit no child
-        edge, matching the object model."""
+        """The parse arrays; the lemma array is the word array (the
+        lexicon has no lemmas)."""
         out = []
         for text in texts:
             words, pos, dep, head = self._parse_core(text)
-            if head is None:
-                out.append((words, words, pos, dep, [], []))
-                continue
-            n = len(words)
-            kid_idx: List = [None] * n
-            for i in range(n):
-                hi = head[i]
-                if hi != i:
-                    k = kid_idx[hi]
-                    if k is None:
-                        kid_idx[hi] = [i]
-                    else:
-                        k.append(i)
-            for i in range(n):
-                if kid_idx[i] is None:
-                    kid_idx[i] = _EMPTY
-            out.append((words, words, pos, dep, head, kid_idx))
+            out.append((words, words, pos, dep, head, kid_index(head)))
         return out

@@ -14,17 +14,17 @@ from __future__ import annotations
 import re
 from typing import Callable, List, Optional, Tuple
 
-from posextract_spark.kernel.model import Sentence, Token
+from posextract_spark.kernel.model import kid_index
 from posextract_spark.parse.provider import ParseProvider
 from posextract_spark.parse.svo import SVOChunkParser
 
 Row = Tuple[str, str, str, str, int]
 
 
-def _sent(rows: List[Row]) -> Sentence:
-    return Sentence(
-        [Token(i, r[0], r[1], r[2], r[3], r[4]) for i, r in enumerate(rows)]
-    )
+def _arrays(rows: List[Row]) -> tuple:
+    """The parse arrays of a template's rows."""
+    words, lemmas, pos, dep, head = (list(col) for col in zip(*rows))
+    return words, lemmas, pos, dep, head, kid_index(head)
 
 
 _E = r"[A-Z][A-Za-z0-9]*"  # single-token entity (PROPN)
@@ -237,12 +237,14 @@ class TemplateParser(ParseProvider):
     def __init__(self):
         self._fallback = SVOChunkParser()
 
-    def parse_one(self, text: str) -> Sentence:
-        for _, pattern, builder in TEMPLATES:
-            m = pattern.match(text)
-            if m:
-                return _sent(builder(m))
-        return self._fallback.parse_one(text)
-
-    def parse_batch(self, texts: List[str]) -> List[Sentence]:
-        return [self.parse_one(t) for t in texts]
+    def parse_arrays_batch(self, texts: List[str]) -> List[tuple]:
+        out = []
+        for text in texts:
+            for _, pattern, builder in TEMPLATES:
+                m = pattern.match(text)
+                if m:
+                    out.append(_arrays(builder(m)))
+                    break
+            else:
+                out.extend(self._fallback.parse_arrays_batch([text]))
+        return out

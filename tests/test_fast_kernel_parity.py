@@ -116,11 +116,11 @@ def _obj_key(cands):
 def test_reach_masks_equal_forward_subject_search():
     for sent in _sentences(seed=7):
         _, _, _, subj_cands, reach, _ = _soa_of(sent)
-        for tok in sent.tokens:
+        for tok in sent:
             expected = _subj_key(naive_subject_search(tok))
             mask = reach[tok.i]
             got = _subj_key([c for j, c in enumerate(subj_cands) if mask >> j & 1])
-            assert got == expected, (sent.tokens, tok.i, got, expected)
+            assert got == expected, (sent.arrays(), tok.i, got, expected)
             # the public forward implementation must agree too
             assert _subj_key(subject_search(tok)) == expected
             # and the verb-phrase variant against its naive twin
@@ -131,7 +131,7 @@ def test_reach_masks_equal_forward_subject_search():
 
 def test_object_search_equals_naive():
     for sent in _sentences(seed=8):
-        for tok in sent.tokens:
+        for tok in sent:
             assert _obj_key(object_search(tok)) == _obj_key(naive_object_search(tok))
 
 
@@ -139,7 +139,7 @@ def test_gated_rules_equal_full_rule_loop():
     rules_full = tuple((f, " <%s>" % f.__name__) for f in RULE_FUNCS)
     checked = 0
     for sent in _sentences(seed=9, n=3000):
-        verbs = list(sent.tokens) + find_verb_phrases(sent)
+        verbs = list(sent) + find_verb_phrases(sent)
         for verb in verbs:
             is_vp = isinstance(verb, VerbPhrase)
             root = verb.subject_search_root if is_vp else verb

@@ -14,7 +14,7 @@ TP = TemplateParser()
 
 
 def svo(text, options=None):
-    flats = extract_triples_one(TP.parse_one(text), options=options)
+    flats = extract_triples_one(TP.parse_lazy_batch([text])[0], options=options)
     return [(f["subject"], f["verb"], f["object"], f["rule"]) for f in flats]
 
 
@@ -23,7 +23,7 @@ def test_simple_svo():
 
 
 def test_negated_verb():
-    flats = extract_triples_one(TP.parse_one("Acme did not acquire Zorin."))
+    flats = extract_triples_one(TP.parse_lazy_batch(["Acme did not acquire Zorin."])[0])
     assert len(flats) == 1
     t = flats[0]
     assert (t["subject"], t["neg_adverb"], t["verb"], t["object"]) == (
@@ -35,7 +35,7 @@ def test_negated_verb():
 
 
 def test_pobj_with_poa():
-    flats = extract_triples_one(TP.parse_one("Acme invested in Zorin."))
+    flats = extract_triples_one(TP.parse_lazy_batch(["Acme invested in Zorin."])[0])
     assert len(flats) == 1
     assert (flats[0]["subject"], flats[0]["verb"], flats[0]["poa"], flats[0]["object"]) == (
         "Acme",
@@ -111,7 +111,7 @@ def test_combine_adj_folds_advmod():
     # reference README.md:80-89: default emits advmod + acomp rows;
     # --post-combine-adj folds the advmod into object_adjectives.
     rows = extract_triples_one(
-        TP.parse_one("Acme was very profitable."),
+        TP.parse_lazy_batch(["Acme was very profitable."])[0],
         options=TripleExtractorOptions(combine_adj=True),
     )
     assert len(rows) == 1
@@ -121,7 +121,7 @@ def test_combine_adj_folds_advmod():
 
 def test_lemmatize_option():
     rows = extract_triples_one(
-        TP.parse_one("Acme acquired Zorin."),
+        TP.parse_lazy_batch(["Acme acquired Zorin."])[0],
         options=TripleExtractorOptions(lemmatize=True),
     )
     assert (rows[0]["subject"], rows[0]["verb"], rows[0]["object"]) == (
@@ -133,7 +133,7 @@ def test_lemmatize_option():
 
 def test_add_auxiliary():
     rows = extract_triples_one(
-        TP.parse_one("Acme did not acquire Zorin."),
+        TP.parse_lazy_batch(["Acme did not acquire Zorin."])[0],
         options=TripleExtractorOptions(add_auxiliary=True),
     )
     assert rows[0]["aux_verb"] == "did"

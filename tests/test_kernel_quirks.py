@@ -1,6 +1,6 @@
 """Regression tests for the reference's load-bearing quirks (SURVEY.md §0.1)."""
 
-from posextract_spark.kernel.model import Sentence, Token
+from posextract_spark.kernel.model import Sentence
 from posextract_spark.kernel.negation import get_verb_neg
 from posextract_spark.kernel.postprocess import (
     attach_prep_phrase,
@@ -15,7 +15,7 @@ from posextract_spark.parse.template import TemplateParser
 
 
 def S(rows):
-    return Sentence([Token(i, *r) for i, r in enumerate(rows)])
+    return Sentence.from_rows([(i, *r) for i, r in enumerate(rows)])
 
 
 def test_split_quotes_drops_short_prefix_and_skips_post_char():
@@ -68,7 +68,7 @@ def test_combine_adj_drops_verb_phrase_triples():
     # grammatical_triples.py:30-31 'continue' excludes VerbPhrase triples
     # from possible_dupes AND from the rebuilt output.
     tp = TemplateParser()
-    sent = tp.parse_one("Acme said Zorin acquired Initech.")
+    sent = tp.parse_lazy_batch(["Acme said Zorin acquired Initech."])[0]
     rows_default = extract_triples_one(sent)
     rows_combine = extract_triples_one(sent, options=TripleExtractorOptions(combine_adj=True))
     assert ("Acme", "said", "Initech") in {

@@ -163,7 +163,7 @@ def test_template_triple_table_pins_kernel():
     provider = get_provider("template")
     for sentence in sentences:
         kernel_triples = []
-        for seg in provider.parse_batch(split_quotes_list(sentence)):
+        for seg in provider.parse_lazy_batch(split_quotes_list(sentence)):
             for flat in extract_triples_one(seg):
                 kernel_triples.append((flat["subject"], flat["verb"], flat["object"]))
         assert kernel_triples == triples_for_sentence(sentence), sentence

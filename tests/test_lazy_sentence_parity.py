@@ -1,15 +1,17 @@
-"""LazySentence must be observably identical to the eager Sentence.
+"""The one Sentence: lazy Token materialization is observably invisible.
 
-The r8 lazy-materialization rewrite (model.LazySentence + the
-parse_view/arrays-based traversal) may not change a single extracted
-triple. Pinned three ways:
+A Sentence wraps the parse arrays and builds a Token only when one is
+touched. Pinned four ways:
 
-1. full-kernel parity: extract_triples_one over eager Sentence.from_rows
-   vs LazySentence.from_parse on thousands of fuzz trees, across every
-   option set — flattened dicts compared exactly;
-2. SVO provider parity: parse_batch vs parse_lazy_batch over real corpus
-   text (including empty/whitespace/multi-space edge docs);
-3. index-based negation helpers vs the object transcriptions from
+1. full-kernel parity: extract_triples_one on an untouched Sentence equals
+   extract_triples_one on the same tree after every token and child list
+   was materialized first, on thousands of fuzz trees, across every option
+   set — flattened dicts compared exactly;
+2. the same on the SVO provider's parses of corpus-like text (including
+   empty/whitespace/multi-space edge docs);
+3. the Token surface (i, text, lemma_, pos, dep, head, children,
+   conjuncts) against the rows the tree was built from;
+4. index-based negation helpers vs the object transcriptions from
    negation.py on the same fuzz trees.
 """
 
@@ -18,7 +20,7 @@ import random
 import pytest
 
 from posextract_spark.kernel.extract import extract_triples_one
-from posextract_spark.kernel.model import LazySentence, Sentence
+from posextract_spark.kernel.model import Sentence
 from posextract_spark.kernel.negation import (
     get_object_neg,
     get_poa_neg,
@@ -41,34 +43,21 @@ def _tree_rows(seed, n=N_TREES):
         yield [tuple(r.values()) for r in random_tree(rng)]
 
 
-def _lazy_from_rows(rows):
-    words = [r[1] for r in rows]
-    lemmas = [r[2] for r in rows]
-    pos = [r[3] for r in rows]
-    dep = [r[4] for r in rows]
-    head = [int(r[5]) for r in rows]
-    n = len(rows)
-    kid_idx = [None] * n
-    for i, hi in enumerate(head):
-        if hi != i:
-            k = kid_idx[hi]
-            if k is None:
-                kid_idx[hi] = [i]
-            else:
-                k.append(i)
-    empty = ()
-    for i in range(n):
-        if kid_idx[i] is None:
-            kid_idx[i] = empty
-    return LazySentence.from_parse(words, lemmas, pos, dep, head, kid_idx)
+def _materialized(sent):
+    """``sent`` with every token, head and child list built."""
+    for t in sent:
+        t.head
+        t.children
+    assert None not in sent.tokens
+    return sent
 
 
 @pytest.mark.parametrize("opts", OPTION_SETS, ids=[repr(o) for o in OPTION_SETS])
 def test_extraction_identical_eager_vs_lazy(opts):
     options = TripleExtractorOptions(**opts)
     for rows in _tree_rows(seed=1234):
-        eager = Sentence.from_rows(rows)
-        lazy = _lazy_from_rows(rows)
+        eager = _materialized(Sentence.from_rows(rows))
+        lazy = Sentence.from_rows(rows)
         a = extract_triples_one(eager, options=options)
         b = extract_triples_one(lazy, options=options)
         assert a == b, f"divergence on tree {rows}"
@@ -78,7 +67,7 @@ def test_negation_index_helpers_match_object_forms():
     for rows in _tree_rows(seed=777, n=2000):
         sent = Sentence.from_rows(rows)
         words, pos, dep, head_idx, kid_idx = sent.parse_view()
-        for t in sent.tokens:
+        for t in sent:
             sn = get_subject_neg(t)
             sni = _subject_neg_i(t.i, kid_idx, dep, words)
             assert (sn.i if sn is not None else None) == sni
@@ -113,24 +102,48 @@ def test_svo_provider_lazy_batch_matches_eager():
 
     p = SVOChunkParser()
     options = TripleExtractorOptions()
-    eager = [extract_triples_one(s, options=options) for s in p.parse_batch(texts)]
+    eager = [extract_triples_one(_materialized(s), options=options) for s in p.parse_lazy_batch(texts)]
     lazy = [extract_triples_one(s, options=options) for s in p.parse_lazy_batch(texts)]
     assert eager == lazy
+    assert any(eager)
+
+
+def _conjuncts_of(i, dep, head):
+    """spaCy's Token.conjuncts over the rows: ascend conj edges to the
+    chain head, then every token reachable through conj children."""
+    root = i
+    while dep[root] == "conj" and head[root] != root:
+        root = head[root]
+    chain, frontier = {root}, [root]
+    while frontier:
+        x = frontier.pop()
+        for c in range(len(head)):
+            if head[c] == x and c != x and dep[c] == "conj" and c not in chain:
+                chain.add(c)
+                frontier.append(c)
+    return sorted(chain - {i})
 
 
 def test_lazy_sentence_surface():
-    """Public Sentence surface parity: iteration, indexing, children,
-    head, conjuncts."""
+    """The Token surface against the rows themselves: fields, head,
+    children (index order, no self-loops), conjuncts; a token is built
+    only when touched."""
     for rows in _tree_rows(seed=9, n=300):
-        eager = Sentence.from_rows(rows)
-        lazy = _lazy_from_rows(rows)
-        assert len(lazy) == len(eager)
-        for te, tl in zip(eager, lazy):
-            assert (te.i, te.text, te.lemma_, te.pos, te.dep, te.head_i) == (
-                tl.i, tl.text, tl.lemma_, tl.pos, tl.dep, tl.head_i)
-            assert te.head.i == tl.head.i
-            assert [c.i for c in te.children] == [c.i for c in tl.children]
-            assert sorted(c.i for c in te.conjuncts) == sorted(c.i for c in tl.conjuncts)
-        # indexing materializes
-        if len(eager):
-            assert lazy[0].i == 0
+        sent = Sentence.from_rows(rows)
+        n = len(rows)
+        assert len(sent) == n
+        assert sent.tokens == [None] * n
+        if n:
+            assert sent[-1].i == n - 1 and sent[-1] is sent[n - 1]
+            assert sent.tokens[: n - 1] == [None] * (n - 1)
+        dep = [r[4] for r in rows]
+        head = [r[5] for r in rows]
+        for k, t in enumerate(sent):
+            assert (t.i, t.text, t.lemma_, t.pos, t.dep, t.head_i) == rows[k]
+            assert t.head.i == head[k] and t.head is sent[head[k]]
+            want = [c for c in range(n) if head[c] == k and c != k]
+            assert [c.i for c in t.children] == want
+            assert sorted(c.i for c in t.conjuncts) == _conjuncts_of(k, dep, head)
+        assert [list(k) for k in sent.arrays()[5]] == [
+            [c for c in range(n) if head[c] == k and c != k] for k in range(n)
+        ]

@@ -2,20 +2,19 @@
 
 import pytest
 
-from posextract_spark.kernel.model import Sentence, Token
+from posextract_spark.kernel.model import Sentence
 from posextract_spark.kernel.pairs import adj_noun_pairs_arrays, subj_verb_pairs_arrays
-from posextract_spark.parse.provider import sentence_arrays
 from posextract_spark.posrule import parse_posrule_text, to_python_predicate, to_sql
 from posextract_spark.posrule.parser import Equality, Expr
 from posextract_spark.kernel.triple import TripleExtraction
 
 
 def S(rows):
-    return Sentence([Token(i, *r) for i, r in enumerate(rows)])
+    return Sentence.from_rows([(i, *r) for i, r in enumerate(rows)])
 
 
 def A(rows):
-    return sentence_arrays(S(rows))
+    return S(rows).arrays()
 
 
 def test_adj_noun_basic_and_negation():
@@ -149,12 +148,12 @@ def test_posrule_regex_escapes_preserved():
     assert isinstance(node, Equality) and node.value == r"\d+\.\w"
     pred = to_python_predicate(node)
 
-    from posextract_spark.kernel.model import Sentence, Token
+    from posextract_spark.kernel.model import Sentence
     from posextract_spark.kernel.triple import TripleExtraction
 
     def triple(s):
         rows = [(s, s, "NOUN", "nsubj", 1), ("ate", "ate", "VERB", "ROOT", 1), ("x", "x", "NOUN", "dobj", 1)]
-        sent = Sentence([Token(i, *r) for i, r in enumerate(rows)])
+        sent = Sentence.from_rows([(i, *r) for i, r in enumerate(rows)])
         return TripleExtraction(subject=sent[0], verb=sent[1], object=sent[2])
 
     assert pred(triple("42.a"))

@@ -1,58 +1,101 @@
-"""The pair extractors' inputs: provider parity, and hand-built trees.
+"""The pair extractors' inputs: the providers' parse arrays, and
+hand-built trees.
 
 The Spark operators run the array extractors of kernel/pairs.py on the
-provider's direct array parse (``parse_arrays_batch``); the goldens
-(tests/goldens/kernel.jsonl) pin them on ``sentence_arrays`` of the
-differential corpora. This suite pins (a) that the direct array parse
-equals ``sentence_arrays`` of the object parse, on the svo corpus (its own
-no-Sentence parse) and on the template provider (the base-class
-conversion), and (b) the extractors' rows on hand-built trees exercising
-every negation branch the corpora never hit (neg children, neg-det
-subjects, ccomp/xcomp parent inheritance, the dead 'failed to' branch, AUX
-heads, upper casing, lemmatize).
+provider's parse arrays (``parse_arrays_batch``); the goldens
+(tests/goldens/kernel.jsonl) pin them on the differential corpora. This
+suite pins (a) that the arrays are well formed: ``kid_idx`` is the child
+index recomputed from ``head`` on the svo corpus and on the template
+provider, and the template arrays are its builders' rows (svo's arrays for
+text no template matches), and (b) the extractors' rows on hand-built
+trees exercising every negation branch the corpora never hit (neg
+children, neg-det subjects, ccomp/xcomp parent inheritance, the dead
+'failed to' branch, AUX heads, upper casing, lemmatize).
 """
 
 import duckdb
 import pytest
 
-from posextract_spark.kernel.model import Sentence
+from posextract_spark.kernel.model import kid_index
 from posextract_spark.kernel.pairs import adj_noun_pairs_arrays, subj_verb_pairs_arrays
-from posextract_spark.parse.provider import get_provider, sentence_arrays
+from posextract_spark.parse.provider import get_provider
+from posextract_spark.parse.template import TEMPLATES
 
 
-def _assert_provider_parity(provider, texts):
-    want = [sentence_arrays(s) for s in provider.parse_batch(texts)]
-    assert provider.parse_arrays_batch(texts) == want
+def _assert_well_formed(arrays):
+    words, lemmas, pos, dep, head, kid_idx = arrays
+    n = len(words)
+    assert len(lemmas) == len(pos) == len(dep) == len(head) == len(kid_idx) == n
+    assert all(0 <= h < n for h in head)
+    assert [list(k) for k in kid_idx] == [
+        [c for c, h in enumerate(head) if h == p and c != p] for p in range(n)
+    ]
 
 
-def test_svo_corpus_parity_direct_arrays():
+def test_svo_corpus_kid_idx_matches_head():
     texts = (
         duckdb.sql("SELECT text FROM '/root/testdata/sf0.01/documents.parquet'")
         .df()["text"]
         .tolist()
     )
-    _assert_provider_parity(get_provider("svo"), texts)
+    p = get_provider("svo")
+    parsed = p.parse_arrays_batch(texts)
+    assert len(parsed) == len(texts)
+    for text, arrays in zip(texts, parsed):
+        assert arrays[0] == arrays[1] == text.split()
+        _assert_well_formed(arrays)
 
 
-def test_template_provider_parity_default_conversion():
+TEMPLATE_TEXTS = [
+    "Acme acquired Zorin.",
+    "Acme acquired Zorin",
+    "Acme did not acquire Zorin.",
+    "Acme invested in Zorin.",
+    "Acme was profitable.",
+    "Acme was very profitable.",
+    "Acme acquired factories, and mines, and railways.",
+    "Acme bought mines and sold railways.",
+    "The tycoon who owned Acme retired.",
+    "Acme wanted to acquire Zorin.",
+    "Acme said Zorin acquired Initech.",
+    "Zorin Holdings gave up the lawsuit.",
+    "Acme said ",
+    "quickly.",
+]
+FALLBACK_TEXT = "A big query joined the index and the cache."
+
+
+def test_template_arrays_match_rows():
     p = get_provider("template")
-    texts = [
-        "The fast server did not merge the small table.",
-        "Alice never sorted records. Bob filtered no rows quickly.",
-        "A big query joined the index and the cache.",
-    ]
-    _assert_provider_parity(p, texts)
+    texts = TEMPLATE_TEXTS + [FALLBACK_TEXT]
+    parsed = p.parse_arrays_batch(texts)
+    assert len(parsed) == len(texts)
+    used = set()
+    for text, arrays in zip(texts, parsed):
+        _assert_well_formed(arrays)
+        hit = [(name, m, build) for name, pat, build in TEMPLATES if (m := pat.match(text))]
+        if text == FALLBACK_TEXT:
+            assert not hit
+            assert arrays == get_provider("svo").parse_arrays_batch([text])[0]
+            continue
+        name, m, build = hit[0]
+        used.add(name)
+        rows = build(m)
+        assert [tuple(r) for r in zip(*arrays[:5])] == rows, text
+    assert used == {name for name, _, _ in TEMPLATES}
 
 
 def _tree(rows):
-    """rows: (text, pos, dep, head_i); lemma = text + '_L'."""
+    """The parse arrays of rows (text, pos, dep, head_i); lemma = text + '_L'."""
     words = [r[0] for r in rows]
-    return Sentence.from_arrays(
+    head = [r[3] for r in rows]
+    return (
         words,
         [w + "_L" for w in words],
         [r[1] for r in rows],
         [r[2] for r in rows],
-        [r[3] for r in rows],
+        head,
+        kid_index(head),
     )
 
 
@@ -139,7 +182,6 @@ EXPECTED = {
 @pytest.mark.parametrize("sent", ADVERSARIAL_TREES)
 @pytest.mark.parametrize("kw", OPTION_SETS)
 def test_adversarial_negation_tree_parity(sent, kw):
-    arr = sentence_arrays(sent)
     adj, sv = EXPECTED[(ADVERSARIAL_TREES.index(sent), OPTION_SETS.index(kw))]
-    assert [tuple(d.values()) for d in adj_noun_pairs_arrays(arr, **kw)] == adj
-    assert [tuple(d.values()) for d in subj_verb_pairs_arrays(arr, **kw)] == sv
+    assert [tuple(d.values()) for d in adj_noun_pairs_arrays(sent, **kw)] == adj
+    assert [tuple(d.values()) for d in subj_verb_pairs_arrays(sent, **kw)] == sv

@@ -56,15 +56,17 @@ def test_broadcast_linking_no_shuffle_join(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # the canonical path links its edges through the same broadcast joins,
-    # over the canonicalizer's map in place of the dictionary (the map's
-    # own build, vocabulary-sized, may shuffle)
+    # over the canonicalizer's map in place of the dictionary; the map's
+    # own rep/component joins are broadcast too (vocabulary-sized)
     pages = generate_pages(spark, 10, seed=1, n_partitions=1)
     _, edges = kg_from_pages(pages, alias_table(spark), canonicalize=True, persist=False)
-    link_joins = re.findall(r"(\w+Join) \[(\w+_)surface_norm#", _plan(edges))
+    plan = _plan(edges)
+    link_joins = re.findall(r"(\w+Join) \[(\w+_)surface_norm#", plan)
     assert sorted(link_joins) == [
         ("BroadcastHashJoin", "object_"),
         ("BroadcastHashJoin", "subject_"),
     ]
+    assert "SortMergeJoin" not in plan
 
 
 def test_ivf_assign_no_shuffle(spark):

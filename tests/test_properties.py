@@ -41,7 +41,7 @@ def test_split_quotes_total_and_deterministic(doc):
 @given(_WORDS)
 @settings(max_examples=300, deadline=None)
 def test_svo_parser_invariants(words):
-    sent = SVOChunkParser().parse_one(" ".join(words))
+    sent = SVOChunkParser().parse_lazy_batch([" ".join(words)])[0]
     n = len(sent)
     roots = [t for t in sent if t.dep == "ROOT"]
     assert len(roots) == (1 if n else 0)
@@ -56,7 +56,7 @@ def test_svo_parser_invariants(words):
             cur = cur.head
     # kernel never raises and is deterministic on any parse
     a = extract_triples_one(sent)
-    b = extract_triples_one(SVOChunkParser().parse_one(" ".join(words)))
+    b = extract_triples_one(SVOChunkParser().parse_lazy_batch([" ".join(words)])[0])
     assert a == b
     # every triple's S/V/O are words of the document
     for f in a:

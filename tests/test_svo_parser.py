@@ -8,7 +8,7 @@ P = SVOChunkParser()
 
 def triples(text):
     return [
-        (f["subject"], f["verb"], f["object"]) for f in extract_triples_one(P.parse_one(text))
+        (f["subject"], f["verb"], f["object"]) for f in extract_triples_one(P.parse_lazy_batch([text])[0])
     ]
 
 
@@ -45,7 +45,7 @@ def test_dedup_per_document():
 
 
 def test_rule_is_rule2():
-    out = extract_triples_one(P.parse_one("data scan table row merge line"))
+    out = extract_triples_one(P.parse_lazy_batch(["data scan table row merge line"])[0])
     assert {f["rule"] for f in out} == {" <rule2>"}
 
 

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 from posextract_spark.kernel.extract import extract_triples_one
+from posextract_spark.kernel.model import Sentence
 from posextract_spark.kernel.quotes import split_quotes_list
 from posextract_spark.operators import batches as batches_mod
 from posextract_spark.operators.html_text import extract_text
@@ -25,7 +26,7 @@ from posextract_spark.parse import provider as provider_mod
 from posextract_spark.parse.provider import get_provider
 from posextract_spark.pipeline import page_docs, pages_to_triples
 from posextract_spark.sources.pages import _gen_sentences, gen_page, generate_pages
-from tests.test_lazy_sentence_parity import _lazy_from_rows, _tree_rows
+from tests.test_lazy_sentence_parity import _tree_rows
 
 SVO_WORDS = "the a fast slow small big scan merge join sort filter data table row line query".split()
 
@@ -89,13 +90,13 @@ def test_batches_split_into_chunks_of_max_docs(fresh_heap):
 
 class _TreeProvider:
     """Provider whose texts are fuzz-tree numbers: parse_lazy_batch
-    returns a fresh LazySentence of that tree each call."""
+    returns a fresh Sentence of that tree each call."""
 
     def __init__(self, trees):
         self.trees = trees
 
     def parse_lazy_batch(self, texts):
-        return [_lazy_from_rows(self.trees[int(t)]) for t in texts]
+        return [Sentence.from_rows(self.trees[int(t)]) for t in texts]
 
 
 def _corpora():

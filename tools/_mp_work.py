@@ -10,8 +10,4 @@ def work(texts):
     from posextract_spark.kernel.extract import extract_triples_one
     from posextract_spark.parse.svo import SVOChunkParser
 
-    svo = SVOChunkParser()
-    n = 0
-    for t in texts:
-        n += len(extract_triples_one(svo.parse_one(t)))
-    return n
+    return sum(len(extract_triples_one(s)) for s in SVOChunkParser().parse_lazy_batch(texts))

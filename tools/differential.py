@@ -103,7 +103,6 @@ def pairs_differential(anp, svp, corpora) -> dict:
     counted and excluded from the parity stats."""
     from posextract_spark.kernel.model import Sentence
     from posextract_spark.kernel.pairs import adj_noun_pairs_arrays, subj_verb_pairs_arrays
-    from posextract_spark.parse.provider import sentence_arrays
 
     out = {}
     for label, ref_rule, ours_fn, fields, may_crash in (
@@ -117,7 +116,7 @@ def pairs_differential(anp, svp, corpora) -> dict:
         for _, sents in corpora:
             for rows in sents:
                 ours = [tuple(d[f] for f in fields)
-                        for d in ours_fn(sentence_arrays(Sentence.from_rows(rows)))]
+                        for d in ours_fn(Sentence.from_rows(rows).arrays())]
                 try:
                     ref = [tuple(p) for p in ref_rule(spacy_shim.ShimDoc(rows))]
                 except (UnboundLocalError, AttributeError):
@@ -169,7 +168,7 @@ def build_corpora():
         "Acme said Zorin acquired Initech.",
         "Zorin Holdings gave up the lawsuit.",
     ]
-    corpora = [("fixtures", [tokens_of(tp.parse_one(s)) for s in fixture_sentences])]
+    corpora = [("fixtures", [tokens_of(s) for s in tp.parse_lazy_batch(fixture_sentences)])]
 
     # corpus 2: synthetic pages sentences (all template shapes, many fills)
     from posextract_spark.sources.pages import gen_page
@@ -182,7 +181,7 @@ def build_corpora():
             continue
         for raw in _re.split(r"\.|\n", page["text"]):
             if raw and len(raw.split()) >= 5:
-                page_sents.append(tokens_of(tp.parse_one(raw.strip() + ".")))
+                page_sents.append(tokens_of(tp.parse_lazy_batch([raw.strip() + "."])[0]))
     corpora.append(("pages", page_sents))
 
     # corpus 3: svo-parsed documents corpus
@@ -195,7 +194,7 @@ def build_corpora():
             "select text from '/root/testdata/sf0.001/documents.parquet'"
         ).fetchall()
     ]
-    corpora.append(("svo_docs", [tokens_of(svo.parse_one(t)) for t in texts]))
+    corpora.append(("svo_docs", [tokens_of(s) for s in svo.parse_lazy_batch(texts)]))
     return corpora
 
 

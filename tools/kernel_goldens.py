@@ -46,7 +46,6 @@ from posextract_spark.kernel.pairs import (  # noqa: E402
 from posextract_spark.operators.pairs import ADJ_NOUN_FIELDS, SUBJ_VERB_FIELDS  # noqa: E402
 from posextract_spark.operators.triples import OUTPUT_STRING_FIELDS  # noqa: E402
 from posextract_spark.options import TripleExtractorOptions  # noqa: E402
-from posextract_spark.parse.provider import sentence_arrays  # noqa: E402
 
 GOLDEN_PATH = os.path.join(REPO, "tests", "goldens", "kernel.jsonl")
 PROVENANCE = (
@@ -86,13 +85,13 @@ def _triples(rows, options=None) -> List[List[str]]:
 def corpus_outputs(corpora) -> Tuple[Dict[str, str], Dict[Tuple[str, str, int], list]]:
     """({corpus: input digest}, {(corpus, kind, index): rows}) of the
     kernel on ``corpora`` (tools/differential.build_corpora); the pair
-    extractors read each tree through ``sentence_arrays``."""
+    extractors read each tree's parse arrays."""
     digests, out = {}, {}
     for name, sents in corpora:
         digests[name] = _digest(sents)
         for k, rows in enumerate(sents):
             out[(name, "triples", k)] = _triples(rows)
-            arrays = sentence_arrays(Sentence.from_rows(rows))
+            arrays = Sentence.from_rows(rows).arrays()
             for kind, extract in _PAIRS:
                 fields = PAIR_FIELDS[kind]
                 out[(name, kind, k)] = [[p[f] for f in fields] for p in extract(arrays)]
