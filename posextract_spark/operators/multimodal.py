@@ -206,9 +206,6 @@ def image_feature_schema(n_bins: int = 4) -> str:
     )
 
 
-IMAGE_FEATURE_SCHEMA = image_feature_schema(4)
-
-
 def image_features(df: DataFrame, n_bins: int = 4, on_error: str = "skip") -> DataFrame:
     """Decode + feature-extract images: dimensions, mean/std intensity
     (x1e4 fixed-point), n_bins histogram (scalar hist_0..hist_{n-1}).

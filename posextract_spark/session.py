@@ -66,7 +66,7 @@ def build_session(
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
-    # last-wins overrides (e.g. tools/stress_sf1.py re-enables the UI to
+    # last-wins overrides (e.g. tools/stress.py re-enables the UI to
     # read per-stage shuffle/spill metrics over the REST API)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

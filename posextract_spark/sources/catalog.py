@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import partitioning
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
@@ -52,7 +53,9 @@ class PagesCatalog:
             writer = (
                 pages.writeTo(full)
                 .using("iceberg")
-                .partitionedBy(F.bucket(self.n_buckets, "url"), F.days("warc_ts"))
+                .partitionedBy(
+                    partitioning.bucket(self.n_buckets, "url"), partitioning.days("warc_ts")
+                )
             )
             if mode == "overwrite":
                 writer.createOrReplace()

@@ -1,8 +1,11 @@
-"""Local stand-in for the driver's correctness gate.
+"""Local correctness gate over the whole contract.
 
-Runs every __spark_entry__.queries() entry at a given SF and compares
-row count, column names, and an order-insensitive value hash against the
-matching oracle_sql() via DuckDB.
+Runs every row of __spark_entry__.REGISTRY at a given SF, each in its own
+Spark job group, and compares row count, column names, and an
+order-insensitive value hash against the row's oracle SQL via DuckDB. Each
+line reports the query's wall time and the Spark jobs and stages it ran.
+
+Usage: python3 tools/check_contract.py [SF_DIR] [QUERY ...]
 """
 
 from __future__ import annotations
@@ -16,6 +19,8 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.stress import in_job_group, warm_up  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -108,40 +113,25 @@ def main(sf_dir: str, only: list[str]) -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     spark = build_session(app_name="contract-check")
+    # warm BEFORE any timing: the first query would otherwise pay the
+    # worker spawn and be flagged SLOW whatever its plan
+    warm_up(spark)
 
-    # Full-width executor + python-worker warmup BEFORE any timing: the
-    # first query otherwise pays ~7s of JVM/worker spawn and is falsely
-    # flagged SLOW regardless of its plan (same lesson as bench.py — a
-    # narrow warmup warms exactly one worker, hence the repartition).
-    from pyspark.sql import functions as _F
-
-    @_F.pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(4096).repartition(64).select(_warm("id")).count()
-
-    # the driver caps its sweep at 50 queries (CORRECTNESS_r05 evidence);
-    # the LOCAL gate has no cap — it also sweeps the rotated-out
-    # extra_queries() so every oracle-backed query keeps a hard signal
-    qs = dict(entry_mod.queries())
-    if hasattr(entry_mod, "extra_queries"):
-        qs.update(entry_mod.extra_queries())
-    oracles = entry_mod.oracle_sql()
     failures = 0
     spark_secs: dict[str, float] = {}
+    n_jobs = n_stages = 0
 
-    for name, fn in qs.items():
-        if only and name not in only:
+    for q in entry_mod.REGISTRY:
+        if only and q.name not in only:
             continue
-        t0 = time.time()
-        sdf = fn(spark, sf_dir).toPandas()
-        t1 = time.time()
-        spark_secs[name] = t1 - t0
-        if name not in oracles:
-            print(f"{name}: rows={len(sdf)} (rows-only, {t1-t0:.1f}s)")
-            continue
-        odf = con.execute(oracles[name]).df()
+        name = q.name
+        sdf, secs, jobs, stages = in_job_group(
+            spark, name, lambda: q.build(spark, sf_dir).toPandas()
+        )
+        spark_secs[name] = secs
+        n_jobs += jobs
+        n_stages += stages
+        odf = con.execute(q.oracle()).df()
         ok_rows = len(sdf) == len(odf)
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)
         ok_hash = value_hash(sdf) == value_hash(odf) if ok_rows and ok_cols else False
@@ -151,14 +141,13 @@ def main(sf_dir: str, only: list[str]) -> int:
             failures += 1
         print(
             f"{name}: {status} rows={len(sdf)}/{len(odf)} cols_ok={ok_cols} "
-            f"hash_ok={ok_hash} dtypes_ok={ok_dtypes} ({t1-t0:.1f}s)"
+            f"hash_ok={ok_hash} dtypes_ok={ok_dtypes} ({secs:.1f}s, {jobs} jobs, {stages} stages)"
         )
         if not ok_dtypes and ok_cols:
             print(f"  dtype mismatch: {dtype_msg}")
         if status == "FAIL" and ok_cols:
             s = sdf.reindex(sorted(sdf.columns), axis=1)
             o = odf.reindex(sorted(odf.columns), axis=1)
-            key = sorted(sdf.columns)[0]
             print("  spark sample:", s.sort_values(list(s.columns)).head(3).to_dict("records"))
             print("  oracle sample:", o.sort_values(list(o.columns)).head(3).to_dict("records"))
 
@@ -194,7 +183,8 @@ def main(sf_dir: str, only: list[str]) -> int:
     # the pipeline TWICE (stream + batch) plus stream startup, so ~9s is
     # its floor, not a plan defect
     _slow_exempt = {"streaming_batch_equivalence"}
-    print("\nper-query Spark wall-times (slowest first):")
+    print(f"\ncontract queries: {n_jobs} jobs, {n_stages} stages")
+    print("per-query Spark wall-times (slowest first):")
     for name, dt in sorted(spark_secs.items(), key=lambda kv: -kv[1]):
         flag = "  << SLOW (>5s) — check the plan" if dt > 5.0 and name not in _slow_exempt else ""
         print(f"  {dt:6.1f}s  {name}{flag}")
