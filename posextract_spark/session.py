@@ -7,17 +7,36 @@ Settings chosen for the 100 TB design point (and harmless locally):
   up executor-python memory inside the parse/extract UDFs;
 - local parallelism and shuffle partitions default to the host's core
   count, the driver heap to half its physical memory (at most 48g); on a
-  real cluster these are overridden by --conf / AQE coalescing.
+  real cluster these are overridden by --conf / AQE coalescing;
+- for ``local*`` masters, Python workers fork from ``posextract_spark.daemon``,
+  which imports pyarrow, pandas, pyspark's worker and this library once,
+  before it forks, so the workers share those pages instead of each
+  importing its own copy. The JVM starts that daemon as ``python -m
+  posextract_spark.daemon`` before any task has added its files to the
+  worker's ``sys.path``, so the ``sys.path`` entry the driver loaded this
+  package from (a checkout directory or a ``--py-files`` zip) is appended to
+  ``spark.executorEnv.PYTHONPATH``; without it a driver run from another
+  directory, or a ``spark-submit --py-files`` job, fails every Python task
+  with ``No module named 'posextract_spark'``. Other masters keep the stock
+  daemon, since their executors may not have the package before the first
+  task runs. Where the executors have it installed, opt in with
+  ``extra_conf={"spark.python.daemon.module": "posextract_spark.daemon"}``.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
 # the former fixed default, sized for local[32] (an 8g heap GC-thrashed there)
 MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+DAEMON_MODULE = "posextract_spark.daemon"
+EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# the sys.path entry this package was loaded from: <entry>/posextract_spark/
+PACKAGE_ENTRY = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_cpus() -> str:
@@ -33,6 +52,25 @@ def default_driver_memory() -> str:
         return env
     physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     return f"{min(MAX_DRIVER_MEMORY_MB, physical_mb // 2)}m"
+
+
+def python_worker_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus, for a ``local*`` master, the pre-importing
+    daemon (unless ``extra_conf`` names another) and the package's entry
+    appended to ``spark.executorEnv.PYTHONPATH`` (after any entries
+    ``extra_conf`` gives it)."""
+    conf = dict(extra_conf)
+    if not master.startswith("local"):
+        return conf
+    conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+    paths = [p for p in conf.get(EXECUTOR_PYTHONPATH, "").split(os.pathsep) if p]
+    # an installed package's site directory is already on the worker's path;
+    # on PYTHONPATH it would move ahead of the standard library
+    if PACKAGE_ENTRY not in paths and PACKAGE_ENTRY not in site.getsitepackages():
+        paths.append(PACKAGE_ENTRY)
+    if paths:
+        conf[EXECUTOR_PYTHONPATH] = os.pathsep.join(paths)
+    return conf
 
 
 def build_session(
@@ -68,6 +106,6 @@ def build_session(
     )
     # last-wins overrides (e.g. tools/stress.py re-enables the UI to
     # read per-stage shuffle/spill metrics over the REST API)
-    for k, v in (extra_conf or {}).items():
+    for k, v in python_worker_conf(master, extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -53,36 +53,34 @@ def test_pyfiles_zip_matches_working_tree():
 
 def test_spark_submit_pyfiles_e2e(tmp_path):
     """The north rule's literal deployment path, actually executed:
-    ``spark-submit --py-files dist/posextract_spark.zip job.py`` from a
-    directory where the repo is NOT importable, with PYTHONPATH stripped —
-    the zip is the ONLY way the driver and the mapInPandas executors can
-    import posextract_spark. The job runs the linked-pages generator
-    (mapInPandas => executor-side package import) through link extraction
-    and host aggregation, so a broken or incomplete zip fails loudly."""
+    ``spark-submit --py-files posextract_spark.zip job.py`` from a directory
+    where the repo is NOT importable, with PYTHONPATH stripped — the zip,
+    built fresh into ``tmp_path``, is the ONLY way the driver and the
+    executors can import posextract_spark. The job builds its session with
+    ``build_session``, so its Python workers fork from
+    ``posextract_spark.daemon``, started from the zip, and runs the
+    linked-pages generator (mapInPandas => executor-side package import)
+    through link extraction and host aggregation, so a broken or incomplete
+    zip fails loudly."""
     import shutil
     import subprocess
+
+    from tools.make_pyfiles import main as make_pyfiles
 
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:
         pytest.skip("spark-submit not on PATH")
-    zpath = os.path.join(REPO, "dist", "posextract_spark.zip")
-    if not os.path.exists(zpath):
-        pytest.skip("dist zip not built (run tools/make_pyfiles.py)")
+    zpath = make_pyfiles(str(tmp_path / "posextract_spark.zip"))
 
     job = tmp_path / "job.py"
     job.write_text(
         """
-from pyspark.sql import SparkSession
-
-spark = (
-    SparkSession.builder.master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+from posextract_spark.session import build_session
 from posextract_spark.sources.weblinks import linked_pages
 from posextract_spark.operators.weblinks import extract_links, host_graph
 
+spark = build_session(master="local[2]", shuffle_partitions=2)
+assert spark.conf.get("spark.python.daemon.module") == "posextract_spark.daemon"
 n = host_graph(extract_links(linked_pages(spark, 30, seed=42))).count()
 assert n > 0, n
 print("PYFILES_E2E_OK", n)

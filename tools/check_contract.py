@@ -125,9 +125,10 @@ def main(sf_dir: str, only: list[str]) -> int:
         if only and q.name not in only:
             continue
         name = q.name
-        sdf, secs, jobs, stages = in_job_group(
+        sdf, secs, job_ids, stage_ids = in_job_group(
             spark, name, lambda: q.build(spark, sf_dir).toPandas()
         )
+        jobs, stages = len(job_ids), len(stage_ids)
         spark_secs[name] = secs
         n_jobs += jobs
         n_stages += stages

@@ -1,6 +1,7 @@
 """Package the engine for spark-submit --py-files.
 
-Produces dist/posextract_spark.zip containing the package, suitable for:
+Produces dist/posextract_spark.zip (or the path given as the one argument)
+containing the package, suitable for:
 
     spark-submit --py-files dist/posextract_spark.zip \
         --conf spark.sql.adaptive.enabled=true \
@@ -14,15 +15,17 @@ posextract_spark.cli.main).
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    out_dir = os.path.join(REPO, "dist")
-    os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, "posextract_spark.zip")
+def main(out: str | None = None) -> str:
+    """Write the package zip to ``out`` (default dist/posextract_spark.zip)
+    and return its path."""
+    out = out or os.path.join(REPO, "dist", "posextract_spark.zip")
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     pkg = os.path.join(REPO, "posextract_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, _, filenames in os.walk(pkg):
@@ -38,4 +41,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

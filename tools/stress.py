@@ -5,7 +5,8 @@ of ``__spark_entry__.REGISTRY`` over it. Every query is built first; then,
 after one warm-up of the Python workers, each runs as ``.count()`` under a
 timer in its own Spark job group. The run prints one JSON line: per query
 its seconds, rows, jobs and stages, and, from the local UI's REST API, the
-completed stages with the most shuffle and the total spill.
+completed stages with the most shuffle, each with the query it ran under,
+and the total spill.
 
 The directory (``.localdata/sf1`` under the repo) holds two tables, each
 built the first time a named query reads it:
@@ -58,7 +59,7 @@ def warm_up(spark) -> None:
 
 def in_job_group(spark, name: str, action):
     """Run ``action()`` as its own Spark job group; return its result, its
-    seconds, and the number of jobs and stages it ran."""
+    seconds, and the ids of the jobs and of the stages it ran."""
     sc = spark.sparkContext
     group = f"{name}-{time.monotonic_ns()}"
     sc.setJobGroup(group, name)
@@ -72,24 +73,19 @@ def in_job_group(spark, name: str, action):
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = {s for j in jobs if (info := tracker.getJobInfo(j)) for s in info.stageIds}
-    return out, secs, len(jobs), len(stages)
+    return out, secs, jobs, stages
 
 
-def _stage_metrics(spark) -> list[dict]:
-    """All completed stages from the local UI REST API (shuffle + spill)."""
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return []
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app_id}/stages?status=complete") as r:
-            stages = json.load(r)
-    except Exception as e:  # UI disabled or port clash: metrics are best-effort
-        print(f"stress: REST metrics unavailable: {e}", file=sys.stderr)
-        return []
+def stage_rows(stages: list[dict], query_of: dict[int, str]) -> list[dict]:
+    """One row per REST stage record: its shuffle, spill and run time, and
+    ``query_of[stage id]``, the query whose job group ran it (None for a
+    stage outside every query, such as the warm-up's). The REST name of
+    every AQE query stage is the same future's call site, so the query is
+    what tells the rows apart."""
     return [
         {
             "stage": s["stageId"],
+            "query": query_of.get(s["stageId"]),
             "name": s["name"].split("\n")[0][:60],
             "tasks": s["numCompleteTasks"],
             "input_mb": round(s.get("inputBytes", 0) / 1e6, 1),
@@ -101,6 +97,22 @@ def _stage_metrics(spark) -> list[dict]:
         }
         for s in stages
     ]
+
+
+def _stage_metrics(spark, query_of: dict[int, str]) -> list[dict]:
+    """All completed stages from the local UI REST API (shuffle + spill),
+    as ``stage_rows``."""
+    base = spark.sparkContext.uiWebUrl
+    if not base:
+        return []
+    app_id = spark.sparkContext.applicationId
+    try:
+        with urllib.request.urlopen(f"{base}/api/v1/applications/{app_id}/stages?status=complete") as r:
+            stages = json.load(r)
+    except Exception as e:  # UI disabled or port clash: metrics are best-effort
+        print(f"stress: REST metrics unavailable: {e}", file=sys.stderr)
+        return []
+    return stage_rows(stages, query_of)
 
 
 def _build(spark, sf_dir: str, query, make):
@@ -132,15 +144,18 @@ def run(spark, sf_dir: str, names: list[str], make=None) -> dict:
     frames = {n: _build(spark, sf_dir, registry[n], make) for n in names}
     warm_up(spark)
     report = {}
+    query_of: dict[int, str] = {}
     try:
         for name, df in frames.items():
-            rows, secs, jobs, stages = in_job_group(spark, name, df.count)
+            rows, secs, job_ids, stage_ids = in_job_group(spark, name, df.count)
+            query_of.update(dict.fromkeys(stage_ids, name))
+            jobs, stages = len(job_ids), len(stage_ids)
             report[name] = {"sec": round(secs, 2), "rows": rows, "jobs": jobs, "stages": stages}
             print(f"stress: {name} {secs:.1f}s rows={rows} jobs={jobs} stages={stages}",
                   file=sys.stderr)
     finally:
         em.release_caches()
-    stages = _stage_metrics(spark)
+    stages = _stage_metrics(spark, query_of)
     hot = sorted(stages, key=lambda s: -(s["shuffle_read_mb"] + s["shuffle_write_mb"]))[:8]
     return {
         "sf_dir": sf_dir,
