@@ -4,8 +4,9 @@ Connected components over co-reference/alias edges is the one operator
 Spark lacks natively (SURVEY.md §4.2). ``connected_components_star`` —
 alternating large-star/small-star (Kiveris et al., "Connected Components
 in MapReduce and Beyond"), O(log n) rounds on any graph shape — is the one
-implementation. It localCheckpoint()s per round to cut lineage growth and
-exits early on convergence. ``resolve_canonical_cc`` is the one
+implementation. It checkpoints each round to cut lineage growth, and the
+checkpoint's own job fills the convergence probe, so it exits early on
+convergence without a separate probe job. ``resolve_canonical_cc`` is the one
 canonicalizer: scored links and co-reference edges through that CC, one
 canonical per surface cluster; pipeline.kg_from_pages links through its
 (surface_norm, canonical) map exactly as through the alias dictionary.
@@ -19,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from posextract_spark.functions.boundary import checkpoint, materialize
 
 
 def connected_components_star(
@@ -36,29 +39,27 @@ def connected_components_star(
     node ids (any orientation).
 
     Per round: two groupBy-min passes + re-emit (each a single shuffle on
-    node id, map-side combinable), localCheckpoint to cut lineage, and a
-    checksum-based convergence probe (count + sum of edge hashes — one tiny
-    agg instead of an except/subtract anti-join over the full edge set).
+    node id, map-side combinable), then a checkpoint that cuts lineage and,
+    in the same job, observes the edge set's checksum (count + bit_xor of
+    edge hashes). An unchanged checksum is the convergence test: no
+    except/subtract anti-join over the full edge set, and no probe job.
     This is the scale path for adversarially deep graphs (co-reference
     chains across crawl snapshots); the near-star alias graphs the KG stage
     produces converge in 2-3 rounds either way.
     """
-    e = (
+    probes = dict(
+        n=F.count(F.lit(1)),
+        # bit_xor: order-independent and overflow-free under ANSI mode
+        # (sum(xxhash64) throws ARITHMETIC_OVERFLOW on ~dozens of rows)
+        h=F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)),
+    )
+    e, prev = checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        **probes,
     )
-
-    def _checksum(df):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and overflow-free under ANSI mode
-            # (sum(xxhash64) throws ARITHMETIC_OVERFLOW on ~dozens of rows)
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).head()
-        return (row.n, row.h)
 
     def large_star(df):
         # center u: every STRICTLY LARGER neighbor v links to
@@ -87,12 +88,10 @@ def connected_components_star(
             .distinct()
         )
 
-    prev = _checksum(e)
     rounds = 0
     for _ in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint(eager=True)
+        e, cur = checkpoint(small_star(large_star(e)), **probes)
         rounds += 1
-        cur = _checksum(e)
         if cur == prev:
             break
         prev = cur
@@ -153,7 +152,6 @@ def coref_edges(
     as everywhere else. The bigram intersection is materialized ONCE behind
     a Generate boundary (r5 linking-CSE lesson: pasting it three times put
     the O(|a|*|b|) scan in an interpreted projection 3x per pair)."""
-    from posextract_spark.functions.boundary import materialize
     from posextract_spark.functions.hashing import portable_hash64
     from posextract_spark.operators.linking import (
         _bigram_intersection,
@@ -229,7 +227,7 @@ def resolve_canonical_cc(
     mention traffic (pipeline.kg_from_pages canonicalize=True).
 
     Scale shape: every frame here is vocabulary-sized (distinct surfaces),
-    never mention traffic — the scorer output is localCheckpointed once
+    never mention traffic — the scorer output is checkpointed once
     (eager; it has four consumers below and its lineage reaches back
     through the mention extraction), CC is the O(log n) star algorithm,
     and the rep/component joins are broadcast while vocabulary fits an
@@ -238,13 +236,15 @@ def resolve_canonical_cc(
     from posextract_spark.functions.hashing import portable_hash64
     from posextract_spark.operators.linking import resolve_surfaces_scored
 
-    scored = resolve_surfaces_scored(
-        surfaces,
-        alias_df,
-        surface_col=surface_col,
-        min_score_e6=min_score_e6,
-        prefix_len=prefix_len,
-    ).localCheckpoint(eager=True)
+    scored, _ = checkpoint(
+        resolve_surfaces_scored(
+            surfaces,
+            alias_df,
+            surface_col=surface_col,
+            min_score_e6=min_score_e6,
+            prefix_len=prefix_len,
+        )
+    )
 
     anchor_node = portable_hash64(F.concat(F.lit("canon:"), F.col("canonical")))
     linked_rows = scored.filter(F.col("linked") == 1)

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from posextract_spark.functions.boundary import materialize
+from posextract_spark.functions.boundary import checkpoint, materialize
 from posextract_spark.functions.hashing import WORD_ARRAY_SQL, word_array
 
 NEUTRAL_E6 = 500000  # weight of a token carrying zero class evidence
@@ -169,7 +169,7 @@ def quality_classifier_scores(
     score the full corpus. Two passes over the corpus (label+count,
     score) plus the vocabulary-sized aggregate in between.
 
-    The weight table is materialized (eager localCheckpoint) between the
+    The weight table is materialized (eager ``checkpoint``) between the
     passes — it is vocabulary-sized and it has TWO consumers inside
     nb_score_documents (the totals aggregate and the broadcast weight
     join). Without the checkpoint each consumer's broadcast build
@@ -179,7 +179,7 @@ def quality_classifier_scores(
     at bench scale, and both copies contend for the same cores). This is
     also the production shape: the weight table is a reusable model
     artifact — scoring a NEW crawl costs one pass."""
-    w = quality_classifier_weights(docs, text_col=text_col).localCheckpoint(eager=True)
+    w, _ = checkpoint(quality_classifier_weights(docs, text_col=text_col))
     return nb_score_documents(docs, w, text_col=text_col, id_col=id_col)
 
 

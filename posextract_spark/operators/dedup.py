@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from posextract_spark.functions.boundary import cached, checkpoint, materialize
 from posextract_spark.functions.hashing import ngram_array, portable_hash64, word_array
 
 MINHASH_SEEDS = 8
@@ -109,8 +110,6 @@ def _with_base_hashes(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     slice inside the shingle transform's lambda re-evaluates any
     non-attribute subtree per element, so shingling over the raw split
     expression was O(words^2) per document."""
-    from posextract_spark.functions.boundary import materialize
-
     g = materialize(
         df.select(F.col(id_col), F.col(text_col)),
         __words=word_array(F.col(text_col)),
@@ -214,19 +213,19 @@ def minhash_band_pairs(
 
     Cost note (r6, ADVICE r5): with the cap enabled the band-key frame
     has two consumers (the width aggregation and the capped self-join),
-    so it is materialized ONCE here via an eager localCheckpoint — the
-    executed plan has a single scan+shingle+md5 lineage; widths and the
-    join-back both read the checkpointed blocks. localCheckpoint (same
-    mechanism as the CC rounds) needs no caller-side unpersist: blocks
+    so it is materialized ONCE here by ``checkpoint`` (functions/boundary.py,
+    the same eager localCheckpoint as the CC rounds) — the executed plan
+    has a single scan+shingle+md5 lineage; widths and the join-back both
+    read the checkpointed blocks, which need no caller-side release: they
     are reclaimed when the RDD is GC'd. Caveat it inherits: losing an
     executor loses its blocks un-recomputably and fails the job — for
     this diagnostic LISTING query that is the right trade; the survivors
-    path (the production dedup) uses persist+unpersist instead."""
+    path (the production dedup) holds its keys with ``cached`` instead."""
     keys = _band_keys(df, text_col, id_col, n_seeds, band_size)
     if max_bucket_width is not None:
         from posextract_spark.functions.capping import cap_bucket_width
 
-        keys = keys.localCheckpoint(eager=True)
+        keys, _ = checkpoint(keys)
         keys = cap_bucket_width(keys, ["band", "band_key"], id_col, max_bucket_width)
     a, b = keys.alias("a"), keys.alias("b")
     pairs = (
@@ -341,31 +340,28 @@ def minhash_dedup_survivors(
     the pair-join closure is pinned by tests/test_dedup_caps.py; the
     recursive-CTE oracle is algorithm-independent.
 
-    ``keys`` is persisted across the bucket-min construction (r5 review):
+    ``keys`` is cached across the bucket-min construction (r5 review):
     the groupBy bucket-min + join-back consumes the band-key frame TWICE,
-    and without the persist each consumer re-plans the whole
+    and without the cache each consumer re-plans the whole
     scan -> shingle -> md5 -> minhash lineage. ``per_member`` is
-    materialized via eager localCheckpoint: it feeds both the min-graph
+    materialized by ``checkpoint``: it feeds both the min-graph
     edges (consumed inside the eager CC) and the final member mapping
     (consumed lazily by the caller), and the checkpoint both avoids the
-    double scan+shuffle and lets the keys persist be released before
+    double scan+shuffle and lets the keys cache be released before
     returning."""
     from posextract_spark.operators.canonicalize import connected_components_star
 
-    keys = _band_keys(df, text_col, id_col, n_seeds, band_size).persist()
-    try:
+    keys = _band_keys(df, text_col, id_col, n_seeds, band_size)
+    with cached(keys):
         mins = keys.groupBy("band", "band_key").agg(F.min(id_col).alias("_min"))
-        per_member = (
+        per_member, _ = checkpoint(
             keys.join(mins, ["band", "band_key"])
             .groupBy(id_col)
             .agg(
                 F.min("_min").alias("_m0"),
                 F.collect_set("_min").alias("_ms"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        keys.unpersist()
     min_edges = (
         per_member.select(F.explode("_ms").alias("src"), F.col("_m0").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
@@ -417,8 +413,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     alternative re-ran split(text) per language, not a cheap re-scan of a
     materialized BIGINT array). Keeping the filter-scan formulation is
     the measured choice; all three agreed bit-exactly on sum(simhash)."""
-    from posextract_spark.functions.boundary import materialize
-
     g = materialize(
         df.select(F.col(id_col), F.col(text_col)),
         __wh=F.transform(word_array(F.col(text_col)), lambda w: portable_hash64(w)),
@@ -470,8 +464,6 @@ def ngram_jaccard_stats(
     frame a second time (2 FileScans + 2 shingle Generates when capped).
     Deliberate: one extra linear pass buys out of the quadratic
     hot-shingle join; persist the input to amortize."""
-    from posextract_spark.functions.boundary import materialize
-
     g = materialize(
         df.select(F.col(id_col), F.col(text_col)),
         __words=word_array(F.col(text_col)),
@@ -700,8 +692,6 @@ def dup_span_windows(
     the kept windows. Documents shorter than ``window`` tokens emit no
     rows (they cannot contain a duplicated span).
     """
-    from posextract_spark.functions.boundary import materialize
-
     if window < 1 or sample < 1:
         raise ValueError("window and sample must be >= 1")
     mat = materialize(
@@ -748,7 +738,7 @@ def dup_span_stats(
     defined, dup_ratio over the sample is an unbiased estimate of the true
     duplicated-window ratio. Docs with no kept window are absent.
 
-    Scale shape: windows frame persisted across its two consumers (the
+    Scale shape: windows frame cached across its two consumers (the
     duplicate-hash aggregate and the join-back); ONE map-side-combinable
     shuffle on h for the aggregate — a boilerplate span shared by 10^7
     pages is a single counter, never a pair listing — then one shuffle
@@ -757,8 +747,8 @@ def dup_span_stats(
     Compose with a threshold filter for the C4-style 'drop docs that are
     mostly boilerplate' policy (tests/test_dup_spans.py).
     """
-    wins = dup_span_windows(df, text_col, id_col, window, sample).persist()
-    try:
+    wins = dup_span_windows(df, text_col, id_col, window, sample)
+    with cached(wins):
         dup_hashes = (
             wins.groupBy("h")
             .agg(F.countDistinct(id_col).alias("_nd"))
@@ -779,9 +769,7 @@ def dup_span_stats(
                 F.expr("(1000000 * n_dup_windows) div n_windows").alias("dup_ratio_e6"),
             )
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        wins.unpersist()
+        return checkpoint(out)[0]
 
 
 def dup_span_stats_sql(window: int = 4, sample: int = 2) -> str:
@@ -827,8 +815,10 @@ def strip_duplicate_spans(
     must not miss spans); a sampled run (sample > 1) removes only
     anchor-selected spans and is documented as partial.
 
-    Scale shape: the window frame is built once (scan-side) and persisted
-    across its two consumers; duplicated hashes are ONE counter each
+    Scale shape: the window frame is built scan-side and read twice by
+    the returned lazy plan (the duplicate-hash aggregate and the join
+    back), each read from the scan — no cache can outlive this function
+    to serve the caller's action; duplicated hashes are ONE counter each
     (map-side-combinable groupBy, never a pair listing); duplicate
     START POSITIONS come back per doc as one sorted array (bounded by the
     doc's own window count — document-sized, the same bound as the text
@@ -836,39 +826,34 @@ def strip_duplicate_spans(
     the materialized word array: keep token i unless some duplicate
     start p covers it (p <= i+1 < p+window).
     """
-    from posextract_spark.functions.boundary import materialize
-
-    wins = dup_span_windows(df, text_col, id_col, window, sample).persist()
-    try:
-        dup_hashes = (
-            wins.groupBy("h")
-            .agg(F.countDistinct(id_col).alias("_nd"))
-            .filter(F.col("_nd") >= 2)
-            .select("h")
-        )
-        starts = (
-            wins.join(dup_hashes, "h")
-            .groupBy(id_col)
-            .agg(F.sort_array(F.collect_list("pos")).alias("_starts"))
-        )
-        g = materialize(
-            df.select(id_col, text_col), __sds_ws=word_array(F.col(text_col))
-        ).join(starts, id_col, "left")
-        st = F.coalesce(F.col("_starts"), F.array().cast("array<int>"))
-        kept = F.filter(
-            F.col("__sds_ws"),
-            lambda w, i: ~F.exists(
-                st, lambda p: (p <= i + 1) & (i + 1 < p + F.lit(window))
-            ),
-        )
-        return g.select(
-            id_col,
-            F.concat_ws(" ", kept).alias("clean_text"),
-            F.size(kept).cast("long").alias("n_tokens"),
-            (F.size(F.col("__sds_ws")) - F.size(kept)).cast("long").alias("n_removed"),
-        )
-    finally:
-        wins.unpersist()
+    wins = dup_span_windows(df, text_col, id_col, window, sample)
+    dup_hashes = (
+        wins.groupBy("h")
+        .agg(F.countDistinct(id_col).alias("_nd"))
+        .filter(F.col("_nd") >= 2)
+        .select("h")
+    )
+    starts = (
+        wins.join(dup_hashes, "h")
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_list("pos")).alias("_starts"))
+    )
+    g = materialize(
+        df.select(id_col, text_col), __sds_ws=word_array(F.col(text_col))
+    ).join(starts, id_col, "left")
+    st = F.coalesce(F.col("_starts"), F.array().cast("array<int>"))
+    kept = F.filter(
+        F.col("__sds_ws"),
+        lambda w, i: ~F.exists(
+            st, lambda p: (p <= i + 1) & (i + 1 < p + F.lit(window))
+        ),
+    )
+    return g.select(
+        id_col,
+        F.concat_ws(" ", kept).alias("clean_text"),
+        F.size(kept).cast("long").alias("n_tokens"),
+        (F.size(F.col("__sds_ws")) - F.size(kept)).cast("long").alias("n_removed"),
+    )
 
 
 def strip_duplicate_spans_sql(window: int = 4, sample: int = 1) -> str:
@@ -999,8 +984,6 @@ def ngram_jaccard_pairs(
     reproducible), and at 100 TB you run this on a hash-sample of docs or
     behind the cap, never corpus-wide.
     """
-    from posextract_spark.functions.boundary import materialize
-
     g = materialize(
         df.select(F.col(id_col), F.col(text_col)),
         __sh=_shingles(word_array(F.col(text_col))),
@@ -1288,8 +1271,6 @@ def winnow_fingerprints(
     distinct's hash partial. Docs with fewer than window + SHINGLE_N - 1
     words emit no rows (short docs filtered BEFORE sequence(): Spark's
     sequence(1, 0) DESCENDS)."""
-    from posextract_spark.functions.boundary import materialize
-
     g0 = materialize(
         df.select(F.col(id_col), F.col(text_col)),
         __ww=word_array(F.col(text_col)),

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from posextract_spark.functions.boundary import checkpoint
 from posextract_spark.functions.selection import argmax_min_tie
 
 
@@ -316,31 +317,29 @@ def truth_discovery(
     winners).
 
     Scale shape (10^12 claims, 10^8 sources): the distinct claim set is
-    localCheckpointed once and re-read K+1 times; per round there are two
+    checkpointed once and re-read K+1 times; per round there are two
     bounded shuffles over claim traffic (claims⋈trust on source — AQE
     broadcasts trust while the source vocabulary is small — and the
     (src, predicate, dst) vote groupBy, map-side combinable) plus one
     claims⋈winners equi-join for the trust update; trust and winners are
-    localCheckpointed per round so lineage stays O(1), not O(rounds).
+    checkpointed per round so lineage stays O(1), not O(rounds).
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    c = (
+    c, _ = checkpoint(
         claims.select(
             F.col(source).alias("source"),
             F.col(src).alias("src"),
             F.col(predicate).alias("predicate"),
             F.col(dst).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     n_claims = c.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_claims")
     )
-    trust = n_claims.select(
-        "source", F.lit(500000).cast("long").alias("trust_e6")
-    ).localCheckpoint(eager=True)
+    trust, _ = checkpoint(
+        n_claims.select("source", F.lit(500000).cast("long").alias("trust_e6"))
+    )
 
     winners = None
     for _ in range(rounds):
@@ -352,7 +351,7 @@ def truth_discovery(
                 F.count(F.lit(1)).cast("long").alias("n_sources"),
             )
         )
-        winners = (
+        winners, _ = checkpoint(
             scored.groupBy("src", "predicate")
             .agg(
                 F.sum("vote_e6").cast("long").alias("total_e6"),
@@ -368,7 +367,6 @@ def truth_discovery(
                 (-F.col("m.neg")).cast("long").alias("vote_e6"),
                 "total_e6",
             )
-            .localCheckpoint(eager=True)
         )
         wins = (
             c.join(
@@ -378,7 +376,7 @@ def truth_discovery(
             .groupBy("source")
             .agg(F.count(F.lit(1)).cast("long").alias("n_wins"))
         )
-        trust = (
+        trust, _ = checkpoint(
             n_claims.join(wins, "source", "left")
             .select(
                 "source",
@@ -388,7 +386,6 @@ def truth_discovery(
                     "coalesce(n_wins, 0) * 1000000 div n_claims"
                 ).cast("long").alias("trust_e6"),
             )
-            .localCheckpoint(eager=True)
         )
 
     facts = winners.withColumn(

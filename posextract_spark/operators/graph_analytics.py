@@ -25,15 +25,21 @@ Scale design (the part that matters at 10^12 edges):
   unroll the same arithmetic per iteration, giving the driver gate a hard
   hash signal on an *iterative* algorithm (same pattern as the k-means
   oracle, operators/similarity.py);
-- per-iteration localCheckpoint cuts lineage exactly like
-  operators/canonicalize.py's CC loops, keeping the plan O(1) per round
-  instead of O(rounds) deep.
+- every materialization goes through functions/boundary.py: a
+  per-iteration ``checkpoint`` cuts lineage exactly like
+  operators/canonicalize.py's CC loop, keeping the plan O(1) per round
+  instead of O(rounds) deep, and a loop's convergence probe (a count) is
+  observed by that checkpoint's own job, never a second action; frames
+  with several consumers inside one operator are ``cached`` for the
+  block that reads them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from posextract_spark.functions.boundary import cached, checkpoint
 
 #: PageRank fixed-point scale: total rank mass == PR_SCALE (1.0 ≡ 1e12).
 #: Chosen so rank * damping_e6 stays < 2^63 (1e12 * 1e6 = 1e18 < 9.2e18)
@@ -135,27 +141,28 @@ def triangle_counts(
 
     All joins key on node ids; AQE skew-join covers residual imbalance.
     """
-    und = undirected_edges(edges, src, dst).persist()
-    try:
-        deg = (
-            und.select(F.col("a").alias("node"))
-            .unionAll(und.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+    und = undirected_edges(edges, src, dst)
+    deg = (
+        und.select(F.col("a").alias("node"))
+        .unionAll(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+    )
+    # rank = (degree, node) as a comparable struct; orientation u -> v
+    # strictly increasing in rank
+    da = deg.select(F.col("node").alias("a"), F.struct("degree", "node").alias("rank_a"))
+    db = deg.select(F.col("node").alias("b"), F.struct("degree", "node").alias("rank_b"))
+    oriented = (
+        und.join(da, "a")
+        .join(db, "b")
+        .select(
+            F.when(F.col("rank_a") < F.col("rank_b"), F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(F.col("rank_a") < F.col("rank_b"), F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(F.col("rank_a") < F.col("rank_b"), F.col("rank_b")).otherwise(F.col("rank_a")).alias("rank_v"),
         )
-        # rank = (degree, node) as a comparable struct; orientation u -> v
-        # strictly increasing in rank
-        da = deg.select(F.col("node").alias("a"), F.struct("degree", "node").alias("rank_a"))
-        db = deg.select(F.col("node").alias("b"), F.struct("degree", "node").alias("rank_b"))
-        oriented = (
-            und.join(da, "a")
-            .join(db, "b")
-            .select(
-                F.when(F.col("rank_a") < F.col("rank_b"), F.col("a")).otherwise(F.col("b")).alias("u"),
-                F.when(F.col("rank_a") < F.col("rank_b"), F.col("b")).otherwise(F.col("a")).alias("v"),
-                F.when(F.col("rank_a") < F.col("rank_b"), F.col("rank_b")).otherwise(F.col("rank_a")).alias("rank_v"),
-            )
-        ).persist()
+    )
+    # und is persisted first, so the oriented cache reads it
+    with cached(und, oriented):
         # wedges (u; v, w) with rank_v < rank_w — each unordered pair once
         e1 = oriented.select(F.col("u"), F.col("v"), F.col("rank_v"))
         e2 = oriented.select(F.col("u"), F.col("v").alias("w"), F.col("rank_v").alias("rank_w"))
@@ -185,15 +192,9 @@ def triangle_counts(
                 .alias("clustering_e6"),
             )
         )
-        # materialize before unpersisting the two intermediates the plan
-        # still references (localCheckpoint is eager)
-        return out.localCheckpoint(eager=True)
-    finally:
-        und.unpersist()
-        try:
-            oriented.unpersist()
-        except NameError:
-            pass
+        # materialize before the block releases the two intermediates
+        # the plan still references
+        return checkpoint(out)[0]
 
 
 def pagerank(
@@ -354,33 +355,33 @@ def kcore(
     unrolled kcore_sql mirror exactly once the mirror's round count covers
     the peel depth — the oracle gate thereby also pins the convergence.
 
-    Scale shape per round (exactly TWO jobs — the loop is driver-latency
-    bound on small graphs and shuffle bound at 10^12 edges): one
-    map-side-combinable degree groupBy feeding two semi-joins against the
-    survivor node set (AQE broadcasts it once most of the graph peels),
-    then an eager localCheckpoint that both cuts lineage and makes the
-    convergence probe — an edge count over the checkpointed partitions —
-    cheap. Edge removal is the only mutation, so an unchanged edge count IS
-    the fixpoint (a same-size subset is the same set). Rounds needed =
-    peel depth (<= diameter-ish in practice, bounded by max_iter).
+    Scale shape per round (the loop is driver-latency bound on small
+    graphs and shuffle bound at 10^12 edges): one map-side-combinable
+    degree groupBy feeding two semi-joins against the survivor node set
+    (AQE broadcasts it once most of the graph peels), then a checkpoint
+    that cuts lineage and observes the surviving edge count in the same
+    job — the convergence probe costs no job of its own. Edge removal is
+    the only mutation, so an unchanged edge count IS the fixpoint (a
+    same-size subset is the same set). Rounds needed = peel depth
+    (<= diameter-ish in practice, bounded by max_iter).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = adjacency(edges, src, dst).localCheckpoint(eager=True)
-    n_edges = e.count()
+    e, seen = checkpoint(adjacency(edges, src, dst), n=F.count(F.lit(1)))
+    n_edges = seen["n"]
     converged = n_edges == 0
     for _ in range(max_iter):
         if converged:
             break
         deg = e.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("degree"))
         ok = deg.filter(F.col("degree") >= k).select("node")
-        e = (
+        e, seen = checkpoint(
             e.join(ok, "node", "semi")
             .join(ok.withColumnRenamed("node", "nbr"), "nbr", "semi")
-            .select("node", "nbr")
-            .localCheckpoint(eager=True)
+            .select("node", "nbr"),
+            n=F.count(F.lit(1)),
         )
-        n2 = e.count()
+        n2 = seen["n"]
         if n2 == n_edges or n2 == 0:
             converged = True
         n_edges = n2
@@ -478,11 +479,8 @@ def neighbor_jaccard(
     wedge join (keyed on neighbor id, AQE skew-split), one pair groupBy,
     two degree joins keyed on pair endpoints.
     """
-    und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).persist()
-    try:
+    adj = adjacency(edges, src, dst)
+    with cached(adj):
         deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("degree"))
         wedge_src = adj
         if max_neighbor_degree is not None:
@@ -515,11 +513,9 @@ def neighbor_jaccard(
             .filter(F.col("jaccard_e6") >= min_jaccard_e6)
             .select("a", "b", "common", "degree_a", "degree_b", "jaccard_e6")
         )
-        # materialize before unpersisting the adjacency the plan still
-        # references three times (same lifecycle as triangle_counts)
-        return out.localCheckpoint(eager=True)
-    finally:
-        adj.unpersist()
+        # materialize before the block releases the adjacency the plan
+        # still references three times (same lifecycle as triangle_counts)
+        return checkpoint(out)[0]
 
 
 def neighbor_jaccard_sql(
@@ -580,13 +576,10 @@ def label_propagation(
     Scale shape per round: one join keyed on the neighbor id (labels
     frame against adjacency — AQE skew-splits hub fan-in) + one
     map-side-combinable (node, label) count + one struct-min agg per
-    node; localCheckpoint per round keeps the plan O(1) deep. Labels are
+    node; a checkpoint per round keeps the plan O(1) deep. Labels are
     node ids (works for BIGINT entity ids and STRING surfaces alike).
     """
-    und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).localCheckpoint(eager=True)
+    adj, _ = checkpoint(adjacency(edges, src, dst))
     labels = adj.select("node").distinct().withColumn("label", F.col("node"))
     for _ in range(n_iters):
         nbr_labels = adj.join(
@@ -595,7 +588,7 @@ def label_propagation(
         counts = nbr_labels.groupBy("node", "label").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
-        labels = (
+        labels, _ = checkpoint(
             counts.groupBy("node")
             .agg(
                 F.min(
@@ -603,7 +596,6 @@ def label_propagation(
                 ).alias("m")
             )
             .select("node", F.col("m.l").alias("label"))
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -672,10 +664,10 @@ def pagerank_weighted(
     node-sized, edges corpus-sized — sort-merge or AQE-broadcast when ranks
     is small), one map-side-combinable groupBy(dst), one node-sized left
     join for teleport. The edges⋈out-weight join is loop-invariant and
-    materialized once; localCheckpoint per round cuts lineage. Hot dst
+    materialized once; a checkpoint per round cuts lineage. Hot dst
     nodes (celebrity entities) receive many shares but aggregate to one
     BIGINT — partial aggregation absorbs the skew. The only driver-side
-    scalar is N = node count.
+    scalar is N = node count, observed by the node set's checkpoint.
     """
     e = (
         edges.select(
@@ -684,16 +676,15 @@ def pagerank_weighted(
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.sum("w").cast("long").alias("w"))
-        .persist()
     )
-    try:
-        nodes = (
+    with cached(e):
+        nodes, seen = checkpoint(
             e.select(F.col("src").alias("node"))
             .unionAll(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
-        n = nodes.count()
+        n = seen["n"]
         if n == 0:
             return nodes.select("node", F.lit(0).cast("long").alias("rank_e12"))
         init = PR_SCALE // n
@@ -701,7 +692,7 @@ def pagerank_weighted(
         outw = e.groupBy("src").agg(F.sum("w").cast("long").alias("outw"))
         # the edges-with-out-weight frame is loop-invariant: materialize it
         # once, so the ranks join below is the only per-round join
-        eo = e.join(outw, "src").localCheckpoint(eager=True)
+        eo, _ = checkpoint(e.join(outw, "src"))
 
         ranks = nodes.select("node", F.lit(init).cast("long").alias("r"))
         for _ in range(n_iters):
@@ -716,20 +707,16 @@ def pagerank_weighted(
                 .groupBy("node")
                 .agg(F.sum("share").alias("inflow"))
             )
-            ranks = (
-                nodes.join(inflow, "node", "left")
-                .select(
+            ranks, _ = checkpoint(
+                nodes.join(inflow, "node", "left").select(
                     "node",
                     (
                         F.lit(teleport).cast("long")
                         + F.coalesce(F.col("inflow"), F.lit(0))
                     ).alias("r"),
                 )
-                .localCheckpoint(eager=True)
             )
         return ranks.select("node", F.col("r").alias("rank_e12"))
-    finally:
-        e.unpersist()
 
 
 def pagerank_weighted_sql(
@@ -797,34 +784,31 @@ def khop_nodes(
     Scale shape per round: one join of the FRONTIER (only the newest
     layer, not the whole visited set) against the adjacency — frontier
     size is bounded by the layer, so later rounds don't rescan earlier
-    layers; one distinct; one anti-join against visited. localCheckpoint
-    per round. Exactly k rounds (early-exits when a frontier drains).
+    layers; one distinct; one anti-join against visited. A checkpoint per
+    round, whose job also counts the new layer: exactly k rounds, with an
+    early exit when a frontier drains.
     """
-    und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).localCheckpoint(eager=True)
+    adj, _ = checkpoint(adjacency(edges, src, dst))
     seed_col = seeds.columns[0]
-    visited = (
+    visited, _ = checkpoint(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     frontier = visited.select("node")
     for i in range(1, k + 1):
-        nxt = (
+        nxt, seen = checkpoint(
             adj.join(frontier, "node")
             .select(F.col("nbr").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "anti")
-            .localCheckpoint(eager=True)
+            .join(visited.select("node"), "node", "anti"),
+            n=F.count(F.lit(1)),
         )
-        if not nxt.head(1):
+        if seen["n"] == 0:
             break
-        visited = visited.unionAll(
-            nxt.withColumn("hop", F.lit(i).cast("long"))
-        ).localCheckpoint(eager=True)
+        visited, _ = checkpoint(
+            visited.unionAll(nxt.withColumn("hop", F.lit(i).cast("long")))
+        )
         frontier = nxt
     return visited
 
@@ -888,8 +872,9 @@ def transitive_closure(
     Scale shape per round: one self-join shuffled on the mid node + one
     min groupBy (map-side combinable), depth capped at ``max_depth`` so
     intermediate pairs never exceed the final output's reach;
-    localCheckpoint cuts lineage per round and a count probe early-exits
-    once the pair set stops growing. Cycle-safe: reflexive pairs are
+    a checkpoint cuts lineage per round and observes the pair count in the
+    same job, so the loop early-exits once the pair set stops growing
+    without a probe job. Cycle-safe: reflexive pairs are
     dropped and min-depth grouping keeps cyclic graphs finite. Hub-skew
     warning: closure output is inherently quadratic in a hub's
     descendant set — run it on a single hierarchical predicate's edge
@@ -898,14 +883,14 @@ def transitive_closure(
     if max_depth < 1:
         raise ValueError(f"transitive_closure: max_depth must be >= 1, got {max_depth}")
     rounds = max(1, (max_depth - 1).bit_length())  # ceil(log2(max_depth))
-    r = (
+    r, seen = checkpoint(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .withColumn("depth", F.lit(1).cast("long"))
-        .localCheckpoint(eager=True)
+        .withColumn("depth", F.lit(1).cast("long")),
+        n=F.count(F.lit(1)),
     )
-    n_pairs = r.count()
+    n_pairs = seen["n"]
     for _ in range(rounds):
         joined = (
             r.alias("l")
@@ -920,14 +905,13 @@ def transitive_closure(
                 & (F.col("depth") <= F.lit(max_depth))
             )
         )
-        new_r = (
+        r, seen = checkpoint(
             r.unionAll(joined)
             .groupBy("src", "dst")
-            .agg(F.min("depth").cast("long").alias("depth"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("depth").cast("long").alias("depth")),
+            n=F.count(F.lit(1)),
         )
-        new_n = new_r.count()
-        r = new_r
+        new_n = seen["n"]
         if new_n == n_pairs:
             # Sound early exit: every present pair always carries its
             # exact min depth (presence at round r means a path within
@@ -1060,14 +1044,12 @@ def node_features(
     and their features coalesce to 0 — a documented encoding ("no triangle
     neighborhood" / "outside the rank graph"), not a silent null.
 
-    Scale shape: the edge frame is localCheckpointed once and fanned into
+    Scale shape: the edge frame is checkpointed once and fanned into
     the three aggregations; the final assembly is two left joins on the
     node key (each side already node-unique, no fan-out). rank_e12 rides
     pagerank's integer fixed-point, so the whole table stays engine-exact.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
-    )
+    e, _ = checkpoint(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     deg = degree_stats(e)
     tri = triangle_counts(e).select(
         "node",
@@ -1239,7 +1221,7 @@ def random_walks(
     Returns (start, walk BIGINT, step BIGINT, node) in long format — one
     row per visited position including step 0.
 
-    Scale shape: the adjacency is deduped and localCheckpointed ONCE and
+    Scale shape: the adjacency is deduped and checkpointed ONCE and
     re-read every step; each step is one equi-join frontier⋈adjacency on
     the current node plus a (start, walk) struct-min aggregation
     (map-side combinable, no Window). Per-step cost is
@@ -1247,7 +1229,7 @@ def random_walks(
     out-links costs 10^6 candidate rows per walker sitting on it, so
     ``max_out_degree`` pre-prunes hub adjacency with the shared
     deterministic hash cap (functions/capping.py: expected surviving
-    width = cap, exact below it); per-step localCheckpoint keeps lineage
+    width = cap, exact below it); a per-step checkpoint keeps lineage
     O(1) in walk_length.
     """
     if walk_length < 1 or walks_per_node < 1:
@@ -1257,9 +1239,9 @@ def random_walks(
         from posextract_spark.functions.capping import cap_bucket_width
 
         adj = cap_bucket_width(adj, ["a"], "b", max_out_degree)
-    adj = adj.localCheckpoint(eager=True)
+    adj, _ = checkpoint(adj)
 
-    frontier = (
+    frontier, _ = checkpoint(
         adj.select(F.col("a").alias("start"))
         .distinct()
         .select(
@@ -1274,7 +1256,6 @@ def random_walks(
             F.lit(0).cast("long").alias("step"),
             F.col("start").alias("node"),
         )
-        .localCheckpoint(eager=True)
     )
     out = frontier
     for t in range(1, walk_length + 1):
@@ -1288,7 +1269,7 @@ def random_walks(
                 F.col("b"),
             )
         )
-        frontier = (
+        frontier, _ = checkpoint(
             frontier.join(adj, F.col("node") == F.col("a"))
             .groupBy("start", "walk")
             .agg(
@@ -1302,7 +1283,6 @@ def random_walks(
                 F.lit(t).cast("long").alias("step"),
                 F.col("m.d").alias("node"),
             )
-            .localCheckpoint(eager=True)
         )
         out = out.unionAll(frontier)
     return out
@@ -1478,22 +1458,24 @@ def shortest_paths(
     last round, not the whole visited set) joins the edge table once;
     candidate dists min-combine per node (map-side partials); one
     left join against the current dists keeps genuine improvements.
-    localCheckpoint per round bounds lineage like the CC/khop loops;
-    early-exits when no dist improves. Rounds <= max_iters, each one
-    shuffle on dst + one on node. Bellman-Ford relaxation count is
-    bounded by the longest useful path, not graph size.
+    A checkpoint per round bounds lineage like the CC/khop loops and
+    observes the improved-node count; early-exits when no dist improves.
+    Rounds <= max_iters, each one shuffle on dst + one on node.
+    Bellman-Ford relaxation count is bounded by the longest useful path,
+    not graph size.
     """
-    e = edges.select(
-        F.col(src).alias("_sp_s"),
-        F.col(dst).alias("_sp_d"),
-        F.col(weight).cast("long").alias("_sp_w"),
-    ).localCheckpoint(eager=True)
+    e, _ = checkpoint(
+        edges.select(
+            F.col(src).alias("_sp_s"),
+            F.col(dst).alias("_sp_d"),
+            F.col(weight).cast("long").alias("_sp_w"),
+        )
+    )
     seed_col = seeds.columns[0]
-    dists = (
+    dists, _ = checkpoint(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     frontier = dists
     for _ in range(max_iters):
@@ -1503,18 +1485,16 @@ def shortest_paths(
             .groupBy("node")
             .agg(F.min("_cd").alias("_cd"))
         )
-        improved = (
+        improved, seen = checkpoint(
             cand.join(dists, "node", "left")
             .filter(F.col("dist").isNull() | (F.col("_cd") < F.col("dist")))
-            .select("node", F.col("_cd").alias("dist"))
-            .localCheckpoint(eager=True)
+            .select("node", F.col("_cd").alias("dist")),
+            n=F.count(F.lit(1)),
         )
-        if not improved.head(1):
+        if seen["n"] == 0:
             break
-        dists = (
-            dists.join(improved.select("node"), "node", "anti")
-            .unionAll(improved)
-            .localCheckpoint(eager=True)
+        dists, _ = checkpoint(
+            dists.join(improved.select("node"), "node", "anti").unionAll(improved)
         )
         frontier = improved
     return dists
@@ -1594,17 +1574,16 @@ def neighborhood_function(
     with the m constants embedded as integer literals (_anf_constants).
     Expected relative error ~ 0.78/sqrt(m).
 
-    Iteration discipline: eager localCheckpoint per hop (lineage cut),
-    bounded hops, same as pagerank/kcore."""
+    Iteration discipline: a checkpoint per hop (lineage cut), bounded
+    hops, same as pagerank/kcore."""
     from posextract_spark.functions.hashing import portable_hash64
 
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .persist()
     )
-    try:
+    with cached(e):
         nodes = (
             e.select(F.col("src").alias("node"))
             .unionAll(e.select(F.col("dst").alias("node")))
@@ -1622,17 +1601,16 @@ def neighborhood_function(
         state = withj.select(
             "node", "j", rho.cast("int").alias("_rho")
         ).selectExpr("node", "j", "shiftleft(CAST(1 AS BIGINT), _rho) AS reg")
-        state = state.localCheckpoint(eager=True)
+        state, _ = checkpoint(state)
         for _ in range(n_hops):
             contrib = (
                 e.join(state.withColumnRenamed("node", "dst"), "dst")
                 .select(F.col("src").alias("node"), "j", "reg")
             )
-            state = (
+            state, _ = checkpoint(
                 state.unionByName(contrib)
                 .groupBy("node", "j")
                 .agg(F.expr("bit_or(reg)").alias("reg"))
-                .localCheckpoint(eager=True)
             )
         r_j = F.length(F.bin(F.expr("(~reg) & (reg + 1)"))) - F.lit(1)
         per_node = state.select("node", r_j.cast("long").alias("_r")).groupBy(
@@ -1645,8 +1623,6 @@ def neighborhood_function(
             * F.element_at(carr, (F.col("sum_r") % n_masks).cast("int") + 1)
         )
         return per_node.select("node", "sum_r", est.cast("long").alias("est_e6"))
-    finally:
-        e.unpersist()
 
 
 def neighborhood_function_sql(

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from posextract_spark.functions.boundary import checkpoint, materialize
 from posextract_spark.functions.hashing import (
     WORD_ARRAY_SQL,
     portable_hash64,
@@ -303,7 +304,6 @@ def _shingle_rows(frame: DataFrame, text_col: str, id_col: str) -> DataFrame:
     (docs with < SHINGLE_N words emit none). The shared shingling front
     of decontaminate / contamination_report / contaminated_token_fraction;
     word array materialized once behind the Generate boundary."""
-    from posextract_spark.functions.boundary import materialize
     from posextract_spark.operators.dedup import SHINGLE_N, _shingles
 
     g = materialize(
@@ -335,14 +335,15 @@ def _guarded_eval_shingles(eval_rows: DataFrame, limit: int | None) -> DataFrame
     """Distinct eval shingle frame, broadcast-hinted only when safe: the
     count-first guard of VERDICT r5 item 5 (see decontaminate's docstring).
     ``limit=None`` broadcasts unconditionally; otherwise the distinct set
-    is localCheckpointed once (the count and the join both read the
-    materialized blocks) and sets above ``limit`` shingles fall back to a
-    plain shuffle join — the correct plan when the 'small' side isn't."""
+    is checkpointed once, its count observed by that same job (the join
+    reads the materialized blocks), and sets above ``limit`` shingles fall
+    back to a plain shuffle join — the correct plan when the 'small' side
+    isn't."""
     ev = eval_rows.select("shingle").distinct()
     if limit is None:
         return F.broadcast(ev)
-    ev = ev.localCheckpoint(eager=True)
-    if ev.count() > limit:
+    ev, seen = checkpoint(ev, n=F.count(F.lit(1)))
+    if seen["n"] > limit:
         return ev
     return F.broadcast(ev)
 
@@ -622,25 +623,22 @@ def kg_negative_samples(
     fan-out (size it ~|vocab|/64); the argmin is a map-side-combinable
     struct-min groupBy (no Window), and the filtered-positive check is a
     broadcast-or-shuffle left_anti equi-join on (s, p, candidate). The
-    vocabulary frame is localCheckpointed once and never re-derived.
+    vocabulary frame is checkpointed once and never re-derived.
     """
     if n_negatives < 1 or n_buckets < 1:
         raise ValueError("n_negatives and n_buckets must be >= 1")
-    trip = (
+    trip, _ = checkpoint(
         triples.select(
             F.col(src).alias("src"),
             F.col(predicate).alias("predicate"),
             F.col(dst).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
-    vocab = (
+    vocab, _ = checkpoint(
         trip.select(F.col("src").alias("e"))
         .unionAll(trip.select(F.col("dst").alias("e")))
         .distinct()
         .select("e", F.pmod(portable_hash64(F.col("e")), F.lit(n_buckets)).alias("bkt"))
-        .localCheckpoint(eager=True)
     )
     req = trip.select(
         "src",
@@ -930,7 +928,7 @@ def bpe_train(
     wrapped symbol string (the \\x01sym\\x02 framing — see _bpe_wrap).
 
     Scale shape: ONE corpus-sized shuffle total (the word count, which is
-    localCheckpointed — every iteration reads the materialized blocks,
+    checkpointed — every iteration reads the materialized blocks,
     never the corpus); each iteration is then a vocabulary-bounded job
     (pair explode + alphabet^2 aggregate) plus a SINGLE collected row —
     the loop ships O(n_merges) values to the driver, same contract as the
@@ -943,8 +941,6 @@ def bpe_train(
     mirror (bpe_train_sql) unrolls fixed levels and assumes n_merges
     productive iterations, which the contract corpus satisfies.
     """
-    from posextract_spark.functions.boundary import materialize
-
     spark = docs.sparkSession
     src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     wc = (
@@ -957,7 +953,7 @@ def bpe_train(
         F.concat_ws(_BPE_R + _BPE_L, F.split(F.col("w"), "")),
         F.lit(_BPE_R),
     )
-    cur = wc.select("wn", sym0.alias("s")).localCheckpoint(eager=True)
+    cur, _ = checkpoint(wc.select("wn", sym0.alias("s")))
     merges: list[tuple[int, str, str, int]] = []
     for t in range(n_merges):
         g = materialize(cur, __bt_syms=F.split(
@@ -996,7 +992,7 @@ def bpe_train(
             ),
         )
         if (t + 1) % checkpoint_every == 0 and t + 1 < n_merges:
-            cur = cur.localCheckpoint(eager=True)
+            cur, _ = checkpoint(cur)
     return local_frame(spark, merges, "rank int, a string, b string, n long")
 
 
@@ -1391,7 +1387,6 @@ def contaminated_token_fraction(
     bounded by MATCHED occurrences x SHINGLE_N, not by the corpus; the
     interval explode is scan-side and linear in matches.
     """
-    from posextract_spark.functions.boundary import materialize
     from posextract_spark.functions.hashing import ngram_array
     from posextract_spark.operators.dedup import SHINGLE_N
 
@@ -1690,10 +1685,9 @@ def dsir_scores(
     feature space is n_buckets ~ 10^4 regardless of corpus size), two
     1-row total frames crossJoined in (broadcast), ONE broadcast join of
     the n_buckets-row score map onto the scan-side bigram stream, one
-    per-doc sum. The raw corpus text is scanned twice (count pass +
-    score pass) — persist the bigram frame in a production run to make
-    it one scan (Catalyst has no plan-level CTE reuse)."""
-    from posextract_spark.functions.boundary import materialize
+    per-doc sum. The raw bigram stream is checkpointed once, so the raw
+    corpus text is scanned once for both the count pass and the score
+    pass (Catalyst has no plan-level CTE reuse)."""
     from posextract_spark.functions.hashing import ngram_array
 
     def bigram_buckets(frame: DataFrame, with_id: bool) -> DataFrame:
@@ -1722,7 +1716,7 @@ def dsir_scores(
     # the raw corpus was scanned + tokenized + hashed twice (VERDICT r7
     # item 4). The checkpointed frame is two narrow columns (id, bucket)
     # per bigram occurrence — far smaller than re-reading the text.
-    raw_grams = bigram_buckets(raw_df, with_id=True).localCheckpoint(eager=True)
+    raw_grams, _ = checkpoint(bigram_buckets(raw_df, with_id=True))
     rc = raw_grams.groupBy("bucket").agg(F.count(F.lit(1)).cast("long").alias("cr"))
     nt = tc.agg(F.coalesce(F.sum("ct"), F.lit(0)).cast("long").alias("nt"))
     nr = rc.agg(F.coalesce(F.sum("cr"), F.lit(0)).cast("long").alias("nr"))
@@ -1814,7 +1808,7 @@ def curation_funnel_report(
     (textops.corpus_quality_filter, dedup.minhash_dedup_survivors,
     decontaminate); counts are 1-row aggregates unioned in stage order.
     The per-stage ID frames (one narrow column each) are materialized
-    with eager localCheckpoints (r8): without them each later stage's
+    with eager checkpoints (r8): without them each later stage's
     count re-derived its whole prefix — the quality filter executed 3x
     and the dedup chain 2x inside one report (Catalyst has no plan-level
     CTE reuse). This is also the production shape: the id frames are
@@ -1822,18 +1816,16 @@ def curation_funnel_report(
     from posextract_spark.operators.dedup import minhash_dedup_survivors
     from posextract_spark.operators.textops import corpus_quality_filter
 
-    kept_ids = (
+    kept_ids, _ = checkpoint(
         corpus_quality_filter(docs, text_col=text_col)
         .filter(F.col("keep") == 1)
         .select(id_col)
-        .localCheckpoint(eager=True)
     )
     kept_docs = docs.join(kept_ids, id_col)
-    surv_ids = (
+    surv_ids, _ = checkpoint(
         minhash_dedup_survivors(kept_docs, text_col=text_col, id_col=id_col)
         .filter(F.col("is_survivor") == 1)
         .select(id_col)
-        .localCheckpoint(eager=True)
     )
     clean_docs = kept_docs.join(surv_ids, id_col)
     contaminated = decontaminate(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from posextract_spark.functions.boundary import checkpoint, materialize
 from posextract_spark.functions.partitioning import spread_small_input
 from posextract_spark.sources.local import local_frame
 
@@ -722,8 +723,6 @@ def _pq_prepared(
     re-evaluated k_sub+1 times per subspace per row — ~36 array
     allocations and 32 redundant norm folds per row in interpreted HOF
     projection. As attributes they are computed once each."""
-    from posextract_spark.functions.boundary import materialize
-
     g = materialize(
         df.select(id_col, vec_col),
         __pq_e=F.transform(F.col(vec_col), lambda x: x.cast("double")),
@@ -1630,7 +1629,6 @@ def hash_embed(
     """
     if not 1 <= dim <= 60:
         raise ValueError("hash_embed: dim must be in [1, 60]")
-    from posextract_spark.functions.boundary import materialize
     from posextract_spark.functions.hashing import portable_hash64, word_array
 
     src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
@@ -1711,18 +1709,16 @@ def hash_embed_topk(
     """(id, sim_e6) — end-to-end text ANN: hash_embed the corpus, then
     brute-force cosine top-k against the embedding of document
     ``query_id`` (collected as an O(dim) literal — model-artifact-sized
-    driver traffic, same contract as the k-means centroids). The scan is
-    shared: one embedding pass feeds both the query lookup and the
-    ranking (TakeOrderedAndProject, never a full sort)."""
-    emb = hash_embed(docs, dim=dim, text_col=text_col, id_col=id_col).persist()
-    try:
-        q = emb.filter(F.col(id_col) == query_id).select("embedding").collect()
-        if not q:
-            raise ValueError(f"hash_embed_topk: query id {query_id} not found")
-        qv = [float(x) for x in q[0]["embedding"]]
-        return cosine_topk(emb, qv, k=k, id_col=id_col, vec_col="embedding")
-    finally:
-        emb.unpersist()
+    driver traffic, same contract as the k-means centroids). The query
+    lookup is its own job; the returned ranking (TakeOrderedAndProject,
+    never a full sort) embeds the corpus when the caller runs it — a
+    cache here would be released before that action could read it."""
+    emb = hash_embed(docs, dim=dim, text_col=text_col, id_col=id_col)
+    q = emb.filter(F.col(id_col) == query_id).select("embedding").collect()
+    if not q:
+        raise ValueError(f"hash_embed_topk: query id {query_id} not found")
+    qv = [float(x) for x in q[0]["embedding"]]
+    return cosine_topk(emb, qv, k=k, id_col=id_col, vec_col="embedding")
 
 
 def hash_embed_topk_sql(
@@ -1787,7 +1783,6 @@ def hash_embed_idf(
     """
     if not 1 <= dim <= 60:
         raise ValueError("hash_embed_idf: dim must be in [1, 60]")
-    from posextract_spark.functions.boundary import materialize
     from posextract_spark.functions.hashing import portable_hash64, word_array
 
     src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
@@ -1919,7 +1914,7 @@ def semdedup_survivors(
     dropped nor drops others — coverage, not correctness, degrades, as
     with minhash_band_pairs' cap. The assignment frame has three
     consumers (both pair sides + the anti-join), so it is materialized
-    once with an eager localCheckpoint.
+    once with an eager ``checkpoint``.
 
     k ceiling: the literal-centroid scan-side argmax (ivf_assign's
     shape) is practical to k ~ few hundred — beyond that the per-row
@@ -1946,13 +1941,15 @@ def semdedup_survivors(
     #   the cosine FIRST in the conjunction).
     base = _ivf_base(spread_small_input(df), id_col, vec_col)
     best = _best_centroid(_centroid_struct_array(cents))
-    g = base.select(
-        F.col(id_col),
-        (-best["ncid"]).alias("centroid_id"),
-        best["sim"].alias("centroid_sim_e6"),
-        F.col("_e"),
-        F.col("_norm"),
-    ).localCheckpoint(eager=True)
+    g, _ = checkpoint(
+        base.select(
+            F.col(id_col),
+            (-best["ncid"]).alias("centroid_id"),
+            best["sim"].alias("centroid_sim_e6"),
+            F.col("_e"),
+            F.col("_norm"),
+        )
+    )
     pair_side = g
     if max_cluster_width is not None:
         from posextract_spark.functions.capping import cap_bucket_width
@@ -2092,7 +2089,7 @@ def semdedup_against_base(
             F.col("_norm"),
         )
 
-    gn = assigned(new_df).localCheckpoint(eager=True)
+    gn, _ = checkpoint(assigned(new_df))
     gb = assigned(base_df).select(
         F.col(id_col).alias("_base_id"),
         F.col("centroid_id").alias("_b_cid"),
@@ -2214,7 +2211,7 @@ def cluster_balanced_sample(
     Scale shape: zero-shuffle trained assignment (ivf_assign), one
     k-row width aggregate broadcast back, one scan-side flag. The
     assignment frame has two consumers (widths + flag) — eager
-    localCheckpoint, same discipline as semdedup_survivors."""
+    ``checkpoint``, same discipline as semdedup_survivors."""
     from posextract_spark.functions.hashing import portable_hash64
 
     cents = (
@@ -2223,7 +2220,7 @@ def cluster_balanced_sample(
         else kmeans_centroids(df, k, n_iter, id_col, vec_col)
     )
     assign = ivf_assign(df, k=k, id_col=id_col, vec_col=vec_col, centroids=cents)
-    assign = assign.select(id_col, "centroid_id").localCheckpoint(eager=True)
+    assign, _ = checkpoint(assign.select(id_col, "centroid_id"))
     widths = assign.groupBy("centroid_id").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_width")
     )
@@ -2511,8 +2508,6 @@ def lsh_multiprobe_topk(
     selection is a Filter(bucket IN probes) that prunes partitions when
     the table is stored bucketed by `bucket`; the rerank is cosine over
     the candidate slice feeding TakeOrderedAndProject."""
-    from posextract_spark.functions.boundary import materialize
-
     with_b = materialize(
         df.select(F.col(id_col), F.col(vec_col)),
         __lmb=lsh_bucket_expr(n_planes, vec_col),

@@ -27,6 +27,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from posextract_spark.functions.boundary import checkpoint
+
 
 def with_fingerprint(pages: DataFrame, col: str = "text", out: str = "fp") -> DataFrame:
     """md5 content fingerprint — the unit of 'did this page change'.
@@ -305,7 +307,7 @@ def fact_history(
     collapsed to one row per fact per epoch) on (src, predicate) with an
     epoch inequality — per-fact work is O(epochs^2) with epochs = crawl
     count (dozens), never data-sized; the winners frame is
-    localCheckpointed so its lineage is evaluated once, not three times.
+    checkpointed so its lineage is evaluated once, not three times.
     """
     from posextract_spark.functions.selection import argmax_min_tie
 
@@ -315,7 +317,7 @@ def fact_history(
         F.col(epoch).alias("epoch"),
         F.col(dst).alias("dst"),
     ).agg(F.count(F.lit(1)).cast("long").alias("support"))
-    winners = (
+    winners, _ = checkpoint(
         counts.groupBy("src", "predicate", "epoch")
         .agg(argmax_min_tie(F.col("support"), F.col("dst")).alias("m"))
         .select(
@@ -325,7 +327,6 @@ def fact_history(
             F.col("m.v").alias("dst"),
             (-F.col("m.neg")).cast("long").alias("support"),
         )
-        .localCheckpoint(eager=True)
     )
     prev = (
         winners.alias("cur")

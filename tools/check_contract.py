@@ -5,12 +5,20 @@ Spark job group, and compares row count, column names, and an
 order-insensitive value hash against the row's oracle SQL via DuckDB. Each
 line reports the query's wall time and the Spark jobs and stages it ran.
 
-Usage: python3 tools/check_contract.py [SF_DIR] [QUERY ...]
+Jobs gate: at the SF recorded in tests/goldens/contract_jobs.json (sf0.01)
+a query FAILs when it runs more jobs than its baseline plus JOBS_JITTER
+(AQE's run-time choices move a query by one job between identical runs).
+Jobs are a perf signal without the wall-clock noise: every materialization,
+probe and AQE query stage is one. A change that adds jobs on purpose
+re-records the baseline with --write-jobs and says so.
+
+Usage: python3 tools/check_contract.py [--write-jobs] [SF_DIR] [QUERY ...]
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import sys
 import time
@@ -23,6 +31,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from tools.stress import in_job_group, warm_up  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+JOBS_BASELINE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "goldens", "contract_jobs.json"
+)
+JOBS_JITTER = 1
+
+
+def load_jobs_baseline(sf_dir: str) -> dict[str, int]:
+    """The per-query jobs baseline, or {} when it was recorded at another SF."""
+    with open(JOBS_BASELINE) as f:
+        rec = json.load(f)
+    if rec["sf"] != os.path.basename(os.path.normpath(sf_dir)):
+        return {}
+    return rec["jobs"]
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -104,7 +125,7 @@ def _streaming_batch_equivalence(spark) -> tuple[bool, str]:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def main(sf_dir: str, only: list[str]) -> int:
+def main(sf_dir: str, only: list[str], write_jobs: bool = False) -> int:
     import __spark_entry__ as entry_mod
     from posextract_spark.session import build_session
 
@@ -120,6 +141,8 @@ def main(sf_dir: str, only: list[str]) -> int:
     failures = 0
     spark_secs: dict[str, float] = {}
     n_jobs = n_stages = 0
+    baseline = {} if write_jobs else load_jobs_baseline(sf_dir)
+    measured: dict[str, int] = {}
 
     for q in entry_mod.REGISTRY:
         if only and q.name not in only:
@@ -129,6 +152,7 @@ def main(sf_dir: str, only: list[str]) -> int:
             spark, name, lambda: q.build(spark, sf_dir).toPandas()
         )
         jobs, stages = len(job_ids), len(stage_ids)
+        measured[name] = jobs
         spark_secs[name] = secs
         n_jobs += jobs
         n_stages += stages
@@ -137,16 +161,19 @@ def main(sf_dir: str, only: list[str]) -> int:
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)
         ok_hash = value_hash(sdf) == value_hash(odf) if ok_rows and ok_cols else False
         ok_dtypes, dtype_msg = dtypes_match(sdf, odf) if ok_cols else (False, "cols differ")
-        status = "OK" if (ok_rows and ok_cols and ok_hash and ok_dtypes) else "FAIL"
+        ok_jobs = name not in baseline or jobs <= baseline[name] + JOBS_JITTER
+        status = "OK" if (ok_rows and ok_cols and ok_hash and ok_dtypes and ok_jobs) else "FAIL"
         if status == "FAIL":
             failures += 1
         print(
             f"{name}: {status} rows={len(sdf)}/{len(odf)} cols_ok={ok_cols} "
             f"hash_ok={ok_hash} dtypes_ok={ok_dtypes} ({secs:.1f}s, {jobs} jobs, {stages} stages)"
         )
+        if not ok_jobs:
+            print(f"  jobs over baseline: {jobs} > {baseline[name]} + {JOBS_JITTER}")
         if not ok_dtypes and ok_cols:
             print(f"  dtype mismatch: {dtype_msg}")
-        if status == "FAIL" and ok_cols:
+        if not (ok_rows and ok_hash) and ok_cols:
             s = sdf.reindex(sorted(sdf.columns), axis=1)
             o = odf.reindex(sorted(odf.columns), axis=1)
             print("  spark sample:", s.sort_values(list(s.columns)).head(3).to_dict("records"))
@@ -175,6 +202,15 @@ def main(sf_dir: str, only: list[str]) -> int:
     entry_mod.release_caches()  # free the shared persisted triples frame
     spark.stop()
 
+    if write_jobs:
+        # a partial run (QUERY ...) re-records only the queries it ran
+        jobs = {**load_jobs_baseline(sf_dir), **measured}
+        rec = {"sf": os.path.basename(os.path.normpath(sf_dir)), "jobs": jobs}
+        with open(JOBS_BASELINE, "w") as f:
+            json.dump(rec, f, indent=1, sort_keys=True)
+            f.write("\n")
+        print(f"wrote {len(measured)} of {len(jobs)} query job counts to {JOBS_BASELINE}")
+
     # Per-query wall-time table, slowest first (Spark side only — the
     # DuckDB oracle is not the engine under test). The r3 50s-per-run
     # corpus_quality_filter plan defect was invisible in the smoke's
@@ -196,6 +232,9 @@ def main(sf_dir: str, only: list[str]) -> int:
 
 
 if __name__ == "__main__":
+    write_jobs = "--write-jobs" in sys.argv
+    if write_jobs:
+        sys.argv.remove("--write-jobs")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
-    sys.exit(1 if main(sf_dir, only) else 0)
+    sys.exit(1 if main(sf_dir, only, write_jobs) else 0)
